@@ -427,8 +427,13 @@ def score(
 
     ranks_precomputed=True skips the internal Mahalanobis Hazen pass —
     the caller already produced mahalanobis_distance_stats_score_100
-    (run_anomaly_analysis fuses it with the iforest rank into one
-    boundary scan via hazen_percentile_agg_multi)."""
+    (run_anomaly_analysis ranks it with the iforest score in one
+    hazen_percentile_agg_multi call).
+
+    Jobs: the frame with final_score_0_100 is pinned (localCheckpoint),
+    so the top-percent rank's count job and the caller's next action do
+    not both recompute the upstream ranks. final_score_0_100 lies in
+    [0, 100], so its bucket boundaries are literals and need no job."""
     df = df.withColumn(
         "rule_score_raw",
         (F.greatest(*[F.col(f"H{i}_flag") for i in range(1, 5)])
@@ -445,8 +450,12 @@ def score(
     mean_expr = sum((F.col(c) for c in components[1:]), F.col(components[0]))
     df = df.withColumn(
         "final_score_0_100", (mean_expr / len(components)).cast("float")
+    ).localCheckpoint(eager=True)
+    p = scoring.shuffle_partitions(df.sparkSession)
+    df = scoring.top_percent_rank(
+        df, "final_score_0_100", "__tp__",
+        bounds=[100.0 * i / p for i in range(1, p)],
     )
-    df = scoring.top_percent_rank(df, "final_score_0_100", "__tp__")
     df = (
         df.withColumn("final_score_top_percent", F.col("__tp__").cast("float"))
         .withColumn(
@@ -515,10 +524,24 @@ def run_anomaly_analysis(
       released by the NEXT run. On a multi-tenant cluster, swap
       localCheckpoint for a reliable checkpoint dir.
 
-    Driver actions per run: 1 edges warm-up + 1 egonet routing decision
-    (reads the warmed cache) + 1 fused stats pass + 1 covariance pass +
-    1 iforest fit sample + 1 materialization (+1 orphan count when
-    tx/blocks are given).
+    Spark jobs per call: 57 on the benchmark's ep2_graph fixture
+    (perfbench: 20k transfers among 200 accounts, local[2], 8 shuffle
+    partitions). With adaptive execution every shuffle stage of an action
+    is its own job, so the chain, in order, is:
+      4  edges cache warm-up (count)
+      6  wedge-guard estimate (graph.motif_wedge_guard)
+      4  vertex dictionary checkpoint and its count
+      30 fused threshold + z-moment collect: the stages of the
+         feature/motif plan, which fill the feature cache
+      2  Mahalanobis covariance
+      1  iforest fit sample
+      1  detector-score checkpoint; it also observes the rank boundaries
+      2  bucket counts of both detector-score ranks
+      3  checkpoint of the two Hazen ranks and final_score_0_100
+      2  bucket counts of final_score_0_100 (literal boundaries)
+      2  final checkpoint: the top-percent rank and the infra re-merge
+    The orphan count adds its own jobs when tx/blocks are given.
+    tests/test_analysis_pipeline.py pins the count on its own fixture.
     """
     # release caches a previous materialize=False run left pinned (its
     # handles are clobbered below; unpersist is safe — consumers recompute)
@@ -576,19 +599,20 @@ def run_anomaly_analysis(
         if model is not None:
             work = iforest.score_iforest(work, zcols, model)
             extra_scores = ["iforest_stats_score_100"]
-    if materialize:
-        # pin the detector-score frame (per-account, small) before the
-        # rank layers: each distributed rank fans into 3 plan branches
-        # (boundaries, bucket counts, main), and 3 chained ranks would
-        # otherwise re-execute the Mahalanobis/iforest Arrow UDF scans
-        # ~3^3 times; after this checkpoint every branch reads the
-        # materialized rows
-        work = work.localCheckpoint(eager=True)
     rank_specs = [("mahalanobis_distance",
                    "mahalanobis_distance_stats_score_100")]
     if extra_scores:
         rank_specs.append(("iforest_score", "iforest_stats_score_100"))
-    work = scoring.hazen_percentile_agg_multi(work, rank_specs)
+    bounds = None
+    if materialize:
+        # pin the detector-score frame (per-account, small) before the
+        # rank layers, so the rank count job and the ranks themselves
+        # read materialized rows instead of re-running the Mahalanobis/
+        # iforest Arrow UDF scans; the same job observes the ranks'
+        # bucket boundaries
+        work, bounds = scoring.checkpoint_with_boundaries(
+            work, [c for c, _ in rank_specs])
+    work = scoring.hazen_percentile_agg_multi(work, rank_specs, bounds=bounds)
     work = score(work, extra_scores, ranks_precomputed=True)
 
     drop = [c for c in work.columns

@@ -764,7 +764,9 @@ def _wedge_rows(pairs: DataFrame, orientation: str,
         raise ValueError(f"unknown orientation: {orientation!r}")
     row = (
         pivoted.groupBy("p").agg(F.count(F.lit(1)).alias("n"))
-        .agg(F.sum(F.col("n") * (F.col("n") - 1) / 2).alias("w"))
+        # integer arithmetic end to end: a double sum stops being exact
+        # past 2^53 wedge rows
+        .agg(F.expr("sum(n * (n - 1) div 2)").alias("w"))
         .first()
     )
     return int(row["w"] or 0)

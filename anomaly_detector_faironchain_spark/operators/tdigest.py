@@ -38,7 +38,7 @@ small-scale oracle relies on, mirroring the KLL exact-mode note in
 stats.py): while a digest holds ≤ delta centroids NO compression runs,
 every centroid is a singleton, and `tdigest_quantiles` reduces to the
 exact Hazen percentile (rank h = q·n + 0.5, linear interpolation) —
-the same definition `operators/scoring.hazen_percentile` and its
+the same definition `operators/scoring.hazen_percentile_agg` and its
 DuckDB oracle already use.
 
 Reference anchor: generalizes the reference's fixed length assertions

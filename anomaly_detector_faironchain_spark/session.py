@@ -59,9 +59,8 @@ def get_spark(
 def _silence_window_warning(spark: SparkSession) -> None:
     """Set the WindowExec logger to ERROR.
 
-    Several driver-facing plans intentionally run an unpartitioned window
-    over a frame that is <= shuffle-partitions rows by construction
-    (bucket-offset tables in the Hazen percentile, <=n-row ranking tails
+    Some driver-facing plans intentionally run an unpartitioned window
+    over a frame that is small by construction (<=n-row ranking tails
     after a TakeOrdered). Those are correct single-partition windows, but
     WindowExec logs "No Partition Defined for Window operation!" on every
     run — at scale that spam buries real warnings. partitionBy(lit(0))

@@ -583,11 +583,11 @@ piv_deg AS (
   FROM rk
 ),
 w_id AS (
-  SELECT COALESCE(CAST(SUM(n * (n - 1) / 2) AS BIGINT), 0) AS w
+  SELECT COALESCE(CAST(SUM(n * (n - 1) // 2) AS BIGINT), 0) AS w
   FROM (SELECT lo AS p, COUNT(*) AS n FROM pairs GROUP BY 1)
 ),
 w_deg AS (
-  SELECT COALESCE(CAST(SUM(n * (n - 1) / 2) AS BIGINT), 0) AS w
+  SELECT COALESCE(CAST(SUM(n * (n - 1) // 2) AS BIGINT), 0) AS w
   FROM (SELECT p, COUNT(*) AS n FROM piv_deg GROUP BY 1)
 )
 SELECT 'degree' AS orientation, w AS wedge_rows FROM w_deg

@@ -6,6 +6,9 @@ np.cov + inv Mahalanobis) on identical feature rows.
 
 from __future__ import annotations
 
+import time
+from decimal import ROUND_HALF_UP, Decimal
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -130,6 +133,20 @@ def test_scores_match_reference_formulas(result):
         pdf["final_score_0_100"].to_numpy(), final, rtol=1e-5
     )
 
+    # reference top-percent rank (scoring.py:100-104) on the emitted final
+    # scores. Spark's round() is HALF_UP on the shortest decimal form of
+    # the double, where numpy's rounds half to even, hence Decimal(repr).
+    top = (pdf["final_score_0_100"].rank(method="average", ascending=False)
+           / len(pdf) * 100.0)
+    top2 = [Decimal(repr(v)).quantize(Decimal("0.01"), ROUND_HALF_UP)
+            for v in top]
+    np.testing.assert_array_equal(
+        pdf["final_score_top_percent"].to_numpy(),
+        np.array([float(v) for v in top2], dtype=np.float32),
+    )
+    assert list(pdf["final_score_top_percent_display"]) == [
+        f"{v}%" for v in top2]
+
 
 def test_iforest_spark_scoring_matches_driver_arrays(spark):
     """The pandas-UDF scoring path must equal scoring the same rows with
@@ -230,3 +247,36 @@ def test_pipeline_caches_feature_frame_and_materializes(spark, tt):
     after = len(tracker.getJobIdsForGroup(None))
     assert after - before <= 1
     assert not pipeline._last_run_handles["work"].storageLevel.useMemory
+
+
+def _probe_job_id(sc, tag: str) -> int:
+    """Id of a one-task probe job. The scheduler hands out job ids in
+    submission order, so the jobs between two probes number the
+    difference of their ids minus one, whichever thread submitted them."""
+    sc.setJobGroup(tag, "job-count probe")
+    try:
+        sc.parallelize([0], 1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    deadline = time.monotonic() + 30
+    while not (ids := sc.statusTracker().getJobIdsForGroup(tag)):
+        assert time.monotonic() < deadline, f"probe {tag} never registered"
+        time.sleep(0.01)
+    return ids[0]
+
+
+# Spark jobs of one run_anomaly_analysis(tt) call on this fixture, so
+# EP2's job chain (listed in run_anomaly_analysis's docstring) cannot
+# silently grow back. To re-pin after an intended change, run this test
+# alone (pytest -k job_count) and set the count its failure reports.
+EP2_JOBS = 55
+
+
+def test_ep2_job_count_is_pinned(spark, tt):
+    sc = spark.sparkContext
+    tt.count()  # fill the fixture's cache first, whatever ran before
+    first = _probe_job_id(sc, "ep2-jobs-a")
+    pipeline.run_anomaly_analysis(tt)
+    jobs = _probe_job_id(sc, "ep2-jobs-b") - first - 1
+    assert jobs == EP2_JOBS, f"EP2 ran {jobs} Spark jobs, pinned {EP2_JOBS}"

@@ -116,35 +116,28 @@ def test_no_collect_based_operators_in_verdict_path(spark):
 
 def test_scoring_rank_has_no_global_sort_of_data(spark):
     # VERDICT r1 "What's wrong #1/#2": Hazen/top-percent ranking must not
-    # funnel the data through a single-reducer Window.orderBy. The only
-    # Exchange SinglePartition allowed in the scoring plan is the one over
-    # the per-range-partition count table (bounded by shuffle partitions).
+    # funnel the data through a single-reducer Window.orderBy. With literal
+    # offsets a rank is exactly ONE hash exchange on its bucket id: no
+    # single-partition offsets window and no broadcast of an offsets table.
     from anomaly_detector_faironchain_spark.operators import scoring
 
     df = spark.range(0, 10000).select(
         "id",
         ((F.col("id") * 2654435761) % 1000003 / 1000.0).alias("score"),
     )
+
+    def plan(out):
+        return df._sc._jvm.PythonSQLUtils.explainString(
+            out._jdf.queryExecution(), "simple"
+        )
+
+    one = plan(scoring.distributed_avg_rank(df, "score"))
     out = scoring.hazen_percentile_agg(df, "score", "pctl")
-    out = scoring.top_percent_rank(out, "pctl", "tp")
-    p = df._sc._jvm.PythonSQLUtils.explainString(
-        out._jdf.queryExecution(), "simple"
-    )
-    # the rank windows are partitioned by the value-derived bucket id
-    # (boundary literals collected by a separate tiny job — not in-plan)
-    assert "__pid__" in p
-    lines = p.splitlines()
-    for i, ln in enumerate(lines):
-        if "Exchange SinglePartition" in ln:
-            child = lines[i + 1]
-            # bounded inputs only: the per-bucket count table (≤ shuffle
-            # partitions rows) or the 1-row percentile_approx boundary agg
-            ok = ("Aggregate" in child
-                  and ("__pid__" in child or "percentile_approx" in child))
-            assert ok, (
-                "single-partition exchange must only sit above a bounded "
-                "aggregate:\n" + p
-            )
+    two = plan(scoring.top_percent_rank(out, "pctl", "tp"))
+    for p, ranks in ((one, 1), (two, 2)):
+        assert p.count("Exchange hashpartitioning(__pid__") == ranks, p
+        assert "Exchange SinglePartition" not in p, p
+        assert "BroadcastExchange" not in p, p
 
 
 def test_top_failing_partitions_uses_distributed_topn(spark):

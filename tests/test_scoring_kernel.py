@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from anomaly_detector_faironchain_spark.operators import scoring
@@ -61,19 +62,68 @@ def test_hazen_and_top_percent_on_continuous_scores(spark):
     np.testing.assert_allclose(t["tp"].to_numpy(), exp_tp.to_numpy(), atol=5e-3)
 
 
+def _check_both_directions(df, vals, layout=None):
+    """distributed_avg_rank (given layout, or its own) equals pandas in
+    both directions on a frame of (id, score) rows; NULL n on NULL rows."""
+    for ascending in (True, False):
+        pdf = (
+            scoring.distributed_avg_rank(
+                df, "score", ascending=ascending, layout=layout)
+            .orderBy("id").toPandas()
+        )
+        assert len(pdf) == len(vals)
+        exp = _expected(np.array(vals, dtype=float), ascending)
+        np.testing.assert_allclose(
+            pdf["__avg_rank__"].to_numpy(dtype=float), exp, rtol=0, atol=0)
+        n = float(sum(v is not None for v in vals))
+        np.testing.assert_array_equal(
+            pdf["__n__"].to_numpy(dtype=float),
+            np.where(np.isnan(exp), np.nan, n))
+
+
 def test_distributed_avg_rank_single_shuffle_partition(spark):
     # regression: p=1 used to produce an empty bounds array → NULL pid →
-    # every row dropped by the offsets join
+    # every row dropped by the offsets join; with one bucket the whole
+    # frame is one window partition
     old = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "1")
     try:
+        vals = [3.0, 1.0, 2.0, 2.0, -1.0, 3.0]
         df = spark.createDataFrame(
-            [(0, 3.0), (1, 1.0), (2, 2.0)], "id long, score double"
+            list(enumerate(vals)), "id long, score double"
         )
-        out = scoring.distributed_avg_rank(df, "score").orderBy("id").toPandas()
-        assert list(out["__avg_rank__"]) == [3.0, 1.0, 2.0]
+        assert scoring.rank_boundaries(df, ["score"]) == {"score": []}
+        _check_both_directions(df, vals)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
+
+
+@pytest.mark.parametrize("bounds", [
+    [-9.0, -8.0, 50.0, 60.0],   # empty buckets below and above the data
+    [1e9],                      # every row in the lowest bucket
+    [-1e9],                     # every row in the highest bucket
+    [1.0, 2.0, 3.0],            # values exactly on a boundary
+    [3.0, 1.0, 1.0, 2.0, 2.0],  # unsorted, duplicated boundaries
+])
+def test_literal_offset_ranks_exact_for_any_boundaries(spark, bounds):
+    # boundaries only balance the buckets: any array gives pandas ranks
+    vals = [0.0, 1.0, 1.0, 2.0, 2.5, 3.0, 3.0, 3.0, 4.0, -1.0, None, 1.0]
+    df = spark.createDataFrame(
+        list(enumerate(vals)), "id long, score double"
+    ).repartition(3)
+    layout = scoring.rank_layouts(df, {"score": bounds})["score"]
+    assert layout.n == 11 and len(layout.offsets) == len(bounds) + 1
+    _check_both_directions(df, vals, layout)
+
+
+def test_distributed_avg_rank_all_null_and_empty(spark):
+    nulls = [None, None, None]
+    df = spark.createDataFrame(list(enumerate(nulls)), "id long, score double")
+    assert scoring.rank_layouts(df, {"score": [1.0]})["score"].n == 0
+    _check_both_directions(df, nulls)
+    empty = spark.createDataFrame([], "id long, score double")
+    _check_both_directions(empty, [])
+    assert scoring.hazen_percentile_agg(empty, "score", "p").count() == 0
 
 
 def test_distributed_avg_rank_null_scores_pandas_semantics(spark):
