@@ -358,7 +358,12 @@ def completed_partitions(out_dir: str) -> set[str]:
 
 def _write_manifests(out_dir: str, spec: TableSpec, result: ValidationResult,
                      duration_s: float, input_path: str | None) -> list[dict]:
-    """One manifest JSON per partition: lineage + verdict metrics."""
+    """One manifest JSON per partition: lineage + verdict metrics.
+
+    Aggregates ``result.verdicts`` as run_with_checkpoint pinned them
+    (already partitioned on partition_id) and joins the cached profile,
+    so the counts are those of the committed rows and the suite is not
+    scanned again."""
     rows = (
         result.verdicts.groupBy("partition_id")
         .agg(
@@ -431,6 +436,20 @@ def run_with_checkpoint(
     batch semantics: a drifted schema fails ONCE, then becomes the new
     reference.
 
+    Each run is committed once. The verdict and violation frames are
+    hash-partitioned on partition_id and pinned, so each is computed by
+    its own write and lands as exactly one parquet file per
+    ``partition_id=`` directory. The manifests aggregate the pinned
+    verdicts, and the returned ValidationResult carries the pinned
+    frames: a later ``passed()`` or ``collect()`` reads exactly the
+    committed rows without re-running the suite. The pin is a
+    lineage-cutting ``localCheckpoint``, not ``persist()``: the verdict
+    plan reads ``drift_refs/``, which ``write_drift_references`` appends
+    to after the write, and that append invalidates any cached plan over
+    the directory. A persisted frame would then be recomputed against
+    this run's own histogram (PSI 0, passing) while the parquet on disk
+    says it failed.
+
     Returns None if everything was already complete (nothing scanned).
     """
     import dataclasses
@@ -439,6 +458,9 @@ def run_with_checkpoint(
     from anomaly_detector_faironchain_spark.plans.spec import Drift, SchemaMatch
 
     t0 = time.time()
+    # one id for every artifact of this run: profile rows, drift and
+    # schema references are ordered by it across runs
+    run_id = run_id or f"{int(t0):012d}"
     done = completed_partitions(out_dir)
     scoped = df
     if done and spec.partition_col:
@@ -482,30 +504,31 @@ def run_with_checkpoint(
 
     result = validate_table(scoped, spec, refs=refs, drift_refs=drift_refs,
                             **validate_kwargs)
-
-    (
-        result.verdicts.write.mode("append")
-        .partitionBy("partition_id")
-        .parquet(str(Path(out_dir) / "verdicts"))
-    )
-    (
-        result.violations.write.mode("append")
-        .partitionBy("partition_id")
-        .parquet(str(Path(out_dir) / "violations"))
-    )
+    # Pin each frame once, hash-partitioned on partition_id (one file per
+    # partition directory): the write computes it, the manifests and the
+    # caller read the committed rows back (see docstring: not persist()).
+    pins = {
+        name: getattr(result, name)
+        .repartition("partition_id")
+        .localCheckpoint(eager=False)
+        for name in ("verdicts", "violations")
+    }
+    result = dataclasses.replace(result, **pins)
+    for name, frame in pins.items():
+        (
+            frame.write.mode("append")
+            .partitionBy("partition_id")
+            .parquet(str(Path(out_dir) / name))
+        )
     (
         result.profile
-        .withColumn("run_id", F.lit(run_id or f"{int(time.time()):012d}"))
+        .withColumn("run_id", F.lit(run_id))
         .write.mode("append").parquet(str(Path(out_dir) / "profile"))
     )
     if result.drift_histograms:
-        write_drift_references(
-            result, out_dir, run_id or f"{int(time.time()):012d}", spec=spec
-        )
+        write_drift_references(result, out_dir, run_id, spec=spec)
     if track_schema:
-        write_schema_reference(
-            df, out_dir, run_id or f"{int(time.time()):012d}"
-        )
+        write_schema_reference(df, out_dir, run_id)
     _write_manifests(out_dir, spec, result, time.time() - t0, input_path)
     return result
 

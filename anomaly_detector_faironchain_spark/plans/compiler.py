@@ -70,8 +70,9 @@ class ValidationResult:
     # the persisted full violation scan shared by verdicts AND violations
     # (None when materialize_violations=False)
     row_violations: DataFrame | None = None
-    # every frame validate_table persisted (profile, row scan, FK counts/
-    # samples, drift histograms) — release with unpersist() when done
+    # every frame validate_table persisted (profile, row scan, duplicate
+    # keys, FK counts/samples, drift histograms) — release with
+    # unpersist() when done
     cached_frames: list[DataFrame] = field(default_factory=list)
     # True when validate_table's eager_warm already computed every cached
     # scan — materialize() then skips straight to the final two jobs
@@ -498,9 +499,14 @@ def validate_table(
             for w in [ex.submit(c.count) for c in cached_frames]:
                 w.result()
 
-    # Pass 2: uniqueness exact fallback.
+    # Pass 2: uniqueness exact fallback. The duplicate-key frame is
+    # persisted like every other scan output: the verdict counts and the
+    # sampled payloads then share ONE duplicate scan instead of each
+    # running its own.
     for u in spec.by_type(Unique):
         uv, dups = uniqueness.check_unique(df, spec, u, profile)
+        dups = dups.persist()
+        cached_frames.append(dups)
         verdict_parts.append(
             uv.select(
                 F.lit(spec.name).alias("table"),

@@ -62,10 +62,15 @@ def validate_stream(
         if batch_df.isEmpty():
             return
         res = validate_table(batch_df, spec, refs=refs, drift_refs=drift_refs)
-        res.verdicts.withColumn("batch_id", F.lit(batch_id)) \
-            .write.mode("append").parquet(vdir)
-        res.violations.withColumn("batch_id", F.lit(batch_id)) \
-            .write.mode("append").parquet(xdir)
+        try:
+            res.verdicts.withColumn("batch_id", F.lit(batch_id)) \
+                .write.mode("append").parquet(vdir)
+            res.violations.withColumn("batch_id", F.lit(batch_id)) \
+                .write.mode("append").parquet(xdir)
+        finally:
+            # a continuous validator runs for days: free this batch's
+            # cached scans before the next trigger
+            res.unpersist()
 
     writer = stream.writeStream.foreachBatch(process).option(
         "checkpointLocation", str(Path(out_dir) / "_stream_checkpoint")

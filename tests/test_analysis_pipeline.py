@@ -6,7 +6,6 @@ np.cov + inv Mahalanobis) on identical feature rows.
 
 from __future__ import annotations
 
-import time
 from decimal import ROUND_HALF_UP, Decimal
 
 import numpy as np
@@ -16,6 +15,7 @@ from pyspark.sql import functions as F
 
 from anomaly_detector_faironchain_spark.analysis import pipeline
 from anomaly_detector_faironchain_spark.etl import abstract, rawgen
+from conftest import probe_job_id
 
 
 @pytest.fixture(scope="module")
@@ -249,23 +249,6 @@ def test_pipeline_caches_feature_frame_and_materializes(spark, tt):
     assert not pipeline._last_run_handles["work"].storageLevel.useMemory
 
 
-def _probe_job_id(sc, tag: str) -> int:
-    """Id of a one-task probe job. The scheduler hands out job ids in
-    submission order, so the jobs between two probes number the
-    difference of their ids minus one, whichever thread submitted them."""
-    sc.setJobGroup(tag, "job-count probe")
-    try:
-        sc.parallelize([0], 1).count()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    deadline = time.monotonic() + 30
-    while not (ids := sc.statusTracker().getJobIdsForGroup(tag)):
-        assert time.monotonic() < deadline, f"probe {tag} never registered"
-        time.sleep(0.01)
-    return ids[0]
-
-
 # Spark jobs of one run_anomaly_analysis(tt) call on this fixture, so
 # EP2's job chain (listed in run_anomaly_analysis's docstring) cannot
 # silently grow back. To re-pin after an intended change, run this test
@@ -276,7 +259,7 @@ EP2_JOBS = 55
 def test_ep2_job_count_is_pinned(spark, tt):
     sc = spark.sparkContext
     tt.count()  # fill the fixture's cache first, whatever ran before
-    first = _probe_job_id(sc, "ep2-jobs-a")
+    first = probe_job_id(sc, "ep2-jobs-a")
     pipeline.run_anomaly_analysis(tt)
-    jobs = _probe_job_id(sc, "ep2-jobs-b") - first - 1
+    jobs = probe_job_id(sc, "ep2-jobs-b") - first - 1
     assert jobs == EP2_JOBS, f"EP2 ran {jobs} Spark jobs, pinned {EP2_JOBS}"

@@ -11,6 +11,7 @@ from anomaly_detector_faironchain_spark.plans.snapshots import (
     SnapshotTable,
     validate_new_snapshots,
 )
+from conftest import probe_job_id
 
 
 def _mk(spark, lo, hi, lang="en"):
@@ -136,6 +137,68 @@ def test_validate_new_snapshots_scans_only_increment(spark, tmp_path):
     assert sid == 3 and res is not None
     assert res.profile.agg(F.sum("n_rows")).collect()[0][0] == 40
     assert os.path.isdir(os.path.join(ck, "snap-000003"))
+
+
+# Spark jobs of one validate_new_snapshots call on the fixture below, so
+# the checkpoint commit (one write per pinned frame, manifests from the
+# pins) cannot silently grow back. To re-pin after an intended change,
+# run this test alone (pytest -k commit_shape) and set the count its
+# failure reports.
+SNAPSHOT_COMMIT_JOBS = 24
+
+
+def test_snapshot_commit_shape_and_job_count(spark, tmp_path):
+    from anomaly_detector_faironchain_spark.plans.spec import (
+        InSet,
+        NotNull,
+        TableSpec,
+        Unique,
+    )
+
+    t = SnapshotTable.create(str(tmp_path / "t"))
+    spec = TableSpec(
+        name="docs",
+        partition_col="lang",
+        constraints=(
+            NotNull("doc_id", "text"),
+            Unique("doc_id"),
+            InSet("lang", ("en", "de")),
+        ),
+    )
+    ck = tmp_path / "ck"
+    # three partitions; fr violates InSet, doc_ids 0-9 are duplicated
+    t.append(
+        _mk(spark, 0, 60)
+        .unionByName(_mk(spark, 0, 10, lang="de"))
+        .unionByName(_mk(spark, 60, 80, lang="fr"))
+        .repartition(4)
+    )
+    sc = spark.sparkContext
+    first = probe_job_id(sc, "snap-commit-a")
+    sid, res = validate_new_snapshots(spark, t, spec, str(ck))
+    jobs = probe_job_id(sc, "snap-commit-b") - first - 1
+    assert sid == 1 and not res.passed()
+
+    snap = ck / "snap-000001"
+    for name in ("verdicts", "violations"):
+        dirs = sorted(snap.glob(f"{name}/partition_id=*"))
+        assert dirs, name
+        for d in dirs:
+            assert len(list(d.glob("*.parquet"))) == 1, d
+
+    # the returned verdicts are the committed rows: re-reading them is
+    # one fetch job, not a re-run of the suite
+    first = probe_job_id(sc, "snap-collect-a")
+    rows = res.verdicts.collect()
+    assert probe_job_id(sc, "snap-collect-b") - first - 1 == 1
+    disk = spark.read.parquet(str(snap / "verdicts"))
+    key = lambda r: (r.partition_id, r.check_id)  # noqa: E731
+    assert sorted(map(key, rows)) == sorted(map(key, disk.collect()))
+
+    assert jobs == SNAPSHOT_COMMIT_JOBS, (
+        f"validate_new_snapshots ran {jobs} Spark jobs, "
+        f"pinned {SNAPSHOT_COMMIT_JOBS}"
+    )
 
 
 def test_profile_metric_drift_across_increments(spark, tmp_path):

@@ -51,6 +51,7 @@ def test_streaming_matches_batch(spark, tmp_path):
     docs.filter("doc_id % 2 = 0").coalesce(1).write.parquet(str(in_dir / "a"))
     docs.filter("doc_id % 2 = 1").coalesce(1).write.parquet(str(in_dir / "b"))
     out = tmp_path / "out"
+    spark.catalog.clearCache()
     validate_stream(
         spark,
         f"{in_dir}/*",
@@ -59,6 +60,8 @@ def test_streaming_matches_batch(spark, tmp_path):
         str(out),
         max_files_per_trigger=1,
     )
+    # every micro-batch released the scans it cached
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     got = spark.read.parquet(str(out / "verdicts"))
     assert got.select("batch_id").distinct().count() >= 2
     # summed violations across micro-batches == batch run on the full table
@@ -291,6 +294,8 @@ def test_drift_reference_loop_through_checkpoint(spark, tmp_path):
     shifted = spark.range(5000).selectExpr(
         "2 as batch", "cast(100 + id % 100 as double) as x"
     )
+    vdir = Path(out) / "verdicts"
+    before = set(vdir.rglob("*.parquet"))
     r2 = run_with_checkpoint(b1.unionAll(shifted), spec, out)
     v2 = {
         r.partition_id: r for r in r2.verdicts.collect()
@@ -300,7 +305,52 @@ def test_drift_reference_loop_through_checkpoint(spark, tmp_path):
     assert not v2["2"].passed  # disjoint distribution vs run-1 snapshot
     assert v2["2"].metric > 1.0
 
+    # run 2's manifests and returned verdicts agree with what it wrote,
+    # although its drift reference was appended after the write
+    new = sorted(str(f) for f in set(vdir.rglob("*.parquet")) - before)
+    disk = spark.read.option("basePath", str(vdir)).parquet(*new).collect()
+    cols = r2.verdicts.columns
+    assert sorted(tuple(r[c] for c in cols) for r in disk) == sorted(
+        tuple(r) for r in r2.verdicts.collect()
+    )
+    parts = {r.partition_id for r in disk}
+    assert parts == {"2", "__schema__"}
+    for p in parts:
+        m = json.loads((Path(out) / "_manifest" / f"{p}.json").read_text())
+        rows = [r for r in disk if r.partition_id == p]
+        assert m["n_checks"] == len(rows)
+        assert m["n_failed"] == sum(not r.passed for r in rows)
+        assert m["n_violations"] == sum(r.n_violations for r in rows)
+
     assert run_with_checkpoint(b1.unionAll(shifted), spec, out) is None
+
+
+def test_checkpoint_run_stamps_one_run_id(spark, tmp_path, monkeypatch):
+    """A run that crosses a second boundary still stamps its profile, its
+    drift reference and its schema reference with ONE id: later runs
+    are ordered against each other by it."""
+    from types import SimpleNamespace
+
+    from anomaly_detector_faironchain_spark.plans import checkpoint
+    from anomaly_detector_faironchain_spark.plans.spec import Drift, TableSpec
+
+    ticks = iter(range(1_700_000_000, 1_800_000_000))
+    monkeypatch.setattr(
+        checkpoint, "time", SimpleNamespace(time=lambda: float(next(ticks)))
+    )
+    out = tmp_path / "rid"
+    spec = TableSpec(name="t", partition_col="batch",
+                     constraints=(Drift("x", bins=10, lo=0.0, hi=100.0),))
+    b = spark.range(100).selectExpr("1 as batch", "cast(id as double) as x")
+    run_with_checkpoint(b, spec, str(out))
+
+    def ids(d):
+        return {r.run_id for r in
+                spark.read.parquet(str(out / d)).select("run_id").collect()}
+
+    schema_ids = {f.stem for f in (out / "schema_refs").glob("*.json")}
+    assert ids("profile") == ids("drift_refs") == schema_ids
+    assert len(schema_ids) == 1
 
 
 def test_drift_reference_refuses_changed_binning(spark, tmp_path):
