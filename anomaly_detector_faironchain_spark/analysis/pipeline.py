@@ -3,7 +3,9 @@ abstract token transfers → graph features → H1-H6 heuristics → z-features
 → Mahalanobis → 0-100 scores → analysis_result-shaped output.
 
 Parity map (reference file → here):
-  graph/construction + graph/feature/*        → operators/graph.py joins
+  graph/construction + graph/feature/*        → operators/graph.py
+                                                (node table + pair table
+                                                + one motif kernel)
   analysis/detectors/rule_based_*.py:30-259   → heuristic_rules()
   analysis/detectors/statistical_*.py:18-57   → preprocess_features()
   analysis/detectors/statistical_*.py:60-103  → operators/mahalanobis.py
@@ -146,162 +148,86 @@ def extract_account_features(
 ) -> DataFrame:
     """Per-account graph features from AbstractTokenTransfer — the whole
     of the reference's graph stage (EP2 steps 1-2) as joins/aggregations.
-    Caches the edgelist (reused by 4 feature extractors, like the
-    reference's precomputed adjacency, extract_egonet_features.py:37-42);
-    run_anomaly_analysis manages the cache lifecycle itself via
+    Caches the edgelist (read by the node table and the pair table, like
+    the reference's precomputed adjacency, extract_egonet_features.py:
+    37-42); run_anomaly_analysis manages the cache lifecycle itself via
     build_edges/features_from_edges."""
     edges = build_edges(tt, ts_col, min_amount, blacklist).cache()
-    edges.count()  # warm before the multi-branch join (see run_anomaly_analysis)
     return features_from_edges(edges)
 
 
 def features_from_edges(
     edges: DataFrame,
-    materialize_parts: bool = False,
-    fused: bool = True,
-    vertex_dict: bool = True,
     broadcast_dict_max: int = 5_000_000,
     wedge_budget: int | None = None,
     on_guard=None,
 ) -> DataFrame:
-    """Feature join over a (cached) aggregated edgelist.
+    """Per-account feature frame over a (cached) aggregated edgelist,
+    built on two pinned tables:
 
-    vertex_dict=True (default, fused path only): account_sid strings are
-    dictionary-encoded to int64 ids before the motif enumeration and
-    decoded on the final per-node frame. The wedge intermediate — the
-    largest frame EP2 ever shuffles — carries 3 node keys per row;
-    ~30-byte sids → 8-byte longs cuts its shuffle bytes ~3x and the
-    hash-join probes compare longs instead of strings (measured 1.39x on
-    the 2M-edge bench corpus, BENCH/fused_shj_ab_round3.json intids arm;
-    per-node outputs checksum-identical). Cost: one distinct over the
-    edge endpoints + two encode joins (broadcast while the dict is under
-    `broadcast_dict_max` rows; shuffle joins above — still a win at scale
-    because wedges strictly outnumber edges). The dict is pinned with
-    localCheckpoint BEFORE reuse: monotonically_increasing_id is
-    plan-layout-dependent, so a recomputed dict could mint different ids
-    per consumer branch — eviction must fail the job, not recompute.
+    * the node table (graph.node_table: in/out degree, transfer counts,
+      amounts, balance_proxy, has_self_loop — one groupBy over both
+      endpoint projections) doubles as the vertex dictionary: it gets an
+      int64 ``__nid__`` and is pinned with localCheckpoint. Its first
+      action is also the first read of the cached edgelist.
+      monotonically_increasing_id is plan-layout-dependent, so a
+      recomputed table could mint different ids per consumer branch —
+      eviction must fail the job, not recompute;
+    * the pair table (graph.pair_table) of the edgelist encoded to those
+      ids (two broadcast joins while the node table is under
+      `broadcast_dict_max` rows; shuffle joins above — still a win at
+      scale because wedges strictly outnumber edges), pinned. The wedge
+      intermediate — the largest frame EP2 ever shuffles — carries 3
+      node keys per row; ~30-byte sids → 8-byte longs cuts its shuffle
+      bytes ~3x and the hash-join probes compare longs instead of
+      strings (measured 1.39x on the 2M-edge bench corpus,
+      BENCH/fused_shj_ab_round3.json intids arm).
 
-    fused=True (default): mutual-pair, triangle and egonet features come
-    from graph.fused_motif_features — ONE pair aggregation + ONE wedge
-    self-join serve all three (the standalone kernels pay a reversed-key
-    self-join plus TWO wedge enumerations of the same triangles);
-    per-node outputs are pytest-identical. The dominant motif stage is
-    halved; interleaved A/B in tools/fused_ab.py.
+    The wedge guard (wedge_budget, see graph.motif_features) and the
+    motif kernel both read the pinned pair table, and the kernel's
+    per-node credits left-join the node table on its id, which already
+    carries the account sid — no decode join. When wedge_budget is set,
+    the output carries a motif_excluded int column and excluded hubs get
+    null motif features (their node features and has_self_loop are
+    kept).
 
-    wedge_budget (fused path only): the dense-graph guard — see
-    graph.fused_motif_features. When set, the output carries a
-    motif_excluded int column and excluded hubs get null motif features;
-    the standalone-extractor path (fused=False) ignores it — apply the
-    reference's manual whitelist there instead.
-
-    fused=False keeps the 4 standalone extractors (the A/B control and
-    the step-debugging form). materialize_parts=True additionally
-    localCheckpoints each extractor output (a tiny per-node table) as its
-    own sequential job before joining — useful for step-level debugging /
-    retry granularity on flaky clusters; A/B-measured equal to the fused
-    plan on the 2M-edge bench corpus (within host variance)."""
-    dic = None
-    if fused and not materialize_parts and vertex_dict:
-        nodes = edges.select(F.col("src").alias("node")).union(
-            edges.select(F.col("dst"))).distinct()
-        dic = nodes.withColumn(
-            "__nid__", F.monotonically_increasing_id()
-        ).localCheckpoint(eager=True)
-        n_nodes = dic.count()  # fetch over checkpointed blocks
-        side = (F.broadcast(dic) if n_nodes <= broadcast_dict_max else dic)
-        passthrough = [c for c in edges.columns if c not in ("src", "dst")]
-        edges = (
-            edges
-            .join(side.select(F.col("node").alias("src"),
-                              F.col("__nid__").alias("__s__")), "src")
-            .join(side.select(F.col("node").alias("dst"),
-                              F.col("__nid__").alias("__d__")), "dst")
-            .select(F.col("__s__").alias("src"),
-                    F.col("__d__").alias("dst"), *passthrough)
-        )
-    nf = graph.node_features(edges)
-    loops = graph.self_loop_flag(edges)
-    if fused and not materialize_parts:
-        motif_cols = [
-            "two_node_loop_count", "two_node_loop_amount",
-            "two_node_loop_tx_count", "triangle_loop_count",
-            "triangle_loop_amount", "triangle_loop_tx_count",
-            "egonet_density",
-        ]
-        sel = [
-            "node",
-            F.col("two_node_loop_count"), F.col("two_node_loop_amount"),
-            F.col("two_node_loop_tx").alias("two_node_loop_tx_count"),
-            F.col("triangle_count").alias("triangle_loop_count"),
-            F.col("triangle_amount").alias("triangle_loop_amount"),
-            F.col("triangle_tx").alias("triangle_loop_tx_count"),
-            F.col("ego_density").alias("egonet_density"),
-        ]
-        if wedge_budget is not None:
-            sel.append(F.col("motif_excluded"))
-        motifs = graph.fused_motif_features(
-            edges, wedge_budget=wedge_budget, on_guard=on_guard,
-        ).select(*sel)
-        out = (
-            nf.join(motifs, "node", "left")
-            .join(loops, "node", "left")
-            .na.fill(0)
-        )
-        if wedge_budget is not None:
-            # na.fill(0) above zero-filled the guard's null rows; restore
-            # the reference's NA semantics for excluded hubs
-            # (extract_motif_features.py:83-94) — their motif features
-            # were NOT computed, and 0 would be a lie
-            for c in motif_cols + ["self_loop_count"]:
-                if c in out.columns:
-                    out = out.withColumn(
-                        c, F.when(F.col("motif_excluded") == 1,
-                                  F.lit(None)).otherwise(F.col(c)))
-        if dic is not None:
-            out = (
-                out.withColumnRenamed("node", "__nid__")
-                .join(side, "__nid__")
-                .drop("__nid__")
-            )
-        return (
-            out.withColumnRenamed("node", "account_sid")
-            .withColumn(
-                "address", F.substring_index(F.col("account_sid"), "_", -1))
-        )
-    mutual = graph.mutual_pair_features(edges).withColumnRenamed(
-        "two_node_loop_tx", "two_node_loop_tx_count"
+    Spark jobs: the node table's aggregation and pin, its row count,
+    the pair table's aggregation and pin, then the guard's estimates; the
+    returned frame is lazy (the feature plan runs in the caller's first
+    action) and reads no cached edgelist."""
+    nodes = graph.node_table(edges).withColumn(
+        "__nid__", F.monotonically_increasing_id()
+    ).localCheckpoint(eager=True)
+    n_nodes = nodes.count()  # fetch over checkpointed blocks
+    side = F.broadcast(nodes) if n_nodes <= broadcast_dict_max else nodes
+    encoded = (
+        edges
+        .join(side.select(F.col("node").alias("src"),
+                          F.col("__nid__").alias("__s__")), "src")
+        .join(side.select(F.col("node").alias("dst"),
+                          F.col("__nid__").alias("__d__")), "dst")
+        .select(F.col("__s__").alias("src"), F.col("__d__").alias("dst"),
+                "amount", "cnt")
     )
-    tri = (
-        graph.triangle_features(edges)
-        .withColumnRenamed("triangle_count", "triangle_loop_count")
-        .withColumnRenamed("triangle_amount", "triangle_loop_amount")
-        .withColumnRenamed("triangle_tx", "triangle_loop_tx_count")
+    pairs = graph.pair_table(encoded).localCheckpoint(eager=True)
+    out = graph.motif_features(
+        nodes.withColumnRenamed("node", "account_sid")
+        .withColumnRenamed("__nid__", "node"),
+        pairs, wedge_budget=wedge_budget, on_guard=on_guard)
+    return out.select(
+        "in_degree", "in_transfer_count", "total_input_amount",
+        "out_degree", "out_transfer_count", "total_output_amount",
+        "balance_proxy",
+        "two_node_loop_count", "two_node_loop_amount",
+        F.col("two_node_loop_tx").alias("two_node_loop_tx_count"),
+        F.col("triangle_count").alias("triangle_loop_count"),
+        F.col("triangle_amount").alias("triangle_loop_amount"),
+        F.col("triangle_tx").alias("triangle_loop_tx_count"),
+        F.col("ego_density").alias("egonet_density"),
+        *(["motif_excluded"] if wedge_budget is not None else []),
+        "has_self_loop", "account_sid",
+        F.substring_index(F.col("account_sid"), "_", -1).alias("address"),
     )
-    # wedge m-count: 2.3-2.7x faster than the routed expansion on the
-    # bench corpora (tools/ego_ab.py, identical outputs) and needs no
-    # routing-decision job; the infra whitelist already removes the
-    # mega-hubs that would stress the id-order wedge pivot
-    ego = graph.egonet_features(edges, method="wedge").select(
-        "node", F.col("ego_density").alias("egonet_density")
-    )
-
-    if materialize_parts:
-        nf = nf.localCheckpoint(eager=True)
-        mutual = mutual.localCheckpoint(eager=True)
-        tri = tri.localCheckpoint(eager=True)
-        ego = ego.localCheckpoint(eager=True)
-        loops = loops.localCheckpoint(eager=True)
-
-    out = (
-        nf.join(mutual, "node", "left")
-        .join(tri, "node", "left")
-        .join(ego, "node", "left")
-        .join(loops, "node", "left")
-        .na.fill(0)
-        .withColumnRenamed("node", "account_sid")
-        .withColumn("address", F.substring_index(F.col("account_sid"), "_", -1))
-    )
-    return out
 
 
 def compute_thresholds(df: DataFrame, q: float = 0.99) -> dict[str, float]:
@@ -524,15 +450,18 @@ def run_anomaly_analysis(
       released by the NEXT run. On a multi-tenant cluster, swap
       localCheckpoint for a reliable checkpoint dir.
 
-    Spark jobs per call: 57 on the benchmark's ep2_graph fixture
+    Spark jobs per call: 35 on the benchmark's ep2_graph fixture
     (perfbench: 20k transfers among 200 accounts, local[2], 8 shuffle
     partitions). With adaptive execution every shuffle stage of an action
     is its own job, so the chain, in order, is:
-      4  edges cache warm-up (count)
-      6  wedge-guard estimate (graph.motif_wedge_guard)
-      4  vertex dictionary checkpoint and its count
-      30 fused threshold + z-moment collect: the stages of the
-         feature/motif plan, which fill the feature cache
+      5  node table checkpoint (features_from_edges); its aggregation is
+         the first read of the edgelist and fills the edge cache
+      2  node table row count (broadcast decision)
+      3  pair table checkpoint: id-encode broadcast, pair aggregation
+      3  wedge-guard estimate over the pinned pair table
+         (graph.motif_wedge_guard)
+      9  fused threshold + z-moment collect: the stages of the motif
+         plan over the two pinned tables, which fill the feature cache
       2  Mahalanobis covariance
       1  iforest fit sample
       1  detector-score checkpoint; it also observes the rank boundaries
@@ -556,13 +485,6 @@ def run_anomaly_analysis(
         tt, orphans = attach_block_timestamps(tt, tx, blocks)
         ts_col = "timestamp"
     edges = build_edges(tt, ts_col, min_amount, blacklist).cache()
-    # warm the edges cache with one cheap action BEFORE the fused stats
-    # job: the feature join references the edgelist from ~10 plan branches
-    # (triangles 3×, egonet 2×, mutual pairs 2×, …) and Spark's cache
-    # population is best-effort under concurrent computation — warming
-    # guarantees every branch reads memory instead of racing to populate
-    # (one extra job at the cost of the edge aggregation alone)
-    edges.count()
     feats = features_from_edges(edges, wedge_budget=wedge_budget,
                                 on_guard=on_guard)
     infra = [a.strip().lower() for a in (infra_addresses or [])]

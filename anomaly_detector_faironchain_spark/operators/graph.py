@@ -9,8 +9,13 @@ graph/construction/build_token_transfer_graph.py:26-31).
 
 Scale notes per operator:
   * edge aggregation: one hash-shuffle on (src,dst) with map-side combine;
-  * degree/amount features: two aggs + one full-outer join on node id;
-  * mutual pairs: equi-join on the reversed key — shuffle-parallel;
+  * degree/amount/self-loop features (node_table): one groupBy over the
+    src-side and dst-side projections of the edgelist;
+  * motifs (motif_features): one undirected pair table feeds the wedge
+    guard and ONE triangle enumeration; mutual pairs, triangles and
+    egonet counts leave it as credit rows summed by one groupBy;
+  * mutual pairs (standalone kernel): equi-join on the reversed key —
+    shuffle-parallel;
   * triangles: wedge join pivoted on the order-minimal vertex (half the
     wedges of a middle-vertex pivot); orientation="degree" upgrades the
     order to node-iterator-core so mega-hubs generate ~no wedges
@@ -48,39 +53,96 @@ def aggregate_edges(
     )
 
 
-def node_features(edges: DataFrame) -> DataFrame:
+def node_table(edges: DataFrame) -> DataFrame:
     """Per-vertex in/out degree, transfer counts, amounts, balance proxy
-    (reference extract_node_features.py:49-72) via two aggregations and
-    one full-outer join — no per-vertex loop."""
-    inf = edges.groupBy(F.col("dst").alias("node")).agg(
-        F.count(F.lit(1)).alias("in_degree"),
-        F.sum("cnt").alias("in_transfer_count"),
-        F.sum("amount").alias("total_input_amount"),
+    (reference extract_node_features.py:49-72) and the self-loop flag
+    (extract_motif_features.py:96-97) from ONE groupBy(node) over the
+    src-side and dst-side projections of the edgelist — every endpoint
+    of the graph gets a row, including self-loop-only and sink-only
+    nodes.
+
+    The endpoint rows are a union of the two projections, not an
+    explode of both endpoints per edge: the union's partition layout
+    (src sides, then dst sides) fixes the order in which the final
+    aggregate first meets each node, so ids minted over this table
+    (EP2's vertex dictionary) follow that order, and per-node amount
+    sums add the same partials in the same order as separate in/out
+    aggregations would."""
+    ends = edges.select(
+        F.col("src").alias("node"), F.lit(False).alias("__in__"),
+        "cnt", "amount",
+        (F.col("src") == F.col("dst")).cast("int").alias("__loop__"),
+    ).union(edges.select(
+        F.col("dst").alias("node"), F.lit(True).alias("__in__"),
+        "cnt", "amount", F.lit(0).alias("__loop__"),
+    ))
+    inb, outb = F.col("__in__"), ~F.col("__in__")
+    t = ends.groupBy("node").agg(
+        F.count(F.when(inb, 1)).alias("in_degree"),
+        F.coalesce(F.sum(F.when(inb, F.col("cnt"))), F.lit(0))
+         .alias("in_transfer_count"),
+        F.coalesce(F.sum(F.when(inb, F.col("amount"))), F.lit(0))
+         .alias("total_input_amount"),
+        F.count(F.when(outb, 1)).alias("out_degree"),
+        F.coalesce(F.sum(F.when(outb, F.col("cnt"))), F.lit(0))
+         .alias("out_transfer_count"),
+        F.coalesce(F.sum(F.when(outb, F.col("amount"))), F.lit(0))
+         .alias("total_output_amount"),
+        F.max("__loop__").alias("has_self_loop"),
     )
-    outf = edges.groupBy(F.col("src").alias("node")).agg(
-        F.count(F.lit(1)).alias("out_degree"),
-        F.sum("cnt").alias("out_transfer_count"),
-        F.sum("amount").alias("total_output_amount"),
+    return t.select(
+        "node", "in_degree", "in_transfer_count", "total_input_amount",
+        "out_degree", "out_transfer_count", "total_output_amount",
+        (F.col("total_input_amount") - F.col("total_output_amount"))
+        .alias("balance_proxy"),
+        "has_self_loop",
     )
-    return (
-        inf.join(outf, "node", "full_outer")
-        .na.fill(0)
-        .withColumn(
-            "balance_proxy",
-            F.col("total_input_amount") - F.col("total_output_amount"),
-        )
-    )
+
+
+def node_features(edges: DataFrame) -> DataFrame:
+    """(node, in/out degree, transfer counts, amounts, balance_proxy) — a
+    projection of node_table."""
+    return node_table(edges).drop("has_self_loop")
 
 
 def self_loop_flag(edges: DataFrame) -> DataFrame:
-    """(node, has_self_loop 0/1) — reference extract_motif_features.py:96-97."""
-    loops = edges.filter(F.col("src") == F.col("dst")).select(
-        F.col("src").alias("node")
-    ).distinct().withColumn("has_self_loop", F.lit(1))
-    nodes = edges.select(F.col("src").alias("node")).union(
-        edges.select(F.col("dst"))
-    ).distinct()
-    return nodes.join(loops, "node", "left").na.fill({"has_self_loop": 0})
+    """(node, has_self_loop 0/1) — a projection of node_table."""
+    return node_table(edges).select("node", "has_self_loop")
+
+
+def pair_table(edges: DataFrame) -> DataFrame:
+    """Undirected pair table of the non-self-loop edges, the one input of
+    the motif kernel and of the wedge guard:
+
+        (lo, hi, am_f, am_r, c_f, c_r)
+
+    lo < hi by key order; *_f / *_r are the amount/cnt sums of the
+    lo→hi / hi→lo directed rows. Direction-existence bits and the
+    directed multiplicity w are derived (lo→hi exists iff c_f > 0, since
+    every directed row has cnt ≥ 1; w = (c_f>0)+(c_r>0)), so the wedge
+    intermediate carries only 4 attribute columns.
+
+    Requires an AGGREGATED edgelist (≤1 row per directed (src,dst), as
+    aggregate_edges produces): per-direction sums then hold one row
+    each."""
+    e = edges.filter(F.col("src") != F.col("dst")).select(
+        "src", "dst", "amount", "cnt"
+    )
+    lo, hi = F.least("src", "dst"), F.greatest("src", "dst")
+    is_f = (F.col("src") == lo).cast("int")
+    return (
+        e.select(
+            lo.alias("lo"), hi.alias("hi"), is_f.alias("__f__"),
+            F.col("amount"), F.col("cnt"),
+        )
+        .groupBy("lo", "hi")
+        .agg(
+            F.sum(F.col("amount") * F.col("__f__")).alias("am_f"),
+            F.sum(F.col("amount") * (1 - F.col("__f__"))).alias("am_r"),
+            F.sum(F.col("cnt") * F.col("__f__")).alias("c_f"),
+            F.sum(F.col("cnt") * (1 - F.col("__f__"))).alias("c_r"),
+        )
+    )
 
 
 def mutual_pair_features(edges: DataFrame) -> DataFrame:
@@ -428,49 +490,43 @@ def egonet_features(
     )
 
 
-def _fused_motif_core(
-    edges: DataFrame,
+MOTIF_COLUMNS = (
+    "two_node_loop_count", "two_node_loop_amount", "two_node_loop_tx",
+    "triangle_count", "triangle_amount", "triangle_tx",
+    "ego_n", "ego_m", "ego_density",
+)
+
+
+def _motif_credits(
+    pairs: DataFrame,
     orientation: str = "id",
     broadcast_degrees: bool = True,
     join_strategy: str = "shj",
-    node_universe: DataFrame | None = None,
 ) -> DataFrame:
-    """Unguarded fused kernel (see fused_motif_features for the public
-    contract). node_universe overrides the output node set — the wedge
-    guard passes the ORIGINAL graph's non-excluded nodes so that a node
-    whose every edge touched an excluded hub still gets its zero-filled
-    row (ego = {v}: n=1, m=0), exactly as the reference's
-    whitelist-filtered adjacency yields zero counts for such nodes
-    (extract_motif_features.py:96-123 over filtered_out_neighbors).
+    """Per-node motif credits from a pair table (see pair_table): one
+    row per node that has a pair, columns __deg__, __inc__, __t__ and the
+    mutual-pair and triangle sums. The kernel behind motif_features.
 
-    Mutual-pair + directed-triangle + egonet features from ONE
+    Mutual-pair + directed-triangle + egonet features come from ONE
     triangle enumeration — the EP2 fusion of mutual_pair_features,
     triangle_features and egonet_features(method="wedge"), which
     separately pay one reversed-key self-join plus TWO wedge joins over
     the same edgelist. Outputs are identical per node (pytest-asserted
     against all three standalone kernels, both orientations).
 
-    Requires an AGGREGATED edgelist (≤1 row per directed (src,dst), as
-    aggregate_edges produces): pair direction flags are existence bits
-    and per-direction amount/cnt sums assume no parallel directed rows.
+    How the fusion works — everything derives from the undirected pair
+    table and its per-direction attributes:
 
-    How the fusion works — everything derives from one undirected pair
-    table carrying per-direction attributes:
-
-        pairs(lo, hi, am_f, am_r, c_f, c_r)
-        (lo < hi by id; *_f / *_r = amount/cnt sums of the lo→hi / hi→lo
-        directed rows — existence bits and the directed multiplicity w
-        are DERIVED: lo→hi exists iff c_f > 0, w = (c_f>0)+(c_r>0) —
-        so the wedge intermediate carries only 4 attribute columns)
-
-      * mutual pairs are the rows with fwd ∧ rev — a map + explode to
-        both endpoints, NO join (the standalone kernel self-joins the
-        edgelist on the reversed key);
+      * every pair emits two credit rows, one per endpoint: undirected
+        degree 1, the incident-edge term w of the egonet m-count, and —
+        when both directions exist — the mutual-pair count, amount and
+        tx (no reversed-key join: a mutual pair is a row with c_f, c_r
+        both > 0);
       * undirected triangles are enumerated once via the order-minimal
         wedge pivot (exactly _egonet_m_wedge's join shape: Σ_a C(d₊,2)
         wedge rows + one (b,c) pair-key close);
-      * each triangle {a,b,c} yields BOTH feature families in the same
-        exploded credit row: the egonet m-credit (opposite-pair w, per
+      * each triangle {a,b,c} emits one credit row per corner carrying
+        BOTH feature families: the egonet m-credit (opposite-pair w, per
         _egonet_m_wedge's decomposition) and the directed 3-cycle
         credits — a triangle contains cycle a→b→c→a iff fwd_ab ∧
         fwd_bc ∧ rev_ac and cycle a→c→b→a iff fwd_ac ∧ rev_bc ∧
@@ -481,69 +537,57 @@ def _fused_motif_core(
         directed cycle lives in one undirected triangle, and both credit
         all 3 participants.
 
-    Cost vs the separate kernels on the same cached edgelist: one
-    groupBy(lo,hi) (same shuffle the egonet wedge already paid), ONE
-    wedge self-join + pair close (was two), one explode+groupBy (was
-    three), the reversed-key mutual join gone. The dominant wedge stage
-    is literally halved; see tools/fused_ab.py for the interleaved A/B.
+    Pair and triangle credit rows are unioned and summed by ONE
+    groupBy(v); a credit a row does not carry is null, which a sum
+    skips. Then ego_n = 1 + deg and ego_m = inc + t.
+
+    Cost over a pinned pair table: ONE wedge self-join + pair close
+    (the separate kernels pay two), one groupBy(v) for all nine
+    per-node sums (the separate kernels pay a mutual, a triangle, an
+    egonet and a degree aggregation and join them), and no
+    reversed-key mutual join. On the benchmark's ep2_graph fixture the
+    feature plan has 6 hash exchanges: the two wedge legs, the wedge
+    rows and the closing pairs, the credits, and the node table it
+    joins to.
 
     orientation: total order for the wedge pivot, as in
     triangle_features — "id" (zero prep) or "degree"
     (node-iterator-core, O(m^1.5) wedge bound under mega-hub skew).
-
-    Returns per-node: two_node_loop_count/amount/tx, triangle_count/
-    amount/tx, ego_n, ego_m, ego_density — absent motifs filled with 0
-    (standalone kernels omit such nodes and EP2 fills 0 after its left
-    joins; here the fill happens once, against the complete node set).
     """
-    e = edges.filter(F.col("src") != F.col("dst")).select(
-        "src", "dst", "amount", "cnt"
-    )
-    lo, hi = F.least("src", "dst"), F.greatest("src", "dst")
-    is_f = (F.col("src") == lo).cast("int")
-    # 4 attribute columns per pair is all three consumers need — the
-    # direction-existence bits and the multiplicity w are DERIVED
-    # (edge lo→hi exists iff c_f > 0: every directed row has cnt ≥ 1),
-    # keeping the wedge intermediate, the dominant cost, as slim as the
-    # egonet-only kernel's plus the amount/cnt payload
-    pairs = (
-        e.select(
-            lo.alias("lo"), hi.alias("hi"), is_f.alias("__f__"),
-            F.col("amount"), F.col("cnt"),
-        )
-        .groupBy("lo", "hi")
-        .agg(
-            F.sum(F.col("amount") * F.col("__f__")).alias("am_f"),
-            F.sum(F.col("amount") * (1 - F.col("__f__"))).alias("am_r"),
-            F.sum(F.col("cnt") * F.col("__f__")).alias("c_f"),
-            F.sum(F.col("cnt") * (1 - F.col("__f__"))).alias("c_r"),
-        )
-    )
+    def _w(tag: str = ""):
+        sfx = f"_{tag}" if tag else ""
+        return ((F.col(f"c_f{sfx}") > 0).cast("long")
+                + (F.col(f"c_r{sfx}") > 0).cast("long"))
 
-    def _w(tag: str):
-        return ((F.col(f"c_f_{tag}") > 0).cast("long")
-                + (F.col(f"c_r_{tag}") > 0).cast("long"))
+    am_type = pairs.schema["am_f"].dataType
+    credit_cols = [
+        ("deg", "long"), ("inc", "long"), ("t", "long"),
+        ("mut_n", "long"), ("mut_am", am_type), ("mut_tx", "long"),
+        ("tri_n", "long"), ("tri_am", am_type), ("tri_tx", "long"),
+    ]
 
-    # ---- mutual pairs: a filter over the pair table, no join ----------
-    mut = pairs.filter((F.col("c_f") > 0) & (F.col("c_r") > 0)).select(
-        F.explode(F.array("lo", "hi")).alias("node"),
-        (F.col("am_f") + F.col("am_r")).alias("__ma__"),
-        (F.col("c_f") + F.col("c_r")).alias("__mc__"),
-    ).groupBy("node").agg(
-        F.count(F.lit(1)).alias("two_node_loop_count"),
-        F.sum("__ma__").alias("two_node_loop_amount"),
-        F.sum("__mc__").alias("two_node_loop_tx"),
+    def _credit(v, **vals):
+        return F.struct(F.col(v).alias("v"), *[
+            (vals[c] if c in vals else F.lit(None)).cast(t).alias(c)
+            for c, t in credit_cols])
+
+    # ---- pair credits: degree, incident edges, mutual pairs -----------
+    mutual = (F.col("c_f") > 0) & (F.col("c_r") > 0)
+    pair_vals = dict(
+        deg=F.lit(1), inc=_w(),
+        mut_n=F.when(mutual, 1),
+        mut_am=F.when(mutual, F.col("am_f") + F.col("am_r")),
+        mut_tx=F.when(mutual, F.col("c_f") + F.col("c_r")),
     )
+    pair_credits = pairs.select(F.explode(F.array(
+        _credit("lo", **pair_vals), _credit("hi", **pair_vals),
+    )).alias("s")).select("s.*")
 
     # ---- orient the pivot (same machinery as _egonet_m_wedge); pair
     # attributes stay id-canonical regardless of the pivot order --------
     attrs = ["am_f", "am_r", "c_f", "c_r"]
     if orientation == "degree":
-        deg = (
-            pairs.select(F.col("lo").alias("v"))
-            .unionAll(pairs.select(F.col("hi")))
-            .groupBy("v").agg(F.count(F.lit(1)).alias("__deg__"))
-        )
+        deg = _pair_degrees(pairs)
         if broadcast_degrees:
             deg = F.broadcast(deg)
         ranked = (
@@ -644,46 +688,43 @@ def _fused_motif_core(
         (cyc1 * am1 + cyc2 * am2).alias("tri_am"),
         (cyc1 * tx1 + cyc2 * tx2).alias("tri_tx"),
     )
-    credits = tri.select(F.explode(F.array(
-        F.struct(F.col("a").alias("v"), F.col("w_bc").alias("t"),
-                 F.col("tri_n"), F.col("tri_am"), F.col("tri_tx")),
-        F.struct(F.col("b").alias("v"), F.col("w_ac").alias("t"),
-                 F.col("tri_n"), F.col("tri_am"), F.col("tri_tx")),
-        F.struct(F.col("c").alias("v"), F.col("w_ab").alias("t"),
-                 F.col("tri_n"), F.col("tri_am"), F.col("tri_tx")),
+    tri_vals = {c: F.col(c) for c in ("tri_n", "tri_am", "tri_tx")}
+    tri_credits = tri.select(F.explode(F.array(
+        _credit("a", t=F.col("w_bc"), **tri_vals),
+        _credit("b", t=F.col("w_ac"), **tri_vals),
+        _credit("c", t=F.col("w_ab"), **tri_vals),
     )).alias("s")).select("s.*")
-    tri_ego = credits.groupBy("v").agg(
+    return pair_credits.unionAll(tri_credits).groupBy("v").agg(
+        F.sum("deg").alias("__deg__"),
+        F.sum("inc").alias("__inc__"),
         F.sum("t").alias("__t__"),
+        F.sum("mut_n").alias("two_node_loop_count"),
+        F.sum("mut_am").alias("two_node_loop_amount"),
+        F.sum("mut_tx").alias("two_node_loop_tx"),
         F.sum("tri_n").alias("triangle_count"),
         F.sum("tri_am").alias("triangle_amount"),
         F.sum("tri_tx").alias("triangle_tx"),
     )
 
-    # ---- egonet n (1 + undirected degree) and incident-edge term ------
-    nodes = node_universe if node_universe is not None else (
-        edges.select(F.col("src").alias("node")).union(
-            edges.select(F.col("dst"))
-        ).distinct()
-    )
-    deg_u = (
-        pairs.select(F.explode(F.array("lo", "hi")).alias("node"))
-        .groupBy("node").agg(F.count(F.lit(1)).alias("__deg__"))
-    )
-    inc = (
-        e.select(F.col("src").alias("node")).unionAll(e.select(F.col("dst")))
-        .groupBy("node").agg(F.count(F.lit(1)).alias("__inc__"))
-    )
 
+def _motif_core(
+    nodes: DataFrame, pairs: DataFrame, orientation: str,
+    broadcast_degrees: bool, join_strategy: str,
+) -> DataFrame:
+    """nodes' columns + MOTIF_COLUMNS: the node table left-joined to the
+    credits on ``node``; a node with no pair (self-loop-only, or isolated
+    by hub exclusion) gets zero motifs and ego = {v} (n=1, m=0), as the
+    reference's filtered adjacency yields (extract_motif_features.py:
+    96-123)."""
+    credits = _motif_credits(pairs, orientation, broadcast_degrees,
+                             join_strategy)
     n_col = F.coalesce(F.col("__deg__"), F.lit(0)) + 1
     m_col = (F.coalesce(F.col("__inc__"), F.lit(0))
              + F.coalesce(F.col("__t__"), F.lit(0)))
     return (
-        nodes.join(deg_u, "node", "left")
-        .join(inc, "node", "left")
-        .join(tri_ego, tri_ego["v"] == F.col("node"), "left").drop("v")
-        .join(mut, "node", "left")
+        nodes.join(credits, nodes["node"] == credits["v"], "left")
         .select(
-            "node",
+            *[nodes[c] for c in nodes.columns],
             F.coalesce("two_node_loop_count", F.lit(0)).cast("long")
              .alias("two_node_loop_count"),
             F.coalesce("two_node_loop_amount", F.lit(0))
@@ -723,13 +764,6 @@ def _fused_motif_core(
 # ---------------------------------------------------------------------------
 
 
-def _undirected_pairs(edges: DataFrame) -> DataFrame:
-    e = edges.filter(F.col("src") != F.col("dst"))
-    return e.select(
-        F.least("src", "dst").alias("lo"), F.greatest("src", "dst").alias("hi")
-    ).distinct()
-
-
 def _pair_degrees(pairs: DataFrame) -> DataFrame:
     return (
         pairs.select(F.explode(F.array("lo", "hi")).alias("v"))
@@ -740,7 +774,7 @@ def _pair_degrees(pairs: DataFrame) -> DataFrame:
 def _wedge_rows(pairs: DataFrame, orientation: str,
                 broadcast_degrees: bool = True) -> int:
     """Exact wedge-intermediate row count Σ_pivot C(d₊(pivot), 2) the
-    fused kernel's wedge self-join would shuffle over this pair graph
+    motif kernel's wedge self-join would shuffle over this pair graph
     under the given orientation — computed from ONE aggregation over the
     node-sized pivot-degree table, no wedge row ever exists."""
     if orientation == "degree":
@@ -776,11 +810,10 @@ def estimate_wedges(edges: DataFrame, orientation: str = "id",
                     broadcast_degrees: bool = True) -> int:
     """Exact row count of the wedge intermediate fused_motif_features /
     _egonet_m_wedge would shuffle for this edgelist under the given
-    orientation. Cost: one distinct over the pairs + one node-sized
+    orientation. Cost: the pair aggregation + one node-sized
     aggregation — run it before pointing the motif kernels at an unknown
     graph (or pass wedge_budget and let the guard do it for you)."""
-    return _wedge_rows(_undirected_pairs(edges), orientation,
-                       broadcast_degrees)
+    return _wedge_rows(pair_table(edges), orientation, broadcast_degrees)
 
 
 def _hub_threshold(hist: list[tuple[int, int]], k: int) -> tuple[int, float]:
@@ -798,11 +831,42 @@ def _hub_threshold(hist: list[tuple[int, int]], k: int) -> tuple[int, float]:
     return 0, 1.0  # k >= n_nodes: exclude everything with an edge
 
 
+def _min_exclusion(n_nodes: int, fits: Callable[[int], bool]) -> int:
+    """Smallest hub count k for which ``fits(k)`` holds, to within the
+    bisection tolerance; the caller has shown that k = 0 (no exclusion)
+    does not fit.
+
+    Doubling from max(16, n_nodes/1024) finds a fitting k; it overshoots,
+    since wedge volume falls as roughly (kept fraction)^3, so the final
+    doubling can throw away far more data than the budget requires
+    (measured on the dense audit fixture: k=9728 was over budget,
+    k=19456 left only 545 of 20k nodes). Bisection then searches between
+    the last k shown over budget — 0 when the first probe already fit —
+    and the fitting k. ≤ log2(n_nodes) doubling probes, ≤ log2(k)
+    bisection probes. Returns a k ≥ n_nodes without a fit only when
+    excluding every node still does not fit."""
+    over, k = 0, max(16, n_nodes // 1024)
+    while not fits(k):
+        if k >= n_nodes:
+            return k
+        over, k = k, k * 2
+    while k - over > max(16, k // 64):
+        mid = (over + k) // 2
+        if fits(mid):
+            k = mid
+        else:
+            over = mid
+    return k
+
+
 def motif_wedge_guard(
-    edges: DataFrame, wedge_budget: int, orientation: str = "id",
+    pairs: DataFrame, wedge_budget: int, orientation: str = "id",
     broadcast_degrees: bool = True,
 ) -> tuple[str, DataFrame | None, dict]:
     """Decide how to keep the wedge shuffle within ``wedge_budget`` rows.
+
+    ``pairs`` is the pair table (pair_table) the motif kernel will read;
+    pin it first: every estimate reads it.
 
     Escalation ladder (stop at the first rung that fits):
       1. the requested orientation as-is;
@@ -810,57 +874,55 @@ def motif_wedge_guard(
          ~all its neighbors and generates ~no wedges — free protection
          for power-law graphs, no data loss);
       3. hub exclusion: drop the top-k nodes by (pair-degree, id-hash)
-         rank, doubling k until the re-estimated volume fits. Excluded
-         hubs are the reference's whitelist semantics — removed from the
-         enumeration, reported as null feature rows
-         (extract_motif_features.py:83-94).
+         rank, for the smallest k whose re-estimated volume fits
+         (_min_exclusion). Excluded hubs are the reference's whitelist
+         semantics — removed from the enumeration, reported as null
+         feature rows (extract_motif_features.py:83-94).
 
     Returns (orientation_used, excluded_nodes | None, report). The
-    excluded frame (single ``node`` column) is localCheckpoint'ed — it
-    is a report artifact consumed by several downstream joins, bounded
-    by the node count, and pinning it keeps the guard's decision
-    immutable for the run. The report dict carries every estimate the
-    guard made (``steps``), the budget, and the exclusion census.
+    excluded frame (single ``node`` column, in the pair table's key) is
+    localCheckpoint'ed — it is a report artifact consumed by several
+    downstream joins, bounded by the node count, and pinning it keeps
+    the guard's decision immutable for the run. The report dict carries
+    every estimate the guard made (``steps``), the budget, and the
+    exclusion census.
 
     Scale shape: each estimate is one aggregation over the node-sized
-    degree table; the doubling loop is ≤ log2(n_nodes) estimates; the
+    degree table; the search makes ≤ 2·log2(n_nodes) estimates; the
     degree histogram collected to the driver is distinct-degree-sized
     (≪ nodes). No wedge row is ever materialized while deciding.
     """
     if wedge_budget <= 0:
         raise ValueError(f"wedge_budget must be positive, got {wedge_budget}")
-    pairs = _undirected_pairs(edges).persist()
-    deg = None
-    try:
-        report: dict = {
-            "wedge_budget": int(wedge_budget),
-            "requested_orientation": orientation,
-            "steps": [],
-        }
-        est = _wedge_rows(pairs, orientation, broadcast_degrees)
+    report: dict = {
+        "wedge_budget": int(wedge_budget),
+        "requested_orientation": orientation,
+        "steps": [],
+    }
+    est = _wedge_rows(pairs, orientation, broadcast_degrees)
+    report["steps"].append(
+        {"orientation": orientation, "n_excluded_target": 0,
+         "wedge_rows": est})
+    if est <= wedge_budget:
+        report.update(orientation=orientation, n_excluded=0, wedge_rows=est)
+        return orientation, None, report
+    if orientation != "degree":
+        est = _wedge_rows(pairs, "degree", broadcast_degrees)
         report["steps"].append(
-            {"orientation": orientation, "n_excluded_target": 0,
+            {"orientation": "degree", "n_excluded_target": 0,
              "wedge_rows": est})
         if est <= wedge_budget:
-            report.update(orientation=orientation, n_excluded=0,
+            report.update(orientation="degree", n_excluded=0,
                           wedge_rows=est)
-            return orientation, None, report
-        if orientation != "degree":
-            est = _wedge_rows(pairs, "degree", broadcast_degrees)
-            report["steps"].append(
-                {"orientation": "degree", "n_excluded_target": 0,
-                 "wedge_rows": est})
-            if est <= wedge_budget:
-                report.update(orientation="degree", n_excluded=0,
-                              wedge_rows=est)
-                return "degree", None, report
-        deg = _pair_degrees(pairs).persist()
+            return "degree", None, report
+    deg = _pair_degrees(pairs).persist()
+    try:
         hist = [(r["__deg__"], r["n"]) for r in
                 deg.groupBy("__deg__").agg(F.count(F.lit(1)).alias("n"))
                 .collect()]
-        n_nodes = sum(c for _, c in hist)
+        probes: dict[int, tuple] = {}
 
-        def try_k(k: int):
+        def fits(k: int) -> bool:
             tau, frac = _hub_threshold(hist, k)
             pred = (F.col("__deg__") > tau) | (
                 (F.col("__deg__") == tau)
@@ -868,49 +930,108 @@ def motif_wedge_guard(
                    < int(frac * 1_000_000))
             )
             excl = deg.filter(pred).select(F.col("v").alias("node"))
-            p_f = (
+            kept = (
                 pairs.join(excl.withColumnRenamed("node", "lo"),
                            "lo", "left_anti")
                 .join(excl.withColumnRenamed("node", "hi"),
                       "hi", "left_anti")
             )
-            est = _wedge_rows(p_f, "degree", broadcast_degrees)
+            est = _wedge_rows(kept, "degree", broadcast_degrees)
             report["steps"].append(
                 {"orientation": "degree", "n_excluded_target": k,
                  "min_excluded_degree": tau, "wedge_rows": est})
-            return excl, est, tau
+            probes[k] = (excl, est, tau)
+            return est <= wedge_budget
 
-        k = max(16, n_nodes // 1024)
-        while True:
-            excl, est, tau = try_k(k)
-            if est <= wedge_budget or k >= n_nodes:
-                break
-            k *= 2
-        # The doubling probe overshoots — wedge volume falls as roughly
-        # (kept fraction)^3, so the final doubling can throw away far
-        # more data than the budget requires (measured on the dense
-        # audit fixture: k=9728 was over budget, k=19456 left only 545
-        # of 20k nodes). Bisect between the last over-budget k and the
-        # fitting k for the SMALLEST exclusion that fits: each probe is
-        # one node-sized aggregation, and the loop is <= log2(k) probes.
-        lo_k, hi_k = k // 2, k
-        if lo_k >= 16 and hi_k < n_nodes * 2:
-            while hi_k - lo_k > max(16, hi_k // 64):
-                mid = (lo_k + hi_k) // 2
-                m_excl, m_est, m_tau = try_k(mid)
-                if m_est <= wedge_budget:
-                    hi_k, excl, est, tau = mid, m_excl, m_est, m_tau
-                else:
-                    lo_k = mid
+        excl, est, tau = probes[_min_exclusion(sum(c for _, c in hist),
+                                               fits)]
         excl = excl.localCheckpoint(eager=True)
         n_excl = excl.count()
-        report.update(orientation="degree", n_excluded=n_excl,
-                      min_excluded_degree=tau, wedge_rows=est)
-        return "degree", excl, report
     finally:
-        pairs.unpersist()
-        if deg is not None:
-            deg.unpersist()
+        deg.unpersist()
+    report.update(orientation="degree", n_excluded=n_excl,
+                  min_excluded_degree=tau, wedge_rows=est)
+    return "degree", excl, report
+
+
+def motif_features(
+    nodes: DataFrame,
+    pairs: DataFrame,
+    orientation: str = "id",
+    broadcast_degrees: bool = True,
+    join_strategy: str = "shj",
+    wedge_budget: int | None = None,
+    on_guard: Callable[[dict], None] | None = None,
+) -> DataFrame:
+    """``nodes``' columns + MOTIF_COLUMNS, one row per row of ``nodes``:
+    the motif kernel (_motif_credits) over ``pairs`` (pair_table of the
+    same graph, keyed like ``nodes.node``), left-joined to the node
+    table. EP2 passes its pinned node table and pinned id-keyed pair
+    table; fused_motif_features builds both from an edgelist.
+
+    wedge_budget=None: the kernel runs as requested, no guard and no
+    motif_excluded column.
+
+    wedge_budget=<rows>: the dense-graph guard (motif_wedge_guard) reads
+    ``pairs`` first and bounds the wedge shuffle: it may upgrade the
+    orientation to "degree", and on a graph whose wedge volume STILL
+    exceeds the budget it excludes the highest-degree hubs from the
+    enumeration — exactly the reference's whitelist mitigation
+    (extract_motif_features.py:32-44), applied automatically and
+    REPORTED instead of curated by hand. The output then carries one
+    extra column ``motif_excluded`` (int 0/1): excluded hubs get null
+    motif columns (the reference's NA semantics, :83-94) with
+    motif_excluded=1; every other node is computed over the hub-filtered
+    pairs (its features therefore exclude motifs through the hubs — as
+    the reference's filtered-adjacency counts do) with motif_excluded=0.
+    The guard's decision (estimates, orientation, exclusion census) is
+    logged at WARNING when hubs were dropped and passed to ``on_guard``
+    when given. Budget ≈ rows the wedge stage may shuffle: at the
+    kernel's ~50-100 compressed bytes/row, 5e8 rows ≈ 25-50 GB of
+    shuffle disk.
+    """
+    if wedge_budget is None:
+        return _motif_core(nodes, pairs, orientation, broadcast_degrees,
+                           join_strategy)
+    orientation_used, excl, report = motif_wedge_guard(
+        pairs, wedge_budget, orientation, broadcast_degrees)
+    if on_guard is not None:
+        on_guard(report)
+    if excl is None:
+        if orientation_used != orientation:
+            log.info(
+                "motif wedge guard: orientation %s -> degree (%d wedge "
+                "rows fits budget %d)", orientation,
+                report["wedge_rows"], wedge_budget)
+        return _motif_core(
+            nodes, pairs, orientation_used, broadcast_degrees, join_strategy,
+        ).withColumn("motif_excluded", F.lit(0))
+    log.warning(
+        "motif wedge guard: excluded %d hub node(s) (min pair-degree %d) "
+        "to fit the wedge shuffle within %d rows (estimate was %d after "
+        "exclusion; see the on_guard report for the full ladder). "
+        "Excluded hubs are emitted as null feature rows with "
+        "motif_excluded=1 — the reference's whitelist semantics.",
+        report["n_excluded"], report["min_excluded_degree"],
+        wedge_budget, report["wedge_rows"])
+    kept = (
+        pairs.join(excl.withColumnRenamed("node", "lo"), "lo", "left_anti")
+        .join(excl.withColumnRenamed("node", "hi"), "hi", "left_anti")
+    )
+    out = _motif_core(nodes, kept, orientation_used, broadcast_degrees,
+                      join_strategy)
+    flag = F.broadcast(excl.select(F.col("node").alias("__x__"),
+                                   F.lit(1).alias("motif_excluded")))
+    out = (
+        out.join(flag, out["node"] == flag["__x__"], "left").drop("__x__")
+        .withColumn("motif_excluded",
+                    F.coalesce(F.col("motif_excluded"), F.lit(0)))
+    )
+    return out.select(*[
+        F.when(F.col("motif_excluded") == 1, F.lit(None))
+        .otherwise(F.col(c)).alias(c) if c in MOTIF_COLUMNS else c
+        for c in out.columns
+    ])
 
 
 def fused_motif_features(
@@ -922,74 +1043,19 @@ def fused_motif_features(
     on_guard: Callable[[dict], None] | None = None,
 ) -> DataFrame:
     """Mutual-pair + directed-triangle + egonet features from ONE
-    triangle enumeration — see _fused_motif_core for the kernel and the
-    full fusion derivation; outputs per node: two_node_loop_count/
-    amount/tx, triangle_count/amount/tx, ego_n, ego_m, ego_density.
-
-    wedge_budget=None (default): the kernel runs as requested, byte-for-
-    byte the pre-guard behavior and schema.
-
-    wedge_budget=<rows>: the dense-graph guard (motif_wedge_guard) first
-    bounds the wedge shuffle: it may silently upgrade the orientation to
-    "degree", and on a graph whose wedge volume STILL exceeds the budget
-    it excludes the highest-degree hubs from the enumeration — exactly
-    the reference's whitelist mitigation (extract_motif_features.py:
-    32-44), applied automatically and REPORTED instead of curated by
-    hand. The output then carries one extra column ``motif_excluded``
-    (int 0/1): excluded hubs are emitted as null feature rows (the
-    reference's NA semantics, :83-94) with motif_excluded=1; every other
-    node is computed over the hub-filtered graph (its features therefore
-    exclude motifs through the hubs — as the reference's
-    filtered-adjacency counts do) with motif_excluded=0. The guard's
-    decision (estimates, orientation, exclusion census) is logged at
-    WARNING when hubs were dropped and passed to ``on_guard`` when
-    given. Budget ≈ rows the wedge stage may shuffle: at the kernel's
-    ~50-100 compressed bytes/row, 5e8 rows ≈ 25-50 GB of shuffle disk.
-    """
-    if wedge_budget is None:
-        return _fused_motif_core(edges, orientation, broadcast_degrees,
-                                 join_strategy)
-    orientation_used, excl, report = motif_wedge_guard(
-        edges, wedge_budget, orientation, broadcast_degrees)
-    if on_guard is not None:
-        on_guard(report)
-    if excl is None:
-        if orientation_used != orientation:
-            log.info(
-                "motif wedge guard: orientation %s -> degree (%d wedge "
-                "rows fits budget %d)", orientation,
-                report["wedge_rows"], wedge_budget)
-        return _fused_motif_core(
-            edges, orientation_used, broadcast_degrees, join_strategy
-        ).withColumn("motif_excluded", F.lit(0))
-    log.warning(
-        "motif wedge guard: excluded %d hub node(s) (min pair-degree %d) "
-        "to fit the wedge shuffle within %d rows (estimate was %d after "
-        "exclusion; see the on_guard report for the full ladder). "
-        "Excluded hubs are emitted as null feature rows with "
-        "motif_excluded=1 — the reference's whitelist semantics.",
-        report["n_excluded"], report["min_excluded_degree"],
-        wedge_budget, report["wedge_rows"])
-    kept_edges = (
-        edges.join(excl.withColumnRenamed("node", "src"), "src", "left_anti")
-        .join(excl.withColumnRenamed("node", "dst"), "dst", "left_anti")
-    )
-    all_nodes = edges.select(F.col("src").alias("node")).union(
-        edges.select(F.col("dst"))
-    ).distinct()
-    kept_universe = all_nodes.join(excl, "node", "left_anti")
-    core = _fused_motif_core(
-        kept_edges, orientation_used, broadcast_degrees, join_strategy,
-        node_universe=kept_universe,
-    ).withColumn("motif_excluded", F.lit(0))
-    null_rows = all_nodes.join(excl, "node", "left_semi").select(
-        "node",
-        *[F.lit(None).cast(f.dataType).alias(f.name)
-          for f in core.schema.fields
-          if f.name not in ("node", "motif_excluded")],
-        F.lit(1).alias("motif_excluded"),
-    )
-    return core.unionByName(null_rows)
+    triangle enumeration over an aggregated edgelist: motif_features
+    over node_table(edges) and pair_table(edges) — the kernel EP2 runs.
+    Outputs per node: two_node_loop_count/amount/tx, triangle_count/
+    amount/tx, ego_n, ego_m, ego_density, plus ``motif_excluded`` when
+    ``wedge_budget`` is set (see motif_features for the guard). With a
+    guard, the pair table is pinned first: every guard estimate and the
+    kernel read it."""
+    pairs = pair_table(edges)
+    if wedge_budget is not None:
+        pairs = pairs.localCheckpoint(eager=True)
+    return motif_features(
+        node_table(edges).select("node"), pairs, orientation,
+        broadcast_degrees, join_strategy, wedge_budget, on_guard)
 
 
 def connected_components(

@@ -249,11 +249,28 @@ def test_pipeline_caches_feature_frame_and_materializes(spark, tt):
     assert not pipeline._last_run_handles["work"].storageLevel.useMemory
 
 
+def test_feature_frame_reads_pinned_tables_only(spark, tt):
+    """features_from_edges returns a plan over its two pinned tables: no
+    cached-edgelist scan, and at most 6 hash exchanges (the two wedge
+    legs, the wedge rows and the closing pairs, the credits, and the
+    node table they join to)."""
+    edges = pipeline.build_edges(tt).cache()
+    try:
+        feats = pipeline.features_from_edges(
+            edges, wedge_budget=pipeline.DEFAULT_WEDGE_BUDGET)
+        plan = feats._sc._jvm.PythonSQLUtils.explainString(
+            feats._jdf.queryExecution(), "simple")
+        assert "InMemoryTableScan" not in plan
+        assert 0 < plan.count("Exchange hashpartitioning") <= 6
+    finally:
+        edges.unpersist()
+
+
 # Spark jobs of one run_anomaly_analysis(tt) call on this fixture, so
 # EP2's job chain (listed in run_anomaly_analysis's docstring) cannot
 # silently grow back. To re-pin after an intended change, run this test
 # alone (pytest -k job_count) and set the count its failure reports.
-EP2_JOBS = 55
+EP2_JOBS = 35
 
 
 def test_ep2_job_count_is_pinned(spark, tt):

@@ -42,6 +42,51 @@ def test_self_loop(edges):
     assert flags["d"] == 1 and flags["a"] == 0
 
 
+def test_node_table_matches_plain_in_out_aggregations(spark):
+    """node_table's one groupBy over both endpoint projections equals
+    separate in/out groupBys plus the self-loop definition, on a random
+    aggregated graph with self-loops, a self-loop-only node and a
+    sink-only node."""
+    import random
+
+    rng = random.Random(5)
+    rows = [(f"n{rng.randrange(25)}", f"n{rng.randrange(25)}",
+             float(rng.randrange(1, 100)), i) for i in range(300)]
+    rows += [("n3", "n3", 4.0, 900), ("loop_only", "loop_only", 2.0, 901),
+             ("n1", "sink", 8.0, 902), ("n2", "sink", 1.0, 903)]
+    e = graph.aggregate_edges(
+        spark.createDataFrame(
+            rows, "src string, dst string, amount double, ts long"),
+        "src", "dst", "amount", "ts")
+    inf = e.groupBy(F.col("dst").alias("node")).agg(
+        F.count(F.lit(1)).alias("in_degree"),
+        F.sum("cnt").alias("in_transfer_count"),
+        F.sum("amount").alias("total_input_amount"))
+    outf = e.groupBy(F.col("src").alias("node")).agg(
+        F.count(F.lit(1)).alias("out_degree"),
+        F.sum("cnt").alias("out_transfer_count"),
+        F.sum("amount").alias("total_output_amount"))
+    loops = {r.src for r in e.filter("src = dst").select("src").collect()}
+    want = {
+        r.node: (r.in_degree, r.in_transfer_count, r.total_input_amount,
+                 r.out_degree, r.out_transfer_count, r.total_output_amount,
+                 r.total_input_amount - r.total_output_amount,
+                 int(r.node in loops))
+        for r in inf.join(outf, "node", "full_outer").na.fill(0).collect()
+    }
+    t = graph.node_table(e)
+    assert t.columns == [
+        "node", "in_degree", "in_transfer_count", "total_input_amount",
+        "out_degree", "out_transfer_count", "total_output_amount",
+        "balance_proxy", "has_self_loop"]
+    got = {r.node: tuple(r)[1:] for r in t.collect()}
+    assert got == want
+    assert got["loop_only"] == (1, 1, 2.0, 1, 1, 2.0, 0.0, 1)
+    assert got["sink"][3:6] == (0, 0, 0.0) and got["sink"][7] == 0
+    assert graph.node_features(e).columns == t.columns[:-1]
+    assert graph.self_loop_flag(e).columns == ["node", "has_self_loop"]
+
+
 def test_mutual_pairs(edges):
     mp = {r.node: r for r in graph.mutual_pair_features(edges).collect()}
     # mutual pairs: a⇄b and b⇄c

@@ -82,11 +82,38 @@ def test_hub_threshold_steps_through_tie_classes():
     assert tau == 0 and frac == 1.0
 
 
+def test_min_exclusion_searches_below_the_first_fitting_probe():
+    """When the first doubling probe already fits, the bisection's lower
+    bound is 0 (no exclusion), not half the probe, which was never shown
+    over budget."""
+    probed = []
+
+    def fits(k):
+        probed.append(k)
+        return k >= 20
+
+    k = graph._min_exclusion(100_000, fits)
+    assert 20 <= k <= 36
+    assert probed[0] == 100_000 // 1024
+
+
+def test_min_exclusion_bisects_between_last_over_and_first_fit():
+    k = graph._min_exclusion(100_000, lambda k: k >= 1000)
+    # doubling 97 -> 194 -> 388 -> 776 -> 1552, then bisection between
+    # 776 (over) and 1552 to within max(16, k // 64)
+    assert 1000 <= k <= 1000 + max(16, k // 64)
+
+
+def test_min_exclusion_gives_up_at_every_node():
+    assert graph._min_exclusion(40, lambda k: False) >= 40
+
+
 # --------------------------- guard ladder ---------------------------------
 
 def test_guard_rung1_requested_orientation_fits(spark):
     e = _complete(spark, 5)
-    ori, excl, rep = graph.motif_wedge_guard(e, wedge_budget=100)
+    ori, excl, rep = graph.motif_wedge_guard(
+        graph.pair_table(e), wedge_budget=100)
     assert ori == "id" and excl is None
     assert rep["n_excluded"] == 0 and rep["wedge_rows"] == 10
 
@@ -95,7 +122,8 @@ def test_guard_rung2_escalates_to_degree_orientation(spark):
     # star: id-order volume 15 > budget 5, degree-order volume 0 fits —
     # the guard must NOT exclude anything
     e = _star(spark, 6)
-    ori, excl, rep = graph.motif_wedge_guard(e, wedge_budget=5)
+    ori, excl, rep = graph.motif_wedge_guard(
+        graph.pair_table(e), wedge_budget=5)
     assert ori == "degree" and excl is None
     assert rep["n_excluded"] == 0 and rep["wedge_rows"] == 0
     assert [s["orientation"] for s in rep["steps"]] == ["id", "degree"]
@@ -106,12 +134,14 @@ def test_guard_rung3_excludes_hubs_on_dense_graph(spark):
     # identical), so the guard must exclude hubs until the estimate fits
     e = _complete(spark, 8)
     full = graph.estimate_wedges(e, "degree")
-    ori, excl, rep = graph.motif_wedge_guard(e, wedge_budget=3)
+    ori, excl, rep = graph.motif_wedge_guard(
+        graph.pair_table(e), wedge_budget=3)
     assert ori == "degree" and excl is not None
     assert rep["n_excluded"] == excl.count() > 0
     assert rep["wedge_rows"] <= 3 < full
     # deterministic: same decision twice
-    _, excl2, rep2 = graph.motif_wedge_guard(e, wedge_budget=3)
+    _, excl2, rep2 = graph.motif_wedge_guard(graph.pair_table(e),
+                                             wedge_budget=3)
     assert sorted(r.node for r in excl.collect()) == \
         sorted(r.node for r in excl2.collect())
     assert rep2["n_excluded"] == rep["n_excluded"]
@@ -219,10 +249,13 @@ def test_pipeline_guard_excluded_hubs_score_null(spark):
         n_excl = excl.count()
         assert n_excl == reports[0]["n_excluded"]
         # excluded hubs: null motif features AND null scores, like the
-        # reference's whitelist rows; everyone else fully scored
+        # reference's whitelist rows, but their node features and
+        # self-loop flag stay; everyone else fully scored
         for r in excl.collect():
             assert r.triangle_loop_count is None
+            assert r.two_node_loop_count is None
             assert r.final_score_0_100 is None
+            assert r.in_degree is not None and r.has_self_loop is not None
         assert res.filter(
             "motif_excluded = 0 AND final_score_0_100 IS NULL"
         ).count() == 0
