@@ -68,21 +68,17 @@ def check_foreign_key(
     fact_cols: list[str],
     dim: DataFrame,
     dim_cols: list[str],
-    partition_col: str | None = None,
+    partition_id: F.Column,
     broadcast: bool = True,
     salt: int = 0,
-) -> tuple[DataFrame, DataFrame]:
-    """Returns (per-partition verdict, violation rows)."""
+) -> DataFrame:
+    """Violating fact rows projected to (partition_id, *fact_cols): the
+    one frame both the per-partition counts and the sampled payloads
+    read. ``partition_id`` is evaluated on fact rows."""
     viol = anti_join_violations(fact, fact_cols, dim, dim_cols, broadcast, salt)
-    part = (
-        F.coalesce(F.col(partition_col).cast("string"), F.lit("__null__"))
-        if partition_col
-        else F.lit("__whole_table__")
+    return viol.select(
+        partition_id.alias("partition_id"), *[F.col(c) for c in fact_cols]
     )
-    counts = viol.groupBy(part.alias("partition_id")).agg(
-        F.count(F.lit(1)).alias("n_violations")
-    )
-    return counts, viol
 
 
 def check_count_match(

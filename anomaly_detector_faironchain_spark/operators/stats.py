@@ -122,7 +122,10 @@ def partition_expr(spec: TableSpec) -> Column:
 
 
 def profile_aggs(
-    df: DataFrame, spec: TableSpec, include_violation_counts: bool = True
+    df: DataFrame,
+    spec: TableSpec,
+    include_violation_counts: bool = True,
+    lengths: dict[str, str] | None = None,
 ) -> list[Column]:
     """The fused aggregate list for one table.
 
@@ -130,7 +133,14 @@ def profile_aggs(
     counters — used when the row-materialization pass runs anyway (the
     counts then come from the materialized violation set, so expensive
     predicates like sha2 are evaluated exactly once per row).
+    lengths: {column: name of a column already holding its length} (see
+    profile_table); any other length is computed in place.
     """
+    lengths = lengths or {}
+
+    def length(col: str) -> Column:
+        return F.col(lengths[col]) if col in lengths else F.length(F.col(col))
+
     aggs: list[Column] = [F.count(F.lit(1)).alias("n_rows")]
 
     # Per-column profile: null count; numeric min/max/mean; string length
@@ -149,10 +159,10 @@ def profile_aggs(
             if spec.profile_len_cols is None or col in spec.profile_len_cols:
                 aggs.append(
                     F.percentile_approx(
-                        F.length(col), list(LENGTH_QUANTILES), PCTL_ACCURACY
+                        length(col), list(LENGTH_QUANTILES), PCTL_ACCURACY
                     ).alias(f"len_q__{col}")
                 )
-                aggs.append(F.max(F.length(col)).alias(f"len_max__{col}"))
+                aggs.append(F.max(length(col)).alias(f"len_max__{col}"))
 
     # One violation-count aggregate per metric constraint.
     if include_violation_counts:
@@ -238,7 +248,7 @@ def profile_aggs(
     # statistic at rank ceil(q·n) — while the partition holds
     # ≤ accuracy values; measured convention, see spec docstring).
     for qb in spec.by_type(QuantileBounds):
-        v = F.length(F.col(qb.col)) if qb.length else F.col(qb.col)
+        v = length(qb.col) if qb.length else F.col(qb.col)
         aggs.append(
             F.percentile_approx(
                 v.cast("double"), F.lit(float(qb.q)), F.lit(int(qb.accuracy))
@@ -270,10 +280,38 @@ def quantile_metric_col(qb) -> str:
 def profile_table(
     df: DataFrame, spec: TableSpec, include_violation_counts: bool = True
 ) -> DataFrame:
-    """ONE scan → one row per partition with every fused metric."""
-    return (
-        df.groupBy(partition_expr(spec).alias("partition_id"))
-        .agg(*profile_aggs(df, spec, include_violation_counts))
+    """ONE scan → one row per partition with every fused metric.
+
+    Every length the profile reads (length quantiles and maximum of each
+    profiled string column, QuantileBounds(length=True)) is projected
+    once below the aggregate. percentile_approx runs in an
+    ObjectHashAggregate without codegen, so a length written inside
+    each aggregate would be computed once per aggregate per row."""
+    len_cols = [
+        f.name
+        for f in df.schema.fields
+        if isinstance(f.dataType, T.StringType)
+        and (spec.profile_len_cols is None or f.name in spec.profile_len_cols)
+    ]
+    len_cols += [
+        qb.col for qb in spec.by_type(QuantileBounds)
+        if qb.length and qb.col not in len_cols
+    ]
+    # Spark resolves names case-insensitively: keep clear of every user
+    # column under any casing
+    taken = {c.lower() for c in df.columns}
+    lengths: dict[str, str] = {}
+    for col in len_cols:
+        name = f"__len__{col}"
+        while name.lower() in taken:
+            name = "_" + name
+        taken.add(name.lower())
+        lengths[col] = name
+    src = df.select(
+        "*", *[F.length(F.col(c)).alias(n) for c, n in lengths.items()]
+    )
+    return src.groupBy(partition_expr(spec).alias("partition_id")).agg(
+        *profile_aggs(df, spec, include_violation_counts, lengths)
     )
 
 

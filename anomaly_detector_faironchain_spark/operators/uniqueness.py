@@ -149,42 +149,21 @@ def exact_duplicates(
 
 def check_unique(
     df: DataFrame, spec: TableSpec, u: Unique, profile: DataFrame
-) -> tuple[DataFrame, DataFrame]:
-    """Full two-phase check.
+) -> DataFrame:
+    """Phase 2 of the two-phase check: the duplicate-key groups of
+    ``exact_duplicates``. mode='exact' → the duplicate pass covers every
+    partition (``profile`` is not read); mode='approx_screen' → only the
+    HLL suspects of the profile (``suspect_partitions`` is tiny — one row
+    per partition — so collecting it is driver-cheap).
 
-    Returns (verdict_df, violations_df):
-      verdict: (partition_id, check_id, passed, n_violations)
-      violations: duplicate key groups from exact_duplicates().
-    mode='exact' → the duplicate pass covers every partition;
-    mode='approx_screen' → only HLL suspects (``suspect_partitions`` is
-    tiny — one row per partition — so collecting it is driver-cheap).
+    The verdict adds the profile's ``key_nulls__<check_id>`` to each
+    partition's duplicate rows (``dup_count - 1`` per group); the
+    compiler's count table does that sum.
     """
-    if u.mode == "exact":
-        suspects = None
-    else:
+    suspects = None
+    if u.mode != "exact":
         suspects = [r.partition_id for r in suspect_partitions(profile, u).collect()]
-    dups = exact_duplicates(df, spec, u, suspects)
-    dup_stats = dups.groupBy("partition_id").agg(
-        F.sum(F.col("dup_count") - 1).alias("n_dup_rows")
-    )
-    cid = u.check_id()
-    verdict = (
-        profile.select("partition_id", f"key_nulls__{cid}")
-        .join(dup_stats, "partition_id", "left")
-        .select(
-            "partition_id",
-            F.lit(cid).alias("check_id"),
-            (
-                (F.coalesce(F.col("n_dup_rows"), F.lit(0)) == 0)
-                & (F.col(f"key_nulls__{cid}") == 0)
-            ).alias("passed"),
-            (
-                F.coalesce(F.col("n_dup_rows"), F.lit(0))
-                + F.col(f"key_nulls__{cid}")
-            ).alias("n_violations"),
-        )
-    )
-    return verdict, dups
+    return exact_duplicates(df, spec, u, suspects)
 
 
 def functional_dependency_groups(

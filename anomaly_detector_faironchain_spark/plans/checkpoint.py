@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import json
 import time
+from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
 
 from pyspark.sql import DataFrame
@@ -439,16 +440,27 @@ def run_with_checkpoint(
     Each run is committed once. The verdict and violation frames are
     hash-partitioned on partition_id and pinned, so each is computed by
     its own write and lands as exactly one parquet file per
-    ``partition_id=`` directory. The manifests aggregate the pinned
-    verdicts, and the returned ValidationResult carries the pinned
-    frames: a later ``passed()`` or ``collect()`` reads exactly the
-    committed rows without re-running the suite. The pin is a
-    lineage-cutting ``localCheckpoint``, not ``persist()``: the verdict
-    plan reads ``drift_refs/``, which ``write_drift_references`` appends
-    to after the write, and that append invalidates any cached plan over
-    the directory. A persisted frame would then be recomputed against
-    this run's own histogram (PSI 0, passing) while the parquet on disk
-    says it failed.
+    ``partition_id=`` directory. The verdict, violation and profile
+    writes read independent pins and run concurrently; the drift and
+    schema references and the manifests follow all three. The manifests
+    aggregate the pinned verdicts, and the returned ValidationResult
+    carries the pinned frames: a later ``passed()`` or ``collect()``
+    reads exactly the committed rows without re-running the suite, and
+    its ``unpersist()`` releases these pins with the scan pins. The pin
+    is a lineage-cutting ``localCheckpoint``, not ``persist()``: the
+    verdict plan reads ``drift_refs/``, which ``write_drift_references``
+    appends to after the write, and that append invalidates any cached
+    plan over the directory. A persisted frame would then be recomputed
+    against this run's own histogram (PSI 0, passing) while the parquet
+    on disk says it failed.
+
+    Losing an executor fails the run. The scans and the committed frames
+    are pinned by localCheckpoint (see ``validate_table``'s
+    ``eager_warm``), which keeps no lineage to recompute lost blocks
+    from, so a lost executor surfaces as a failed job rather than as a
+    silent recomputation with different row ids. The manifests make the
+    failure cheap: they are written last, so re-running the same call
+    validates again exactly the partitions that have no manifest.
 
     Returns None if everything was already complete (nothing scanned).
     """
@@ -513,18 +525,22 @@ def run_with_checkpoint(
         .localCheckpoint(eager=False)
         for name in ("verdicts", "violations")
     }
-    result = dataclasses.replace(result, **pins)
-    for name, frame in pins.items():
-        (
-            frame.write.mode("append")
-            .partitionBy("partition_id")
-            .parquet(str(Path(out_dir) / name))
-        )
-    (
-        result.profile
-        .withColumn("run_id", F.lit(run_id))
-        .write.mode("append").parquet(str(Path(out_dir) / "profile"))
+    result = dataclasses.replace(
+        result, **pins,
+        cached_frames=result.cached_frames + list(pins.values()),
     )
+    writers = {
+        name: frame.write.partitionBy("partition_id")
+        for name, frame in pins.items()
+    }
+    writers["profile"] = result.profile.withColumn("run_id", F.lit(run_id)).write
+    # the three writes read independent pins: run them concurrently
+    with ThreadPoolExecutor(len(writers)) as ex:
+        for f in [
+            ex.submit(w.mode("append").parquet, str(Path(out_dir) / name))
+            for name, w in writers.items()
+        ]:
+            f.result()
     if result.drift_histograms:
         write_drift_references(result, out_dir, run_id, spec=spec)
     if track_schema:

@@ -3,12 +3,24 @@
 Pass structure for one table (the whole suite, regardless of how many
 constraints it contains):
   1. ONE fused aggregation scan   → per-partition profile (operators/stats.py)
-  2. ONE exact-duplicate scan     → only over suspect partitions (uniqueness.py)
-  3. ONE anti-join per ForeignKey → violations (referential.py)
+  2. ONE exact-duplicate scan     → per Unique; approx_screen mode scans
+                                    only the profile's suspect partitions
+                                    (uniqueness.py)
+  3. ONE anti-join per ForeignKey → violating keys (referential.py)
   4. ONE histogram scan per Drift column → PSI/KS on the tiny histogram
-  5. ONE row-level scan           → materialized violation rows for every
-                                    metric constraint at once (stacked
-                                    predicates, exploded)
+  5. ONE row-level scan           → violating rows for every metric
+                                    constraint at once (the scan keeps
+                                    only rows matching the OR of the
+                                    predicates, then stacks and explodes)
+plus one scan per FunctionalDependency, CountMatch, MonotonicPerKey,
+Benford, exact CardinalityBounds and DistributionOutlier.
+
+Every scan is declared before any of them runs and pinned once
+(``_ScanWave``); the verdict and violation plans read only the pins.
+Count-type verdicts — row checks, Unique (duplicates plus key nulls),
+ForeignKey, FunctionalDependency and MonotonicPerKey — come from ONE
+count table: the union of (partition_id, check_id, n) projections of
+the pins, summed per key behind a single aggregate Exchange.
 
 The reference ran each assertion as its own full pandas scan
 (etl/test.py:60-128); at 10^12 rows fusing them is the difference between
@@ -17,7 +29,9 @@ The reference ran each assertion as its own full pandas scan
 
 from __future__ import annotations
 
+from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -56,6 +70,18 @@ VERDICT_COLS = [
 VIOLATION_COLS = ["table", "partition_id", "check_id", "description", "row_payload"]
 
 
+def release(frame: DataFrame) -> None:
+    """Free the blocks pinning ``frame``. ``DataFrame.unpersist()`` drops
+    a persist() but never reaches a localCheckpoint: its blocks belong to
+    the RDD under the frame's ``LogicalRDD`` leaf, which is unpersisted
+    here. A released checkpoint can no longer be read."""
+    plan = frame._jdf.queryExecution().logical()
+    if plan.getClass().getSimpleName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
+    else:
+        frame.unpersist()
+
+
 @dataclass
 class ValidationResult:
     table: str
@@ -67,14 +93,14 @@ class ValidationResult:
     # snapshot the NEXT run validates against; persisted by
     # checkpoint.write_drift_references
     drift_histograms: dict[str, DataFrame] = field(default_factory=dict)
-    # the persisted full violation scan shared by verdicts AND violations
+    # the pinned full violation scan shared by verdicts AND violations
     # (None when materialize_violations=False)
     row_violations: DataFrame | None = None
-    # every frame validate_table persisted (profile, row scan, duplicate
-    # keys, FK counts/samples, drift histograms) — release with
+    # every frame pinned for this result (the scan pins of validate_table,
+    # the commit pins of checkpoint.run_with_checkpoint) — release with
     # unpersist() when done
     cached_frames: list[DataFrame] = field(default_factory=list)
-    # True when validate_table's eager_warm already computed every cached
+    # True when validate_table's eager_warm already computed every pinned
     # scan — materialize() then skips straight to the final two jobs
     warmed: bool = False
 
@@ -82,10 +108,11 @@ class ValidationResult:
         return self.verdicts.filter(~F.col("passed")).limit(1).count() == 0
 
     def unpersist(self) -> None:
-        """Release every frame the suite persisted (executor memory at
-        100 TB is the scarce resource — free it between tables)."""
+        """Release every frame pinned for this result (executor memory at
+        100 TB is the scarce resource — free it between tables). The
+        frames cannot be read afterwards."""
         for f in self.cached_frames:
-            f.unpersist()
+            release(f)
 
     def materialize(self) -> tuple[list, int]:
         """Evaluate verdicts and violations CONCURRENTLY (two Spark jobs
@@ -101,8 +128,6 @@ class ValidationResult:
         partitions (RDD cache locking is best-effort). Skipped when
         validate_table's eager_warm already did it (warmed=True).
         Returns (verdict_rows, n_violation_rows)."""
-        from concurrent.futures import ThreadPoolExecutor
-
         if not self.warmed:
             targets = self.cached_frames or [
                 f for f in (self.profile, self.row_violations) if f is not None
@@ -117,53 +142,112 @@ class ValidationResult:
             return fv.result(), fx.result()
 
 
-def _metric_verdicts(profile: DataFrame, spec: TableSpec) -> DataFrame | None:
-    """Melt the fused profile's violation counters into verdict rows."""
-    checks = [
-        c
-        for c in spec.constraints
-        if stats.violation_predicate(c, []) is not None
-    ]
-    if not checks:
-        return None
-    parts = []
-    for c in checks:
-        cid = c.check_id()
-        parts.append(
-            profile.select(
-                F.lit(spec.name).alias("table"),
-                F.col("partition_id"),
-                F.lit(cid).alias("check_id"),
-                (F.col(f"violations__{cid}") == 0).alias("passed"),
-                F.col(f"violations__{cid}").cast("double").alias("metric"),
-                F.lit(0.0).alias("threshold"),
-                F.col(f"violations__{cid}").alias("n_violations"),
-                F.lit(c.description()).alias("description"),
-            )
+class _ScanWave:
+    """Pins each full-input scan of one validate_table call once.
+
+    Scans are declared with ``pin`` and run together by ``frames``.
+    eager: each pin is a ``localCheckpoint(eager=True)``, all submitted
+    at once to one thread pool, so the scans run as one concurrent wave
+    and the plans built on them read blocks, not lineage (a checkpoint
+    adds no Exchange and no InMemoryRelation subtree). Otherwise each pin
+    is a lazy ``persist()`` that its first consumer computes."""
+
+    def __init__(self, eager: bool):
+        self.eager = eager
+        self.pins: list[tuple[Future, object]] = []
+
+    def pin(self, frame) -> Future:
+        """Declare a pin of ``frame``: a DataFrame, or a callable building
+        one that may wait on the future of an earlier pin. Returns the
+        future of the pinned frame."""
+        fut: Future = Future()
+        self.pins.append((fut, frame))
+        return fut
+
+    def frames(self) -> list[DataFrame]:
+        """Run every declared pin; on a failure release the others and
+        raise."""
+
+        def run(fut: Future, frame) -> None:
+            try:
+                f = frame() if callable(frame) else frame
+                fut.set_result(
+                    f.localCheckpoint(eager=True) if self.eager else f.persist()
+                )
+            except Exception as e:  # noqa: BLE001 — re-raised below
+                fut.set_exception(e)
+
+        if self.eager:
+            # submitted in declaration order: a pin waits only on earlier ones
+            with ThreadPoolExecutor(len(self.pins)) as ex:
+                for p in self.pins:
+                    ex.submit(run, *p)
+        else:
+            for p in self.pins:
+                run(*p)
+        futs = [fut for fut, _ in self.pins]
+        failed = [f for f in futs if f.exception() is not None]
+        if failed:
+            for f in futs:
+                if f.exception() is None:
+                    release(f.result())
+            failed[0].result()
+        return [f.result() for f in futs]
+
+
+def _count_verdicts(
+    spec: TableSpec, profile: DataFrame, checks: list, parts: list[DataFrame]
+) -> DataFrame:
+    """Verdicts of every count-type check from ONE count table. ``parts``
+    are (partition_id, check_id, n) projections of the pins; the
+    partition × check grid joins them as zero rows, so a (partition,
+    check) pair with nothing to count passes with n = 0."""
+    desc = {c.check_id(): c.description() for c in checks}
+    grid = profile.select(
+        "partition_id",
+        F.explode(F.array(*[F.lit(cid) for cid in desc])).alias("check_id"),
+        F.lit(0).cast("long").alias("n"),
+    )
+    n = F.col("n")
+    return (
+        reduce(DataFrame.unionByName, parts, grid)
+        .groupBy("partition_id", "check_id")
+        .agg(F.sum("n").alias("n"))
+        .select(
+            F.lit(spec.name).alias("table"),
+            "partition_id",
+            "check_id",
+            (n == 0).alias("passed"),
+            n.cast("double").alias("metric"),
+            F.lit(0.0).alias("threshold"),
+            n.alias("n_violations"),
+            F.create_map(*[F.lit(x) for kv in desc.items() for x in kv])[
+                F.col("check_id")
+            ].alias("description"),
         )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    )
 
 
-def _row_violations(df: DataFrame, spec: TableSpec, limit_per_check: int | None = None) -> DataFrame:
-    """ONE scan materializing violating rows for every metric constraint:
-    build an array of (check_id, violated) structs per row, keep rows with
-    at least one violation, explode. Payload is the full row as JSON.
-    With limit_per_check=None the FULL violation set is returned (callers
-    aggregate counts from it and apply their own sample limit)."""
+def _counts(frame: DataFrame, check_id, n) -> DataFrame:
+    """One (partition_id, check_id, n) projection for the count table."""
+    if isinstance(check_id, str):
+        check_id = F.lit(check_id)
+    return frame.select(
+        "partition_id", check_id.alias("check_id"), n.cast("long").alias("n")
+    )
+
+
+def _row_violations(df: DataFrame, spec: TableSpec) -> DataFrame:
+    """ONE scan materializing the FULL set of violating rows for every
+    metric constraint: keep rows matching the OR of the violation
+    predicates, build an array of (check_id, violated) structs per kept
+    row, explode. Payload is the full row as JSON. The spec must hold at
+    least one metric constraint."""
     checks = []
     for c in spec.constraints:
         pred = stats.violation_predicate(c, df.columns)
         if pred is not None:
             checks.append((c, pred))
-    spark = df.sparkSession
-    if not checks:
-        return spark.createDataFrame(
-            [], "table string, partition_id string, check_id string, "
-            "description string, row_payload string"
-        )
     part = stats.partition_expr(spec).alias("partition_id")
     structs = F.array(
         *[
@@ -175,18 +259,22 @@ def _row_violations(df: DataFrame, spec: TableSpec, limit_per_check: int | None 
             for c, pred in checks
         ]
     )
-    # Filter the check array PER ROW before exploding: clean rows (the
-    # overwhelming majority) are dropped while still one row wide, so the
-    # explode never duplicates row payloads check-times over, and
-    # JSON-encoding is paid only for actual violations.
+    # Clean rows (the overwhelming majority) are dropped by a plain
+    # codegen'd filter first: the F.filter lambda below is a higher-order
+    # function that runs interpreted, so it sees only violating rows. A
+    # NULL predicate drops its row or struct under both forms. Filtering
+    # the check array PER ROW before exploding keeps row payloads from
+    # being duplicated check-times over, and JSON-encoding is paid only
+    # for actual violations.
+    any_violation = reduce(lambda a, b: a | b, [pred for _, pred in checks])
     row_struct = F.struct(*[F.col(c) for c in df.columns])
-    out = (
-        df.select(
+    return (
+        df.filter(any_violation)
+        .select(
             part,
             row_struct.alias("__row__"),
             F.filter(structs, lambda v: v["violated"]).alias("__vs__"),
         )
-        .filter(F.size("__vs__") > 0)
         .select(
             F.lit(spec.name).alias("table"),
             "partition_id",
@@ -201,16 +289,6 @@ def _row_violations(df: DataFrame, spec: TableSpec, limit_per_check: int | None 
             "row_payload",
         )
     )
-    if limit_per_check:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("partition_id", "check_id").orderBy("row_payload")
-        out = (
-            out.withColumn("__rn__", F.row_number().over(w))
-            .filter(F.col("__rn__") <= limit_per_check)
-            .drop("__rn__")
-        )
-    return out
 
 
 def validate_table(
@@ -230,83 +308,185 @@ def validate_table(
     drift_refs: {col: reference histogram DataFrame (bucket, cnt)} for
       Drift constraints — typically the previous run's histogram loaded
       from the checkpoint dir.
-    eager_warm: warm the two cached full-input scans (fused profile +
-      shared violation scan) CONCURRENTLY before the uniqueness phase.
-      Without it the approx-screen's suspect-partition collect computes
-      the profile as a lone serial job — the single biggest job-level
-      serialization in the suite (the two scans are independent full
-      passes; overlapping them fills each other's stage tails, the same
-      trick ValidationResult.materialize plays for verdicts+violations).
+    eager_warm: pin every full-input scan with
+      ``localCheckpoint(eager=True)``, all submitted at once from one
+      thread pool (``_ScanWave``): the profile, the row violations, each
+      FK anti-join, each FD's violating groups, each Unique's duplicate
+      pass and the other per-constraint scans run as one concurrent wave
+      that fills its own stage tails, and the verdict and violation jobs
+      then read checkpointed blocks only. An approx_screen Unique
+      collects its suspects from the pinned profile before its
+      duplicate pass. The pins have no lineage: a lost executor fails
+      the next read of the result instead of recomputing it.
+      eager_warm=False pins with a lazy ``persist()`` instead and runs
+      no scan (an approx_screen Unique still collects its suspects);
+      ``multi.validate_suite`` then warms several tables' scans at once
+      through ``ValidationResult.materialize``, and the suite queries
+      build plans over the result without running it.
     """
     refs = refs or {}
     drift_refs = drift_refs or {}
     spark = df.sparkSession
-    row_viol = None
+    part = stats.partition_expr(spec)
+    for c in spec.by_type(ForeignKey) + spec.by_type(CountMatch):
+        if c.ref_table not in refs:
+            raise ValueError(f"missing ref table DataFrame: {c.ref_table}")
+    for d in spec.by_type(Drift):
+        if d.col not in drift_refs:
+            raise ValueError(f"missing drift reference histogram for {d.col}")
 
-    # Pass 1: fused profile. Cached — it is tiny (one row per partition)
-    # and consumed by several verdict builders. When the row-violation
-    # pass runs (materialize_violations=True) the per-constraint counts
-    # come from IT, so the profile pass skips the violation predicates —
-    # expensive ones (sha2 of every content body, regexes) are then
-    # evaluated exactly once per row instead of twice.
-    profile = stats.profile_table(
+    # Declare every full-input scan, then pin them all in one wave.
+    wave = _ScanWave(eager_warm)
+
+    # Pass 1: fused profile (one row per partition), read by several
+    # verdict builders. When the row-violation pass runs
+    # (materialize_violations=True) the per-constraint counts come from
+    # IT, so the profile pass skips the violation predicates — expensive
+    # ones (sha2 of every content body, regexes) are then evaluated
+    # exactly once per row instead of twice.
+    profile_pin = wave.pin(stats.profile_table(
         df, spec, include_violation_counts=not materialize_violations
-    ).cache()
+    ))
+    metric_checks = [
+        c for c in spec.constraints
+        if stats.violation_predicate(c, df.columns) is not None
+    ]
+    # Pass 5: the violation set is assumed small (clean data dominates);
+    # its counts and its sampled payloads share this one scan
+    row_pin = None
+    if materialize_violations and metric_checks:
+        row_pin = wave.pin(_row_violations(df, spec))
+
+    # Pass 2: one exact duplicate pass per Unique; approx_screen first
+    # collects its suspect partitions from the pinned profile.
+    unique_pins = []
+    for u in spec.by_type(Unique):
+        if u.mode == "exact":
+            dups = uniqueness.exact_duplicates(df, spec, u)
+        else:
+            def dups(u=u):
+                return uniqueness.check_unique(df, spec, u, profile_pin.result())
+        unique_pins.append((u, wave.pin(dups)))
+
+    # Pass 3: one anti-join per ForeignKey, pinned as the violating keys
+    # (their count and their sample then share one anti-join) or, with
+    # no payloads to keep, as per-partition counts.
+    fk_pins = []
+    for fk in spec.by_type(ForeignKey):
+        keys = referential.check_foreign_key(
+            df,
+            list(fk.cols),
+            refs[fk.ref_table],
+            list(fk.ref_cols),
+            part,
+            broadcast=broadcast_refs,
+            salt=fk_salt,
+        )
+        if not materialize_violations:
+            keys = keys.groupBy("partition_id").agg(
+                F.count(F.lit(1)).alias("n")
+            )
+        fk_pins.append((fk, wave.pin(keys)))
+
+    # Pass 2b: one scan per FunctionalDependency, pinned as its tiny
+    # violating (key, partition, value) groups.
+    fd_pins = []
+    for fdc in spec.by_type(FunctionalDependency):
+        _, groups = uniqueness.check_functional_dependency(
+            uniqueness.functional_dependency_groups(df, spec, fdc), fdc
+        )
+        fd_pins.append((fdc, wave.pin(groups)))
+
+    # Cross-table count reconciliation: one map-side-combined groupBy over
+    # the fact table + a group-cardinality full-outer join vs the
+    # manifest; the mismatch frame is tiny (clean data dominates).
+    cm_pins = [
+        (cm, wave.pin(referential.check_count_match(
+            df,
+            list(cm.group_cols),
+            refs[cm.ref_table],
+            list(cm.ref_group_cols),
+            cm.expected_col,
+            partition_id=part,
+        )))
+        for cm in spec.by_type(CountMatch)
+    ]
+
+    # Per-key monotonicity: one keyed-window pass; only the violating
+    # rows survive.
+    mono_pins = [
+        (mc, wave.pin(temporal.monotonic_violations(
+            df,
+            list(mc.key_cols),
+            mc.order_col,
+            mc.value_col,
+            strict=mc.strict,
+            partition_id=part,
+        )))
+        for mc in spec.by_type(MonotonicPerKey)
+    ]
+
+    # Benford first-digit conformity: one map-side agg to <= 9 rows per
+    # partition; the MAD frame is one row per partition.
+    bf_pins = [
+        (bf, wave.pin(drift_ops.benford_mad(
+            df, bf.col, bf.scale, spec.partition_col
+        )))
+        for bf in spec.by_type(Benford)
+    ]
+
+    # CardinalityBounds exact mode: one extra two-level aggregation per
+    # constraint (approx mode rides the fused profile — nothing to pin).
+    card_pins = [
+        (cb, wave.pin(uniqueness.distinct_count_per_partition(df, spec, cb.col))
+         if cb.mode == "exact" else None)
+        for cb in spec.by_type(CardinalityBounds)
+    ]
+
+    # Fleet-relative distribution outliers: one histogram pass per
+    # constraint (groupBy(partition, bucket), map-side combined); the
+    # fleet reference is the SAME pinned frame summed over groups, so
+    # unlike Drift no external snapshot is needed.
+    do_pins = []
+    for do in spec.by_type(DistributionOutlier):
+        if do.categorical:
+            do_hist = drift_ops.categorical_histogram(
+                df, do.col, spec.partition_col
+            )
+        else:
+            do_hist = drift_ops.numeric_histogram(
+                df, do.col, do.bins, do.lo, do.hi, spec.partition_col
+            )
+        do_pins.append((do, wave.pin(do_hist)))
+
+    # Pass 4: one small histogram row per (group, bucket) per Drift column
+    drift_pins = []
+    for d in spec.by_type(Drift):
+        if d.categorical:
+            cur = drift_ops.categorical_histogram(df, d.col, spec.partition_col)
+        else:
+            cur = drift_ops.numeric_histogram(
+                df, d.col, d.bins, d.lo, d.hi, spec.partition_col
+            )
+        drift_pins.append((d, wave.pin(cur)))
+
+    cached_frames = wave.frames()
+    profile = profile_pin.result()
+    row_viol = row_pin.result() if row_pin is not None else None
 
     verdict_parts: list[DataFrame] = []
     violation_parts: list[DataFrame] = []
     drift_scores: dict[str, DataFrame] = {}
     drift_histograms: dict[str, DataFrame] = {}
 
-    if materialize_violations:
-        row_viol = _row_violations(df, spec, limit_per_check=None)
-        metric_checks = [
-            c for c in spec.constraints
-            if stats.violation_predicate(c, df.columns) is not None
-        ]
-        if metric_checks:
-            # the violation set is assumed small (clean data dominates);
-            # persist it so counts + sampled payloads share one scan
-            row_viol = row_viol.persist()
-            counts = row_viol.groupBy("partition_id", "check_id").agg(
-                F.count(F.lit(1)).alias("__n__")
-            )
-            check_tbl = spark.createDataFrame(
-                [(c.check_id(), c.description()) for c in metric_checks],
-                "check_id string, description string",
-            )
-            grid = profile.select("partition_id").crossJoin(F.broadcast(check_tbl))
-            verdict_parts.append(
-                grid.join(counts, ["partition_id", "check_id"], "left")
-                .select(
-                    F.lit(spec.name).alias("table"),
-                    "partition_id",
-                    "check_id",
-                    (F.coalesce(F.col("__n__"), F.lit(0)) == 0).alias("passed"),
-                    F.coalesce(F.col("__n__"), F.lit(0)).cast("double").alias("metric"),
-                    F.lit(0.0).alias("threshold"),
-                    F.coalesce(F.col("__n__"), F.lit(0)).alias("n_violations"),
-                    "description",
-                )
-            )
-    else:
-        mv = _metric_verdicts(profile, spec)
-        if mv is not None:
-            verdict_parts.append(mv)
-
-    cached_frames: list[DataFrame] = [profile]
-    if row_viol is not None:
-        cached_frames.append(row_viol)
-
     # Pass 0 (metadata-only): schema contracts. Verdicts derive from
     # df.schema — the Catalyst schema known from the parquet footer /
     # catalog before any job runs — so a spec holding ONLY SchemaMatch
-    # constraints launches ZERO Spark jobs on the data (the fused
-    # profile above is lazy and stays unexecuted unless something else
-    # consumes it). Declared DDL strings normalize through Spark's own
-    # type parser, so 'long' == 'bigint' and nested types compare
-    # structurally. partition_id is '__schema__': the schema is a table
-    # property, not a per-partition one.
+    # constraints reads no data in its verdict plan (with eager_warm the
+    # profile pin is still computed). Declared DDL strings normalize
+    # through Spark's own type parser, so 'long' == 'bigint' and nested
+    # types compare structurally. partition_id is '__schema__': the
+    # schema is a table property, not a per-partition one.
     sm_list = spec.by_type(SchemaMatch)
     if sm_list:
         import json as _json
@@ -360,263 +540,91 @@ def validate_table(
                 "description string, row_payload string",
             ))
 
-    # Declare the OTHER independent full-input scans up front — FK
-    # anti-joins (pass 3) and drift histograms (pass 4) — persisting their
-    # tiny outputs, so eager_warm can run every heavy scan in ONE
-    # concurrent wave instead of leaving FK/drift to execute serially
-    # inside the final verdict job. Each is declared here and consumed in
-    # its numbered pass below (union order unchanged).
-    fk_items: list[tuple] = []
-    for fk in spec.by_type(ForeignKey):
-        if fk.ref_table not in refs:
-            raise ValueError(f"missing ref table DataFrame: {fk.ref_table}")
-        fk_counts, fk_viol = referential.check_foreign_key(
-            df,
-            list(fk.cols),
-            refs[fk.ref_table],
-            list(fk.ref_cols),
-            partition_col=spec.partition_col,
-            broadcast=broadcast_refs,
-            salt=fk_salt,
+    def payloads(frame: DataFrame, c, payload: list) -> DataFrame:
+        """Violation rows of check ``c``: one JSON payload per row."""
+        return frame.select(
+            F.lit(spec.name).alias("table"),
+            "partition_id",
+            F.lit(c.check_id()).alias("check_id"),
+            F.lit(c.description()).alias("description"),
+            F.to_json(F.struct(*payload)).alias("row_payload"),
         )
-        fk_counts = fk_counts.persist()
-        cached_frames.append(fk_counts)
-        fk_sample = None
+
+    def sample(frame: DataFrame) -> DataFrame:
+        if violation_limit_per_check:
+            return frame.limit(violation_limit_per_check)
+        return frame
+
+    # The count table: every count-type verdict (row checks, Unique with
+    # its key nulls, ForeignKey, FunctionalDependency, MonotonicPerKey)
+    # from one union of (partition_id, check_id, n) projections of the
+    # pins.
+    count_checks: list = []
+    count_parts: list[DataFrame] = []
+    if row_viol is not None:
+        count_checks += metric_checks
+        count_parts.append(_counts(row_viol, F.col("check_id"), F.lit(1)))
+    elif not materialize_violations:
+        for c in metric_checks:
+            cid = c.check_id()
+            count_checks.append(c)
+            count_parts.append(_counts(profile, cid, F.col(f"violations__{cid}")))
+    for u, pin in unique_pins:
+        dups = pin.result()
+        cid = u.check_id()
+        count_checks.append(u)
+        count_parts += [
+            _counts(dups, cid, F.col("dup_count") - 1),
+            _counts(profile, cid, F.col(f"key_nulls__{cid}")),
+        ]
         if materialize_violations:
-            # cap + persist so the violations job reads the sample from
-            # cache instead of re-running the anti-join scan
-            fk_sample = (
-                fk_viol.limit(violation_limit_per_check)
-                if violation_limit_per_check
-                else fk_viol
-            ).persist()
-            cached_frames.append(fk_sample)
-        fk_items.append((fk, fk_counts, fk_sample))
-
-    fd_items: list[tuple] = []
-    for fdc in spec.by_type(FunctionalDependency):
-        # one full scan → tiny (violating key, partition, value) groups;
-        # persisted so the verdict counts and the sampled payloads both
-        # read from cache (pass 2b below)
-        fd_groups = uniqueness.functional_dependency_groups(
-            df, spec, fdc
-        ).persist()
-        cached_frames.append(fd_groups)
-        fd_items.append((fdc, fd_groups))
-
-    # Cross-table count reconciliation: one map-side-combined groupBy over
-    # the fact table + a group-cardinality full-outer join vs the
-    # manifest; the mismatch frame is tiny (clean data dominates) and is
-    # persisted so verdict counts and sampled payloads share one scan.
-    cm_items: list[tuple] = []
-    for cm in spec.by_type(CountMatch):
-        if cm.ref_table not in refs:
-            raise ValueError(f"missing ref table DataFrame: {cm.ref_table}")
-        cm_groups = referential.check_count_match(
-            df,
-            list(cm.group_cols),
-            refs[cm.ref_table],
-            list(cm.ref_group_cols),
-            cm.expected_col,
-            partition_id=stats.partition_expr(spec),
-        ).persist()
-        cached_frames.append(cm_groups)
-        cm_items.append((cm, cm_groups))
-
-    # Per-key monotonicity: one keyed-window pass; only the violating
-    # rows survive, persisted for verdict counts + sampled payloads.
-    mono_items: list[tuple] = []
-    for mc in spec.by_type(MonotonicPerKey):
-        mono_viol = temporal.monotonic_violations(
-            df,
-            list(mc.key_cols),
-            mc.order_col,
-            mc.value_col,
-            strict=mc.strict,
-            partition_id=stats.partition_expr(spec),
-        ).persist()
-        cached_frames.append(mono_viol)
-        mono_items.append((mc, mono_viol))
-
-    # Benford first-digit conformity: one map-side agg to <= 9 rows per
-    # partition; the MAD frame is one row per partition.
-    bf_items: list[tuple] = []
-    for bf in spec.by_type(Benford):
-        bf_mad = drift_ops.benford_mad(
-            df, bf.col, bf.scale, spec.partition_col
-        ).persist()
-        cached_frames.append(bf_mad)
-        bf_items.append((bf, bf_mad))
-
-    # CardinalityBounds exact mode: one extra two-level aggregation per
-    # constraint (approx mode rides the fused profile — nothing to warm).
-    card_items: list[tuple] = []
-    for cb in spec.by_type(CardinalityBounds):
-        grp = None
-        if cb.mode == "exact":
-            grp = uniqueness.distinct_count_per_partition(
-                df, spec, cb.col
-            ).persist()
-            cached_frames.append(grp)
-        card_items.append((cb, grp))
-
-    # Fleet-relative distribution outliers: one histogram pass per
-    # constraint (groupBy(partition, bucket), map-side combined); the
-    # fleet reference is the SAME warmed frame summed over groups, so
-    # unlike Drift no external snapshot is needed.
-    do_items: list[tuple] = []
-    for do in spec.by_type(DistributionOutlier):
-        if do.categorical:
-            do_hist = drift_ops.categorical_histogram(
-                df, do.col, spec.partition_col
-            )
-        else:
-            do_hist = drift_ops.numeric_histogram(
-                df, do.col, do.bins, do.lo, do.hi, spec.partition_col
-            )
-        do_hist = do_hist.persist()
-        cached_frames.append(do_hist)
-        do_items.append((do, do_hist))
-
-    drift_items: list[tuple] = []
-    for d in spec.by_type(Drift):
-        if d.col not in drift_refs:
-            raise ValueError(f"missing drift reference histogram for {d.col}")
-        if d.categorical:
-            cur = drift_ops.categorical_histogram(df, d.col, spec.partition_col)
-        else:
-            cur = drift_ops.numeric_histogram(
-                df, d.col, d.bins, d.lo, d.hi, spec.partition_col
-            )
-        cur = cur.persist()  # one small histogram row per (group, bucket)
-        cached_frames.append(cur)
-        drift_items.append((d, cur))
-
-    if eager_warm:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max(2, len(cached_frames))) as ex:
-            for w in [ex.submit(c.count) for c in cached_frames]:
-                w.result()
-
-    # Pass 2: uniqueness exact fallback. The duplicate-key frame is
-    # persisted like every other scan output: the verdict counts and the
-    # sampled payloads then share ONE duplicate scan instead of each
-    # running its own.
-    for u in spec.by_type(Unique):
-        uv, dups = uniqueness.check_unique(df, spec, u, profile)
-        dups = dups.persist()
-        cached_frames.append(dups)
-        verdict_parts.append(
-            uv.select(
-                F.lit(spec.name).alias("table"),
-                "partition_id",
-                "check_id",
-                "passed",
-                F.col("n_violations").cast("double").alias("metric"),
-                F.lit(0.0).alias("threshold"),
-                "n_violations",
-                F.lit(u.description()).alias("description"),
-            )
-        )
+            violation_parts.append(payloads(
+                dups, u, [*map(F.col, u.cols), F.col("dup_count")]
+            ))
+    for fk, pin in fk_pins:
+        keys = pin.result()
+        count_checks.append(fk)
         if materialize_violations:
+            count_parts.append(_counts(keys, fk.check_id(), F.lit(1)))
             violation_parts.append(
-                dups.select(
-                    F.lit(spec.name).alias("table"),
-                    "partition_id",
-                    F.lit(u.check_id()).alias("check_id"),
-                    F.lit(u.description()).alias("description"),
-                    F.to_json(
-                        F.struct(*[F.col(c) for c in u.cols], F.col("dup_count"))
-                    ).alias("row_payload"),
-                )
+                payloads(sample(keys), fk, list(map(F.col, fk.cols)))
             )
-
-    # Pass 3: referential anti-joins (declared + warmed above).
+        else:
+            count_parts.append(_counts(keys, fk.check_id(), F.col("n")))
+    for fdc, pin in fd_pins:
+        groups = pin.result()
+        count_checks.append(fdc)
+        count_parts.append(_counts(groups, fdc.check_id(), F.col("n_rows")))
+        if materialize_violations:
+            violation_parts.append(payloads(sample(groups), fdc, [
+                *map(F.col, fdc.determinant),
+                F.col(fdc.dependent),
+                F.col("n_rows"),
+            ]))
+    for mc, pin in mono_pins:
+        mono_viol = pin.result()
+        count_checks.append(mc)
+        count_parts.append(_counts(mono_viol, mc.check_id(), F.lit(1)))
+        if materialize_violations:
+            violation_parts.append(payloads(sample(mono_viol), mc, [
+                *map(F.col, mc.key_cols),
+                F.col(mc.order_col),
+                F.col(mc.value_col),
+                F.col("prev_max"),
+            ]))
+    if count_checks:
+        verdict_parts.append(
+            _count_verdicts(spec, profile, count_checks, count_parts)
+        )
     all_parts = profile.select("partition_id")
-    for fk, counts, fk_sample in fk_items:
-        verdict_parts.append(
-            all_parts.join(counts, "partition_id", "left")
-            .select(
-                F.lit(spec.name).alias("table"),
-                "partition_id",
-                F.lit(fk.check_id()).alias("check_id"),
-                (F.coalesce(F.col("n_violations"), F.lit(0)) == 0).alias("passed"),
-                F.coalesce(F.col("n_violations"), F.lit(0))
-                .cast("double")
-                .alias("metric"),
-                F.lit(0.0).alias("threshold"),
-                F.coalesce(F.col("n_violations"), F.lit(0)).alias("n_violations"),
-                F.lit(fk.description()).alias("description"),
-            )
-        )
-        if materialize_violations:
-            violation_parts.append(
-                fk_sample.select(
-                    F.lit(spec.name).alias("table"),
-                    (
-                        stats.partition_expr(spec)
-                        if spec.partition_col
-                        else F.lit(stats.WHOLE_TABLE)
-                    ).alias("partition_id"),
-                    F.lit(fk.check_id()).alias("check_id"),
-                    F.lit(fk.description()).alias("description"),
-                    F.to_json(F.struct(*[F.col(c) for c in fk.cols])).alias(
-                        "row_payload"
-                    ),
-                )
-            )
-
-    # Pass 2b: functional dependencies — verdicts and payloads both
-    # derive from the one warmed groups frame (zero extra input scans).
-    for fdc, fd_groups in fd_items:
-        fd_keys, fd_viol_groups = uniqueness.check_functional_dependency(
-            fd_groups, fdc
-        )
-        fd_counts = fd_viol_groups.groupBy("partition_id").agg(
-            F.sum("n_rows").alias("__n__")
-        )
-        verdict_parts.append(
-            all_parts.join(fd_counts, "partition_id", "left")
-            .select(
-                F.lit(spec.name).alias("table"),
-                "partition_id",
-                F.lit(fdc.check_id()).alias("check_id"),
-                (F.coalesce(F.col("__n__"), F.lit(0)) == 0).alias("passed"),
-                F.coalesce(F.col("__n__"), F.lit(0))
-                .cast("double")
-                .alias("metric"),
-                F.lit(0.0).alias("threshold"),
-                F.coalesce(F.col("__n__"), F.lit(0)).alias("n_violations"),
-                F.lit(fdc.description()).alias("description"),
-            )
-        )
-        if materialize_violations:
-            sample = fd_viol_groups
-            if violation_limit_per_check:
-                sample = sample.limit(violation_limit_per_check)
-            violation_parts.append(
-                sample.select(
-                    F.lit(spec.name).alias("table"),
-                    "partition_id",
-                    F.lit(fdc.check_id()).alias("check_id"),
-                    F.lit(fdc.description()).alias("description"),
-                    F.to_json(
-                        F.struct(
-                            *[F.col(c) for c in fdc.determinant],
-                            F.col(fdc.dependent),
-                            F.col("n_rows"),
-                        )
-                    ).alias("row_payload"),
-                )
-            )
 
     # Pass 3b: count reconciliation — verdicts and payloads both derive
-    # from the one warmed mismatch frame. The verdict grid is a FULL
+    # from the one pinned mismatch frame. The verdict grid is a FULL
     # outer join of the profile's partitions with the mismatch counts:
     # manifest-only groups live in the synthetic '__missing__' partition,
     # which the profile cannot know about.
-    for cm, cm_groups in cm_items:
+    for cm, pin in cm_pins:
+        cm_groups = pin.result()
         cm_counts = cm_groups.groupBy("partition_id").agg(
             F.count(F.lit(1)).alias("__n__"),
             F.sum(F.abs(F.col("diff"))).alias("__rows_off__"),
@@ -637,72 +645,18 @@ def validate_table(
             )
         )
         if materialize_violations:
-            sample = cm_groups
-            if violation_limit_per_check:
-                sample = sample.limit(violation_limit_per_check)
-            violation_parts.append(
-                sample.select(
-                    F.lit(spec.name).alias("table"),
-                    "partition_id",
-                    F.lit(cm.check_id()).alias("check_id"),
-                    F.lit(cm.description()).alias("description"),
-                    F.to_json(
-                        F.struct(
-                            *[F.col(c) for c in cm.group_cols],
-                            F.col("actual"),
-                            F.col("expected"),
-                            F.col("diff"),
-                        )
-                    ).alias("row_payload"),
-                )
-            )
-
-    # Pass 2c: per-key monotonicity — verdict counts + sampled payloads
-    # from the one warmed violating-rows frame.
-    for mc, mono_viol in mono_items:
-        mono_counts = mono_viol.groupBy("partition_id").agg(
-            F.count(F.lit(1)).alias("__n__")
-        )
-        verdict_parts.append(
-            all_parts.join(mono_counts, "partition_id", "left")
-            .select(
-                F.lit(spec.name).alias("table"),
-                "partition_id",
-                F.lit(mc.check_id()).alias("check_id"),
-                (F.coalesce(F.col("__n__"), F.lit(0)) == 0).alias("passed"),
-                F.coalesce(F.col("__n__"), F.lit(0))
-                .cast("double")
-                .alias("metric"),
-                F.lit(0.0).alias("threshold"),
-                F.coalesce(F.col("__n__"), F.lit(0)).alias("n_violations"),
-                F.lit(mc.description()).alias("description"),
-            )
-        )
-        if materialize_violations:
-            sample = mono_viol
-            if violation_limit_per_check:
-                sample = sample.limit(violation_limit_per_check)
-            violation_parts.append(
-                sample.select(
-                    F.lit(spec.name).alias("table"),
-                    "partition_id",
-                    F.lit(mc.check_id()).alias("check_id"),
-                    F.lit(mc.description()).alias("description"),
-                    F.to_json(
-                        F.struct(
-                            *[F.col(c) for c in mc.key_cols],
-                            F.col(mc.order_col),
-                            F.col(mc.value_col),
-                            F.col("prev_max"),
-                        )
-                    ).alias("row_payload"),
-                )
-            )
+            violation_parts.append(payloads(sample(cm_groups), cm, [
+                *map(F.col, cm.group_cols),
+                F.col("actual"),
+                F.col("expected"),
+                F.col("diff"),
+            ]))
 
     # Pass 4b: Benford conformity — distribution-level verdict per
-    # partition from the warmed one-row-per-partition MAD frame. A
+    # partition from the pinned one-row-per-partition MAD frame. A
     # partition with no digit-bearing rows passes vacuously.
-    for bf, bf_mad in bf_items:
+    for bf, pin in bf_pins:
+        bf_mad = pin.result()
         verdict_parts.append(
             all_parts.join(bf_mad, "partition_id", "left")
             .select(
@@ -792,15 +746,15 @@ def validate_table(
         )
 
     # Pass 1c/2d: cardinality bounds — approx mode reads the profile's
-    # HLL estimate; exact mode joins the warmed two-level distinct
+    # HLL estimate; exact mode joins the pinned two-level distinct
     # counts. Denominator is the profile's non-null count either way. A
     # partition with no non-null values passes vacuously.
-    for cb, grp in card_items:
+    for cb, pin in card_pins:
         nonnull = F.col("n_rows") - F.col(f"null_count__{cb.col}")
         if cb.mode == "exact":
             base = profile.select(
                 "partition_id", nonnull.alias("__nn__")
-            ).join(grp, "partition_id", "left")
+            ).join(pin.result(), "partition_id", "left")
             nd = F.coalesce(F.col("n_distinct"), F.lit(0))
         else:
             base = profile.select(
@@ -839,7 +793,7 @@ def validate_table(
         )
 
     # Pass 1d: fleet-relative profile outliers — median/MAD across the
-    # partitions of THIS run, computed over the tiny persisted profile
+    # partitions of THIS run, computed over the tiny pinned profile
     # frame (one row per partition; the two fleet aggregates each reduce
     # it to a single broadcast row). Zero extra scans of the data.
     for po in spec.by_type(ProfileOutlier):
@@ -898,12 +852,13 @@ def validate_table(
         )
 
     # Pass 4c: fleet-relative distribution outliers — each partition's
-    # histogram vs the fleet histogram (the same warmed frame summed
+    # histogram vs the fleet histogram (the same pinned frame summed
     # over groups, replicated per group through a broadcast). Partitions
     # with no non-null values contribute no histogram rows → metric
     # null → vacuous pass via the left join against the profile's
     # partition list.
-    for do, do_hist in do_items:
+    for do, pin in do_pins:
+        do_hist = pin.result()
         by_group = spec.partition_col is not None
         if by_group:
             fleet = do_hist.groupBy("bucket").agg(F.sum("cnt").alias("cnt"))
@@ -933,12 +888,11 @@ def validate_table(
         )
 
     # Pass 4: drift per column, per partition, vs reference histograms
-    # (histograms declared + warmed above).
-    for d, cur in drift_items:
+    # (histograms declared + pinned above).
+    for d, pin in drift_pins:
+        cur = pin.result()
         ref_hist = drift_refs[d.col]
         by_group = spec.partition_col is not None
-        if by_group:
-            cur = cur.withColumnRenamed("group_id", "group_id")
         # this run's corpus-level histogram — stored so it can serve as
         # the NEXT run's reference (checkpoint.write_drift_references)
         drift_histograms[d.col] = (
@@ -974,9 +928,9 @@ def validate_table(
             )
         )
 
-    # Pass 5: row-level violation payloads (sampled from the persisted
+    # Pass 5: row-level violation payloads (sampled from the pinned
     # violation set computed above — no extra scan of the input).
-    if materialize_violations:
+    if row_viol is not None:
         sampled = row_viol
         if violation_limit_per_check:
             from pyspark.sql import Window

@@ -51,6 +51,47 @@ def test_profile_pass_is_single_partial_final_aggregate(spark):
     assert len(re.findall(r"^\(\d+\) Exchange", p, re.M)) == 1
 
 
+def test_profile_length_columns_never_collide_with_user_columns(spark):
+    # the profile projects each length once under a generated name; a
+    # user column already holding that name (in any casing) keeps its
+    # own length profile
+    df = spark.createDataFrame(
+        [("ab", "xyz12"), ("abcd", None)], "s string, `__LEN__s` string"
+    )
+    spec = TableSpec(name="t", partition_col=None, constraints=())
+    row = stats.profile_table(df, spec).collect()[0]
+    assert row["len_max__s"] == 4
+    assert row["len_max____LEN__s"] == 5
+    assert row["len_q__s"] == [2, 4, 4]
+
+
+def test_verdict_plan_reads_pins_with_one_count_exchange(spark):
+    # eager_warm pins every full-input scan with localCheckpoint before
+    # the verdict plan is built: the plan reads no InMemoryRelation, and
+    # all count-type checks (row checks, Unique, FK, FD) share the ONE
+    # aggregate Exchange of the count table
+    import re
+
+    from anomaly_detector_faironchain_spark.datagen import source_files as gen
+    from anomaly_detector_faironchain_spark.plans.compiler import validate_table
+    from anomaly_detector_faironchain_spark.specs import north_rule_spec
+
+    files = gen.generate_source_files(spark, 400, seed=3, partitions=2)
+    repos, _ = gen.companion_dims(files)
+    df = gen.inject_violations(
+        files.join(gen.manifest(files), "file_sid"),
+        bad_lang_ids=[5], dangling_repo_ids=[9], duplicate_sid_ids=[13],
+    )
+    res = validate_table(df, north_rule_spec(), refs={"repos": repos})
+    try:
+        p = plan(res.verdicts)
+        assert "InMemoryRelation" not in p and "InMemoryTableScan" not in p
+        assert len(re.findall(r"^\(\d+\) Exchange", p, re.M)) <= 1
+        assert res.verdicts.filter(~F.col("passed")).count() > 0
+    finally:
+        res.unpersist()
+
+
 def test_fk_check_uses_broadcast_anti_join(spark):
     orders = spark.read.parquet(f"{SF}/orders.parquet")
     cust = spark.read.parquet(f"{SF}/customer.parquet")

@@ -140,11 +140,12 @@ def test_validate_new_snapshots_scans_only_increment(spark, tmp_path):
 
 
 # Spark jobs of one validate_new_snapshots call on the fixture below, so
-# the checkpoint commit (one write per pinned frame, manifests from the
-# pins) cannot silently grow back. To re-pin after an intended change,
+# neither the pinned scan wave (one localCheckpoint per full-input scan)
+# nor the checkpoint commit (one write per pinned frame, manifests from
+# the pins) can silently grow back. To re-pin after an intended change,
 # run this test alone (pytest -k commit_shape) and set the count its
 # failure reports.
-SNAPSHOT_COMMIT_JOBS = 24
+SNAPSHOT_COMMIT_JOBS = 17
 
 
 def test_snapshot_commit_shape_and_job_count(spark, tmp_path):

@@ -152,14 +152,15 @@ def test_vector_shape_constraint_catches_each_corruption(spark):
 
 
 def test_eager_warm_covers_fk_and_skips_rewarm(spark, corrupted):
-    """Round-3 overlap: validate_table(eager_warm=True) must persist the
-    FK anti-join outputs and warm them in the same concurrent wave as the
-    profile + row-violation scans (so no full-input pass is left to run
-    serially inside the final verdict job), and materialize() must not
-    re-warm what validate_table already computed."""
+    """validate_table(eager_warm=True) must pin the FK anti-join in the
+    same concurrent wave as the profile and row-violation scans (so no
+    full-input pass is left to run serially inside the final verdict
+    job), and materialize() must not re-warm what validate_table already
+    computed."""
     df, repos = corrupted
     res = validate_table(df, spec(), refs={"repos": repos})
-    # profile + row_viol + fk counts + fk sample are all persisted
+    # profile, row violations, the Unique duplicate pass, the FK
+    # anti-join and the FD violating groups are each pinned once
     assert len(res.cached_frames) >= 4
     assert res.warmed is True
     sc = spark.sparkContext
@@ -186,6 +187,73 @@ def test_eager_warm_off_matches_on(spark, corrupted):
                for r in off.verdicts.collect())
     assert a == b
     on.unpersist(); off.unpersist()
+
+
+def _committed_rows(spark, out_dir: str, name: str) -> list[str]:
+    """The committed parquet rows of one output, as sorted JSON lines
+    (every column, in column-name order)."""
+    df = spark.read.parquet(f"{out_dir}/{name}")
+    cols = sorted(df.columns)
+    return sorted(
+        json.dumps([r[c] for c in cols]) for r in df.select(*cols).collect()
+    )
+
+
+# sha256 of the committed verdict and violation rows (_committed_rows
+# joined by newlines) of run_with_checkpoint over the `corrupted`
+# fixture, as the engine committed them before its scans were pinned by
+# localCheckpoint and its count-type verdicts moved to one count table
+COMMITTED_SHA256 = {
+    "verdicts": "cf2ce9b00cf12e4b5b6d63ac11b816cad339d060f77e3b3390b2f48cfde444ba",
+    "violations": "98b7fb83186d672bc866d54eda97f91e5f2d41ed02357c3312803b2471fc8661",
+}
+
+
+def test_committed_rows_match_the_persist_engine(spark, corrupted, tmp_path):
+    """Committed verdicts and violations of a fixture with null, bad-lang,
+    truncated, dangling-repo and duplicate-sid rows are the same multiset
+    as the persist()-based engine committed (pinned as digests)."""
+    import hashlib
+
+    from anomaly_detector_faironchain_spark.plans.checkpoint import (
+        run_with_checkpoint,
+    )
+
+    df, repos = corrupted
+    out = str(tmp_path / "ck")
+    res = run_with_checkpoint(df, spec(), out, refs={"repos": repos},
+                              run_id="r1")
+    res.unpersist()
+    for name, want in COMMITTED_SHA256.items():
+        rows = _committed_rows(spark, out, name)
+        got = hashlib.sha256("\n".join(rows).encode()).hexdigest()
+        assert got == want, (name, len(rows))
+
+
+def test_checkpoint_result_unpersist_releases_every_pin(
+    spark, corrupted, tmp_path
+):
+    """run_with_checkpoint(...).unpersist() frees the scan pins AND the
+    commit pins: DataFrame.unpersist() alone never frees a
+    localCheckpoint, so the persistent-RDD registry must end where it
+    began."""
+    from anomaly_detector_faironchain_spark.plans.checkpoint import (
+        run_with_checkpoint,
+    )
+
+    df, repos = corrupted
+    df.count(), repos.count()  # the fixture's own caches are not ours
+    sc = spark.sparkContext
+
+    def pinned() -> set[int]:
+        return set(sc._jsc.getPersistentRDDs().keys())
+
+    before = pinned()
+    res = run_with_checkpoint(df, spec(), str(tmp_path / "ck"),
+                              refs={"repos": repos})
+    assert pinned() - before, "the result holds no pins"
+    res.unpersist()
+    assert pinned() - before == set()
 
 
 def test_functional_dependency_detects_multi_valued_keys(spark):
