@@ -7,7 +7,9 @@ Parity map (reference file → here):
                                                 (node table + pair table
                                                 + one motif kernel)
   analysis/detectors/rule_based_*.py:30-259   → heuristic_rules()
-  analysis/detectors/statistical_*.py:18-57   → preprocess_features()
+  analysis/detectors/statistical_*.py:18-57   → add_log_features() +
+                                                fused_threshold_and_z_stats()
+                                                + apply_z()
   analysis/detectors/statistical_*.py:60-103  → operators/mahalanobis.py
   analysis/detectors/unsupervised_*.py        → operators/iforest.py
                                                 (numpy iTree ensemble fit
@@ -140,22 +142,6 @@ def build_edges(
     return graph.aggregate_edges(t, "src", "dst", "amount", "ts")
 
 
-def extract_account_features(
-    tt: DataFrame,
-    ts_col: str | None = None,
-    min_amount: float = 0.0,
-    blacklist: list[str] | None = None,
-) -> DataFrame:
-    """Per-account graph features from AbstractTokenTransfer — the whole
-    of the reference's graph stage (EP2 steps 1-2) as joins/aggregations.
-    Caches the edgelist (read by the node table and the pair table, like
-    the reference's precomputed adjacency, extract_egonet_features.py:
-    37-42); run_anomaly_analysis manages the cache lifecycle itself via
-    build_edges/features_from_edges."""
-    edges = build_edges(tt, ts_col, min_amount, blacklist).cache()
-    return features_from_edges(edges)
-
-
 def features_from_edges(
     edges: DataFrame,
     broadcast_dict_max: int = 5_000_000,
@@ -230,19 +216,6 @@ def features_from_edges(
     )
 
 
-def compute_thresholds(df: DataFrame, q: float = 0.99) -> dict[str, float]:
-    """reference compute_thresholds (rule_based_anomaly_detection.py:4-27):
-    exact q-quantile per column, zeros excluded for heavy-tailed ones."""
-    t = {}
-    t.update(scoring.quantile_thresholds(
-        df, [c for c in THRESHOLD_COLS if c not in ZERO_EXCLUDED],
-        q=q, exclude_zeros=False,
-    ))
-    t.update(scoring.quantile_thresholds(df, ZERO_EXCLUDED, q=q,
-                                         exclude_zeros=True))
-    return t
-
-
 def heuristic_rules(df: DataFrame, t: dict[str, float]) -> DataFrame:
     """H1-H6 with the reference's exact conditions and description text."""
     retention = F.when(
@@ -304,13 +277,6 @@ def apply_z(df: DataFrame, stats: dict[str, tuple[float, float]]) -> DataFrame:
         m, s = stats[c]
         df = df.withColumn(f"{c}_z", (F.col(c) - F.lit(m)) / F.lit(s))
     return df
-
-
-def preprocess_features(df: DataFrame) -> DataFrame:
-    """K1: log1p on 6 skewed columns, two log-ratios, z-score all 9
-    (statistical_anomaly_detection.py:18-57)."""
-    df = add_log_features(df)
-    return apply_z(df, scoring.zscore_stats(df, Z_FEATURES))
 
 
 def fused_threshold_and_z_stats(

@@ -11,19 +11,20 @@ Scale notes per operator:
   * edge aggregation: one hash-shuffle on (src,dst) with map-side combine;
   * degree/amount/self-loop features (node_table): one groupBy over the
     src-side and dst-side projections of the edgelist;
-  * motifs (motif_features): one undirected pair table feeds the wedge
-    guard and ONE triangle enumeration; mutual pairs, triangles and
-    egonet counts leave it as credit rows summed by one groupBy;
-  * mutual pairs (standalone kernel): equi-join on the reversed key —
-    shuffle-parallel;
-  * triangles: wedge join pivoted on the order-minimal vertex (half the
-    wedges of a middle-vertex pivot); orientation="degree" upgrades the
-    order to node-iterator-core so mega-hubs generate ~no wedges
-    (O(m^1.5) regardless of skew) at the cost of a degree attach;
-  * egonet: neighbor-pair join; each edge expands through its
-    smaller-degree endpoint, so the intermediate is Σ min(deg) instead
-    of Σ deg² — still the most expensive operator; exclude hubs as the
-    reference's whitelist does when even that is too much.
+  * motifs (motif_features, fused_motif_features — the one motif
+    kernel): one undirected pair table feeds the wedge guard and ONE
+    triangle enumeration, pivoted on the order-minimal vertex;
+    mutual pairs, directed triangles and egonet counts leave it as
+    credit rows summed by one groupBy. orientation="degree" upgrades
+    the pivot order to node-iterator-core so mega-hubs generate ~no
+    wedges (O(m^1.5) regardless of skew); the wedge guard bounds the
+    rest and excludes hubs as the reference's whitelist does. It
+    replaced three standalone kernels (a reversed-key mutual join, a
+    directed wedge join and an egonet expansion), whose A/Bs are
+    recorded in BENCH/ego_wedge_ab_round3.json,
+    BENCH/fused_motif_ab_round3.json and BENCH/fused_shj_ab_round3.json;
+  * connected components / pagerank: iterative, lineage truncated per
+    round, shuffle volume bounded by the edge count.
 """
 
 from __future__ import annotations
@@ -145,351 +146,6 @@ def pair_table(edges: DataFrame) -> DataFrame:
     )
 
 
-def mutual_pair_features(edges: DataFrame) -> DataFrame:
-    """Two-node-loop motif (reference extract_motif_features.py:99-112):
-    for each node, count of mutual partners (u⇄v) and total amount/count
-    over both directions of each mutual pair. Equi-join on the reversed
-    key — fully shuffle-parallel."""
-    e = edges.filter(F.col("src") != F.col("dst"))
-    a = e.select("src", "dst", "amount", "cnt")
-    b = e.select(
-        F.col("src").alias("dst"), F.col("dst").alias("src"),
-        F.col("amount").alias("amount_rev"), F.col("cnt").alias("cnt_rev"),
-    )
-    mutual = a.join(b, ["src", "dst"])
-    return mutual.groupBy(F.col("src").alias("node")).agg(
-        F.count(F.lit(1)).alias("two_node_loop_count"),
-        F.sum(F.col("amount") + F.col("amount_rev")).alias("two_node_loop_amount"),
-        F.sum(F.col("cnt") + F.col("cnt_rev")).alias("two_node_loop_tx"),
-    )
-
-
-def triangle_features(
-    edges: DataFrame,
-    orientation: str = "id",
-    broadcast_degrees: bool = True,
-) -> DataFrame:
-    """Directed 3-cycle motif (reference extract_motif_features.py:48-75):
-    cycles a→b→c→a counted once via the minimal vertex of a strict total
-    order; each participant is credited the triangle and the summed
-    amount/count of its 3 edges.
-
-    Both orientation constraints (ord(a)<ord(b), ord(a)<ord(c)) bind
-    edges INCIDENT TO a, so the wedge join pivots on the order-minimal
-    vertex: intermediate = Σ_a d⁺_>(a)·d⁻_>(a), counting only neighbors
-    ABOVE a in the order — about HALF the Σ_b d⁻_<(b)·d⁺(b) a pivot on
-    the middle vertex pays, with no extra joins.
-
-    orientation picks the total order (per-node results are identical —
-    any strict total order counts each cycle exactly once):
-      * "id" (default): ord(v) = v. Zero preparation cost; a mega-hub
-        that happens to sit LOW in the id order keeps a quadratic wedge
-        fan-out (hazard class unchanged, constant halved).
-      * "degree": ord(v) = (total degree, v) — node-iterator-core. A
-        mega-hub is above ~all of its neighbors and generates ~no wedges
-        (the O(m^1.5) bound; the reference whitelists hubs for exactly
-        this reason, extract_motif_features.py:41-44). Costs a degree
-        aggregation + two degree-attach joins; measured ~1.5× slower on
-        a uniform-degree 2M-edge corpus (tools/tri_ab.py), the price of
-        the worst-case guarantee — pick it for power-law graphs.
-    broadcast_degrees: the degree table is node-cardinality, far smaller
-    than the edges it orients, and AQE cannot see that at plan time (it
-    sits behind a fresh shuffle agg) — unhinted, the plan pays two
-    sort-merge shuffles of the EDGES per wedge branch just to attach
-    ranks. Pass False only when even the node table outgrows broadcast.
-    """
-    e = edges.filter(F.col("src") != F.col("dst")).select("src", "dst", "amount", "cnt")
-    if orientation == "degree":
-        deg = (
-            e.select(F.col("src").alias("v")).union(e.select(F.col("dst")))
-            .groupBy("v").agg(F.count(F.lit(1)).alias("__deg__"))
-        )
-        if broadcast_degrees:
-            deg = F.broadcast(deg)
-        ranked = (
-            e.join(deg.withColumnRenamed("v", "src")
-                      .withColumnRenamed("__deg__", "__dsrc__"), "src")
-            .join(deg.withColumnRenamed("v", "dst")
-                     .withColumnRenamed("__deg__", "__ddst__"), "dst")
-            .select(
-                "src", "dst", "amount", "cnt",
-                F.struct(F.col("__dsrc__"), F.col("src")).alias("osrc"),
-                F.struct(F.col("__ddst__"), F.col("dst")).alias("odst"),
-            )
-        )
-    elif orientation == "id":
-        ranked = e.select(
-            "src", "dst", "amount", "cnt",
-            F.col("src").alias("osrc"), F.col("dst").alias("odst"),
-        )
-    else:
-        raise ValueError(f"unknown orientation: {orientation!r}")
-    e1 = ranked.filter(F.col("osrc") < F.col("odst")).select(
-        F.col("src").alias("a"), F.col("dst").alias("b"),
-        F.col("amount").alias("am1"), F.col("cnt").alias("c1"),
-    )
-    e3 = ranked.filter(F.col("odst") < F.col("osrc")).select(
-        F.col("dst").alias("a"), F.col("src").alias("c"),
-        F.col("amount").alias("am3"), F.col("cnt").alias("c3"),
-    )
-    e2 = e.select(F.col("src").alias("b"), F.col("dst").alias("c"),
-                  F.col("amount").alias("am2"), F.col("cnt").alias("c2"))
-    tri = (
-        e1.join(e3, "a")                # wedges centered on the order-min vertex
-        .join(e2, ["b", "c"])           # close the cycle: equi-join on the PAIR key
-        .select(
-            "a", "b", "c",
-            (F.col("am1") + F.col("am2") + F.col("am3")).alias("tri_amount"),
-            (F.col("c1") + F.col("c2") + F.col("c3")).alias("tri_tx"),
-        )
-    )
-    exploded = tri.select(
-        F.explode(F.array("a", "b", "c")).alias("node"), "tri_amount", "tri_tx"
-    )
-    return exploded.groupBy("node").agg(
-        F.count(F.lit(1)).alias("triangle_count"),
-        F.sum("tri_amount").alias("triangle_amount"),
-        F.sum("tri_tx").alias("triangle_tx"),
-    )
-
-
-def _egonet_route_choice(er: DataFrame, auto_ratio: float) -> bool:
-    """Decide min-degree routing from the EXACT intermediate sizes both
-    strategies would produce (one tiny aggregation job over the
-    degree-attached edge frame): plain expansion materializes
-    Σ_edges deg(dst), routing Σ_edges min(deg(src), deg(dst)) — routing
-    is never larger, with equality only when every edge already points at
-    its smaller-degree endpoint. Measured on the non-bipartite 2M-edge
-    bench corpus, routing won 118 s vs 183 s at a row ratio of just 1.04
-    (and 3.3× on a hub corpus), so the default auto_ratio=1.0 routes
-    whenever routing shrinks the intermediate AT ALL and falls back to
-    the single-join plain expansion only when the sizes are identical
-    (e.g. a symmetric/regular graph), where routing's extra union +
-    degree attach buys nothing."""
-    r = er.agg(
-        F.sum("__dd__").alias("plain_rows"),
-        F.sum(F.least("__ds__", "__dd__")).alias("routed_rows"),
-    ).collect()[0]
-    plain, routed = r["plain_rows"] or 0, r["routed_rows"] or 0
-    return plain > auto_ratio * max(routed, 1)
-
-
-def _egonet_m_wedge(
-    e: DataFrame, broadcast_degrees: bool = True, orientation: str = "id"
-) -> DataFrame:
-    """Wedge/triangle formulation of the egonet m-count; returns (v, m).
-
-    Decomposition: a directed non-self edge row (a→b) lies inside ego(v)
-    iff (1) v ∈ {a, b} — every edge row is incident to exactly two egos —
-    or (2) {v,a,b} is a triangle of the undirected simple graph. So
-
-        m(v) = incident_rows(v) + Σ_{triangles {v,b,c}} w(b, c)
-
-    where w(x, y) = number of directed edge rows between x and y (1 or 2
-    on an aggregated edgelist; row multiplicity in general). The triangle
-    sum enumerates each undirected triangle ONCE, pivoting wedges on the
-    order-minimal vertex exactly like triangle_features, and credits all
-    three corners with the directed multiplicity of their OPPOSITE pair.
-
-    Cost: Σ_a C(d₊(a), 2) wedge rows (d₊ = neighbors above a in id
-    order) + one equi-join on the (b, c) pair key — versus the expand
-    path's Σ_edges min(deg) rows through two ego-table joins. On the
-    2M-edge / deg≈200 bench corpus the wedge set (~100M) is ~4× smaller
-    than the routed expansion (~383M) AND skips the 4M-row ego build
-    side, so this is the scale path for dense neighborhoods; a graph
-    whose triangles vastly outnumber min-degree expansions (rare) would
-    prefer expand."""
-    pairs = (
-        e.select(F.least("src", "dst").alias("lo"),
-                 F.greatest("src", "dst").alias("hi"))
-        .groupBy("lo", "hi").agg(F.count(F.lit(1)).alias("w"))
-    )
-    # incident term: each directed row belongs to both endpoint egos
-    inc = (
-        e.select(F.col("src").alias("v")).unionAll(e.select(F.col("dst")))
-        .groupBy("v").agg(F.count(F.lit(1)).alias("__inc__"))
-    )
-    if orientation == "degree":
-        # node-iterator-core: pivot on the order-min vertex of the
-        # (undirected degree, id) total order, so a mega-hub sits above
-        # ~all neighbors and generates ~no wedges (O(m^1.5) wedge bound)
-        # regardless of its position in the id order — same guarantee,
-        # same cost shape, as triangle_features(orientation="degree").
-        # The wedge filter AND the closing-pair key must use the SAME
-        # order, so the hi endpoint's ord struct rides along as ord_hi.
-        deg = (
-            pairs.select(F.col("lo").alias("v"))
-            .unionAll(pairs.select(F.col("hi")))
-            .groupBy("v").agg(F.count(F.lit(1)).alias("__deg__"))
-        )
-        if broadcast_degrees:
-            deg = F.broadcast(deg)
-        ranked = (
-            pairs.join(deg.withColumnRenamed("v", "lo")
-                          .withColumnRenamed("__deg__", "__dlo__"), "lo")
-            .join(deg.withColumnRenamed("v", "hi")
-                     .withColumnRenamed("__deg__", "__dhi__"), "hi")
-        )
-        olo = F.struct(F.col("__dlo__").alias("d"), F.col("lo").alias("i"))
-        ohi = F.struct(F.col("__dhi__").alias("d"), F.col("hi").alias("i"))
-        oriented = ranked.select(
-            F.when(olo < ohi, F.col("lo")).otherwise(F.col("hi")).alias("lo"),
-            F.when(olo < ohi, F.col("hi")).otherwise(F.col("lo")).alias("hi"),
-            F.when(olo < ohi, ohi).otherwise(olo).alias("ord_hi"),
-            "w",
-        )
-    elif orientation == "id":
-        oriented = pairs.select("lo", "hi", F.col("hi").alias("ord_hi"), "w")
-    else:
-        raise ValueError(f"unknown orientation: {orientation!r}")
-    p1 = oriented.select(F.col("lo").alias("a"), F.col("hi").alias("b"),
-                         F.col("ord_hi").alias("ord_b"),
-                         F.col("w").alias("w_ab"))
-    p2 = oriented.select(F.col("lo").alias("a"), F.col("hi").alias("c"),
-                         F.col("ord_hi").alias("ord_c"),
-                         F.col("w").alias("w_ac"))
-    p3 = oriented.select(F.col("lo").alias("b"), F.col("hi").alias("c"),
-                         F.col("w").alias("w_bc"))
-    # wedges on the order-minimal vertex a (ord_b < ord_c orients each
-    # wedge once, in the SAME order that keys the closing pair); the
-    # predicate evaluates inside the self-join, so only C(d₊,2) of the
-    # d₊² generated combinations reach the pair-key join
-    tri = (
-        p1.join(p2, "a").filter(F.col("ord_b") < F.col("ord_c"))
-        .join(p3, ["b", "c"])
-    )
-    credits = tri.select(F.explode(F.array(
-        F.struct(F.col("a").alias("v"), F.col("w_bc").alias("t")),
-        F.struct(F.col("b").alias("v"), F.col("w_ac").alias("t")),
-        F.struct(F.col("c").alias("v"), F.col("w_ab").alias("t")),
-    )).alias("s")).select("s.v", "s.t")
-    t_tbl = credits.groupBy("v").agg(F.sum("t").alias("__t__"))
-    return (
-        inc.join(t_tbl, "v", "left")
-        .select("v", (F.col("__inc__")
-                      + F.coalesce(F.col("__t__"), F.lit(0))).alias("m"))
-    )
-
-
-def egonet_features(
-    edges: DataFrame, route_by_degree: bool | str = True,
-    broadcast_degrees: bool = True, auto_ratio: float = 1.0,
-    method: str = "wedge", orientation: str = "id",
-) -> DataFrame:
-    """1-hop egonet size and density (reference
-    extract_egonet_features.py:37-78): ego(v) = {v} ∪ undirected
-    neighbors; n = |ego|; m = directed non-self edges within ego;
-    density = m / (n·(n−1)).
-
-    Two m-count formulations, identical outputs (pytest-asserted):
-      * method="wedge" (default) — triangle decomposition (see
-        _egonet_m_wedge): m(v) = incident rows + per-triangle
-        opposite-pair multiplicity credits; Σ_a C(d₊(a),2) wedge rows
-        instead of Σ_edges min(deg) expansions (generically ~4× fewer:
-        each wedge is counted once at its order-min pivot, each
-        expansion once per edge). Interleaved A/B (tools/ego_ab.py,
-        identical outputs all arms): 2M-edge bench corpus 34.1 s vs
-        93.3 s routed-expand / 78.3 s via-dst; hub-skew corpus 4.7 s vs
-        11.3 s / 32.8 s. orientation="degree" pins the O(m^1.5) wedge
-        bound for a mega-hub sitting LOW in the id order (hub whitelist
-        is the pipeline's first-line mitigation, as in the reference);
-        route_by_degree/auto_ratio are ignored.
-      * method="expand" — neighbor-pair join: expand each directed edge
-        (u→w) into the candidate egos containing one chosen endpoint,
-        then semi-filter on the other. route_by_degree=True expands each
-        edge through its SMALLER-degree endpoint (Σ min(deg) rows instead
-        of Σ deg); "auto" measures both sizes from the degree table (one
-        tiny job) and routes unless reduction ≤ auto_ratio (default 1.0).
-        Kept as the A/B control and for graphs whose triangle credits
-        vastly outnumber min-degree expansions.
-    """
-    e = edges.filter(F.col("src") != F.col("dst")).select("src", "dst")
-    und = e.select("src", "dst").union(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct()
-    # every node in the graph gets an egonet — including nodes whose only
-    # edge is a self-loop (ego = {v}, n = 1, m = 0)
-    nodes = edges.select(F.col("src").alias("v")).union(
-        edges.select(F.col("dst"))
-    ).distinct()
-    ego = und.select(F.col("src").alias("v"), F.col("dst").alias("member")).union(
-        nodes.select("v", F.col("v").alias("member"))
-    )
-    n_tbl = ego.groupBy("v").agg(F.count(F.lit(1)).alias("n"))
-    if method == "wedge":
-        m_tbl = _egonet_m_wedge(e, broadcast_degrees, orientation)
-        return (
-            n_tbl.join(m_tbl, n_tbl["v"] == m_tbl["v"], "left")
-            .select(
-                n_tbl["v"].alias("node"),
-                F.col("n").cast("long").alias("ego_n"),
-                F.coalesce(F.col("m"), F.lit(0)).cast("long").alias("ego_m"),
-                F.when(
-                    F.col("n") > 1,
-                    F.coalesce(F.col("m"), F.lit(0))
-                    / (F.col("n") * (F.col("n") - 1)),
-                ).otherwise(F.lit(0.0)).alias("ego_density"),
-            )
-        )
-    if method != "expand":
-        raise ValueError(f"unknown egonet method: {method!r}")
-    # m: every directed edge (a→b), a≠b, with both endpoints in ego(v)
-    ea = ego.select("v", F.col("member").alias("a"))
-    eb = ego.select("v", F.col("member").alias("b"))
-    if route_by_degree:
-        degu = und.groupBy(F.col("src").alias("nd")).agg(
-            F.count(F.lit(1)).alias("__deg__")
-        )
-        if broadcast_degrees:
-            degu = F.broadcast(degu)
-        er = (
-            e.join(degu.withColumnRenamed("nd", "src")
-                       .withColumnRenamed("__deg__", "__ds__"), "src")
-            .join(degu.withColumnRenamed("nd", "dst")
-                      .withColumnRenamed("__deg__", "__dd__"), "dst")
-        )
-        if route_by_degree == "auto":
-            route_by_degree = _egonet_route_choice(er, auto_ratio)
-    if route_by_degree:
-        via_dst = (
-            er.filter(F.col("__dd__") <= F.col("__ds__"))
-            .select("src", "dst")
-            .join(eb.withColumnRenamed("b", "dst"), "dst")
-            .join(ea.withColumnRenamed("a", "src"), ["v", "src"], "left_semi")
-            .select("v")
-        )
-        via_src = (
-            er.filter(F.col("__ds__") < F.col("__dd__"))
-            .select("src", "dst")
-            .join(ea.withColumnRenamed("a", "src"), "src")
-            .join(eb.withColumnRenamed("b", "dst"), ["v", "dst"], "left_semi")
-            .select("v")
-        )
-        m_tbl = via_dst.unionAll(via_src).groupBy("v").agg(
-            F.count(F.lit(1)).alias("m")
-        )
-    else:
-        m_tbl = (
-            e.join(eb.withColumnRenamed("b", "dst"), "dst")
-            .join(ea.withColumnRenamed("a", "src"), ["v", "src"], "left_semi")
-            .groupBy("v")
-            .agg(F.count(F.lit(1)).alias("m"))
-        )
-    return (
-        n_tbl.join(m_tbl, "v", "left")
-        .na.fill({"m": 0})
-        .select(
-            F.col("v").alias("node"),
-            F.col("n").cast("long").alias("ego_n"),
-            F.col("m").cast("long").alias("ego_m"),
-            F.when(
-                F.col("n") > 1,
-                F.col("m") / (F.col("n") * (F.col("n") - 1)),
-            ).otherwise(F.lit(0.0)).alias("ego_density"),
-        )
-    )
-
-
 MOTIF_COLUMNS = (
     "two_node_loop_count", "two_node_loop_amount", "two_node_loop_tx",
     "triangle_count", "triangle_amount", "triangle_tx",
@@ -501,21 +157,16 @@ def _motif_credits(
     pairs: DataFrame,
     orientation: str = "id",
     broadcast_degrees: bool = True,
-    join_strategy: str = "shj",
 ) -> DataFrame:
     """Per-node motif credits from a pair table (see pair_table): one
     row per node that has a pair, columns __deg__, __inc__, __t__ and the
     mutual-pair and triangle sums. The kernel behind motif_features.
 
-    Mutual-pair + directed-triangle + egonet features come from ONE
-    triangle enumeration — the EP2 fusion of mutual_pair_features,
-    triangle_features and egonet_features(method="wedge"), which
-    separately pay one reversed-key self-join plus TWO wedge joins over
-    the same edgelist. Outputs are identical per node (pytest-asserted
-    against all three standalone kernels, both orientations).
-
-    How the fusion works — everything derives from the undirected pair
-    table and its per-direction attributes:
+    Mutual-pair (reference extract_motif_features.py:99-112),
+    directed-triangle (:48-75) and egonet (extract_egonet_features.py:
+    37-78) features come from ONE triangle enumeration. Everything
+    derives from the undirected pair table and its per-direction
+    attributes:
 
       * every pair emits two credit rows, one per endpoint: undirected
         degree 1, the incident-edge term w of the egonet m-count, and —
@@ -523,36 +174,45 @@ def _motif_credits(
         tx (no reversed-key join: a mutual pair is a row with c_f, c_r
         both > 0);
       * undirected triangles are enumerated once via the order-minimal
-        wedge pivot (exactly _egonet_m_wedge's join shape: Σ_a C(d₊,2)
-        wedge rows + one (b,c) pair-key close);
+        wedge pivot: Σ_a C(d₊(a),2) wedge rows (d₊ = neighbors above a
+        in the pivot order) + one (b,c) pair-key close;
       * each triangle {a,b,c} emits one credit row per corner carrying
-        BOTH feature families: the egonet m-credit (opposite-pair w, per
-        _egonet_m_wedge's decomposition) and the directed 3-cycle
-        credits — a triangle contains cycle a→b→c→a iff fwd_ab ∧
-        fwd_bc ∧ rev_ac and cycle a→c→b→a iff fwd_ac ∧ rev_bc ∧
-        rev_ab (direction bits read id-canonically: corner x→y exists
-        = fwd when x<y else rev — valid under EITHER pivot order), so
-        per corner: count += cycles, amount/tx += the existing cycles'
-        3-edge sums. This reproduces triangle_features exactly: every
-        directed cycle lives in one undirected triangle, and both credit
-        all 3 participants.
+        BOTH feature families. Egonet: a directed non-self edge row x→y
+        lies inside ego(v) iff v ∈ {x, y} (the incident term) or
+        {v,x,y} is a triangle, so m(v) = inc(v) + Σ_{triangles {v,x,y}}
+        w(x,y), and each corner is credited the directed multiplicity w
+        of its OPPOSITE pair. Directed 3-cycles: a triangle contains
+        cycle a→b→c→a iff fwd_ab ∧ fwd_bc ∧ rev_ac and cycle a→c→b→a
+        iff fwd_ac ∧ rev_bc ∧ rev_ab (direction bits read
+        id-canonically: corner x→y exists = fwd when x<y else rev —
+        valid under EITHER pivot order), so per corner: count +=
+        cycles, amount/tx += the existing cycles' 3-edge sums. Every
+        directed cycle lives in exactly one undirected triangle, so each
+        participant is credited each cycle once.
 
     Pair and triangle credit rows are unioned and summed by ONE
     groupBy(v); a credit a row does not carry is null, which a sum
     skips. Then ego_n = 1 + deg and ego_m = inc + t.
 
-    Cost over a pinned pair table: ONE wedge self-join + pair close
-    (the separate kernels pay two), one groupBy(v) for all nine
-    per-node sums (the separate kernels pay a mutual, a triangle, an
-    egonet and a degree aggregation and join them), and no
-    reversed-key mutual join. On the benchmark's ep2_graph fixture the
+    Cost over a pinned pair table: ONE wedge self-join + pair close,
+    one groupBy(v) for all nine per-node sums, and no reversed-key
+    mutual join. The three standalone kernels it replaced paid a
+    reversed-key self-join plus two wedge joins and four aggregations
+    (BENCH/fused_motif_ab_round3.json: 53.5 s separate vs 44.0 s fused
+    on the 2M-edge corpus). On the benchmark's ep2_graph fixture the
     feature plan has 6 hash exchanges: the two wedge legs, the wedge
     rows and the closing pairs, the credits, and the node table it
     joins to.
 
-    orientation: total order for the wedge pivot, as in
-    triangle_features — "id" (zero prep) or "degree"
-    (node-iterator-core, O(m^1.5) wedge bound under mega-hub skew).
+    orientation: strict total order for the wedge pivot (any such order
+    enumerates each triangle once, so per-node results do not depend on
+    it) — "id" (zero prep; a mega-hub LOW in the id order keeps a
+    quadratic wedge fan-out) or "degree" (node-iterator-core: ord(v) =
+    (pair degree, v), a mega-hub sits above ~all of its neighbors and
+    generates ~no wedges, the O(m^1.5) bound, at the cost of a degree
+    attach). broadcast_degrees: the degree table is node-sized, far
+    smaller than the pairs it orients, and AQE cannot see that at plan
+    time; pass False only when the node table outgrows broadcast.
     """
     def _w(tag: str = ""):
         sfx = f"_{tag}" if tag else ""
@@ -583,27 +243,11 @@ def _motif_credits(
         _credit("lo", **pair_vals), _credit("hi", **pair_vals),
     )).alias("s")).select("s.*")
 
-    # ---- orient the pivot (same machinery as _egonet_m_wedge); pair
-    # attributes stay id-canonical regardless of the pivot order --------
+    # ---- orient the pivot; pair attributes stay id-canonical regardless
+    # of the pivot order ------------------------------------------------
     attrs = ["am_f", "am_r", "c_f", "c_r"]
     if orientation == "degree":
-        deg = _pair_degrees(pairs)
-        if broadcast_degrees:
-            deg = F.broadcast(deg)
-        ranked = (
-            pairs.join(deg.withColumnRenamed("v", "lo")
-                          .withColumnRenamed("__deg__", "__dlo__"), "lo")
-            .join(deg.withColumnRenamed("v", "hi")
-                     .withColumnRenamed("__deg__", "__dhi__"), "hi")
-        )
-        olo = F.struct(F.col("__dlo__").alias("d"), F.col("lo").alias("i"))
-        ohi = F.struct(F.col("__dhi__").alias("d"), F.col("hi").alias("i"))
-        oriented = ranked.select(
-            F.when(olo < ohi, F.col("lo")).otherwise(F.col("hi")).alias("lo"),
-            F.when(olo < ohi, F.col("hi")).otherwise(F.col("lo")).alias("hi"),
-            F.when(olo < ohi, ohi).otherwise(olo).alias("ord_hi"),
-            *attrs,
-        )
+        oriented = _degree_oriented(pairs, broadcast_degrees, *attrs)
     elif orientation == "id":
         # under id order the pivot rank IS the node id — ord_hi would
         # duplicate hi through every wedge row (16 bytes/row with the
@@ -627,20 +271,17 @@ def _motif_credits(
         F.col("lo").alias("b"), F.col("hi").alias("c"),
         *[F.col(c).alias(f"{c}_bc") for c in attrs],
     )
-    # join_strategy="shj" (default): hint both the wedge self-join and the
-    # (b,c) close join to SHUFFLE_HASH. Sort-merge would SORT the wedge
-    # intermediate — Σ_a C(d₊,2) rows, the largest frame this kernel ever
-    # touches (≈25M rows on the 2M-edge bench corpus) — by (b,c) before
-    # closing; the hash build side is only |pairs|/shuffle-partitions rows
-    # per task regardless of corpus size, so the hint holds at 100×: the
-    # build side grows with the EDGE count while the avoided sort grows
-    # with the strictly larger WEDGE count. "smj" keeps Spark's default
-    # (the A/B control arm, tools/fused_ab.py).
-    if join_strategy == "shj":
-        p2 = p2.hint("shuffle_hash")
-        p3 = p3.hint("shuffle_hash")
-    elif join_strategy != "smj":
-        raise ValueError(f"unknown join_strategy: {join_strategy!r}")
+    # Hint both the wedge self-join and the (b,c) close join to
+    # SHUFFLE_HASH. Sort-merge would SORT the wedge intermediate —
+    # Σ_a C(d₊,2) rows, the largest frame this kernel ever touches (≈25M
+    # rows on the 2M-edge bench corpus) — by (b,c) before closing; the
+    # hash build side is only |pairs|/shuffle-partitions rows per task
+    # regardless of corpus size, so the hint holds at 100×: the build
+    # side grows with the EDGE count while the avoided sort grows with
+    # the strictly larger WEDGE count. Sort-merge lost 34.7 s to 26.0 s
+    # (BENCH/fused_shj_ab_round3.json).
+    p2 = p2.hint("shuffle_hash")
+    p3 = p3.hint("shuffle_hash")
     wedge_ord = (
         F.col("b") < F.col("c") if orientation == "id"
         else F.col("ord_b") < F.col("ord_c")
@@ -709,15 +350,14 @@ def _motif_credits(
 
 def _motif_core(
     nodes: DataFrame, pairs: DataFrame, orientation: str,
-    broadcast_degrees: bool, join_strategy: str,
+    broadcast_degrees: bool,
 ) -> DataFrame:
     """nodes' columns + MOTIF_COLUMNS: the node table left-joined to the
     credits on ``node``; a node with no pair (self-loop-only, or isolated
     by hub exclusion) gets zero motifs and ego = {v} (n=1, m=0), as the
     reference's filtered adjacency yields (extract_motif_features.py:
     96-123)."""
-    credits = _motif_credits(pairs, orientation, broadcast_degrees,
-                             join_strategy)
+    credits = _motif_credits(pairs, orientation, broadcast_degrees)
     n_col = F.coalesce(F.col("__deg__"), F.lit(0)) + 1
     m_col = (F.coalesce(F.col("__inc__"), F.lit(0))
              + F.coalesce(F.col("__t__"), F.lit(0)))
@@ -771,6 +411,31 @@ def _pair_degrees(pairs: DataFrame) -> DataFrame:
     )
 
 
+def _degree_oriented(pairs: DataFrame, broadcast_degrees: bool,
+                     *attrs: str) -> DataFrame:
+    """(lo, hi, ord_hi, *attrs): each pair re-keyed so ``lo`` is its
+    lower endpoint under the (pair degree, id) order, with the upper
+    endpoint's order struct as ``ord_hi``; ``attrs`` pass through
+    unchanged (they stay id-canonical)."""
+    deg = _pair_degrees(pairs)
+    if broadcast_degrees:
+        deg = F.broadcast(deg)
+    ranked = (
+        pairs.join(deg.withColumnRenamed("v", "lo")
+                      .withColumnRenamed("__deg__", "__dlo__"), "lo")
+        .join(deg.withColumnRenamed("v", "hi")
+                 .withColumnRenamed("__deg__", "__dhi__"), "hi")
+    )
+    olo = F.struct(F.col("__dlo__").alias("d"), F.col("lo").alias("i"))
+    ohi = F.struct(F.col("__dhi__").alias("d"), F.col("hi").alias("i"))
+    return ranked.select(
+        F.when(olo < ohi, F.col("lo")).otherwise(F.col("hi")).alias("lo"),
+        F.when(olo < ohi, F.col("hi")).otherwise(F.col("lo")).alias("hi"),
+        F.when(olo < ohi, ohi).otherwise(olo).alias("ord_hi"),
+        *attrs,
+    )
+
+
 def _wedge_rows(pairs: DataFrame, orientation: str,
                 broadcast_degrees: bool = True) -> int:
     """Exact wedge-intermediate row count Σ_pivot C(d₊(pivot), 2) the
@@ -778,20 +443,8 @@ def _wedge_rows(pairs: DataFrame, orientation: str,
     under the given orientation — computed from ONE aggregation over the
     node-sized pivot-degree table, no wedge row ever exists."""
     if orientation == "degree":
-        deg = _pair_degrees(pairs)
-        if broadcast_degrees:
-            deg = F.broadcast(deg)
-        ranked = (
-            pairs.join(deg.withColumnRenamed("v", "lo")
-                          .withColumnRenamed("__deg__", "__dlo__"), "lo")
-            .join(deg.withColumnRenamed("v", "hi")
-                     .withColumnRenamed("__deg__", "__dhi__"), "hi")
-        )
-        olo = F.struct(F.col("__dlo__").alias("d"), F.col("lo").alias("i"))
-        ohi = F.struct(F.col("__dhi__").alias("d"), F.col("hi").alias("i"))
-        pivoted = ranked.select(
-            F.when(olo < ohi, F.col("lo")).otherwise(F.col("hi")).alias("p")
-        )
+        pivoted = _degree_oriented(pairs, broadcast_degrees).select(
+            F.col("lo").alias("p"))
     elif orientation == "id":
         pivoted = pairs.select(F.col("lo").alias("p"))
     else:
@@ -808,11 +461,12 @@ def _wedge_rows(pairs: DataFrame, orientation: str,
 
 def estimate_wedges(edges: DataFrame, orientation: str = "id",
                     broadcast_degrees: bool = True) -> int:
-    """Exact row count of the wedge intermediate fused_motif_features /
-    _egonet_m_wedge would shuffle for this edgelist under the given
-    orientation. Cost: the pair aggregation + one node-sized
-    aggregation — run it before pointing the motif kernels at an unknown
-    graph (or pass wedge_budget and let the guard do it for you)."""
+    """Exact row count of the wedge intermediate fused_motif_features
+    would shuffle for this edgelist under the given orientation. Cost:
+    the pair aggregation + one node-sized aggregation — run it before
+    pointing the motif kernel at an unknown graph (or pass wedge_budget
+    and let the guard do it for you). BENCH/dense_guard_r5.json records
+    the fixture whose unguarded wedge shuffle aborted at >60 GB."""
     return _wedge_rows(pair_table(edges), orientation, broadcast_degrees)
 
 
@@ -959,7 +613,6 @@ def motif_features(
     pairs: DataFrame,
     orientation: str = "id",
     broadcast_degrees: bool = True,
-    join_strategy: str = "shj",
     wedge_budget: int | None = None,
     on_guard: Callable[[dict], None] | None = None,
 ) -> DataFrame:
@@ -991,8 +644,7 @@ def motif_features(
     shuffle disk.
     """
     if wedge_budget is None:
-        return _motif_core(nodes, pairs, orientation, broadcast_degrees,
-                           join_strategy)
+        return _motif_core(nodes, pairs, orientation, broadcast_degrees)
     orientation_used, excl, report = motif_wedge_guard(
         pairs, wedge_budget, orientation, broadcast_degrees)
     if on_guard is not None:
@@ -1004,7 +656,7 @@ def motif_features(
                 "rows fits budget %d)", orientation,
                 report["wedge_rows"], wedge_budget)
         return _motif_core(
-            nodes, pairs, orientation_used, broadcast_degrees, join_strategy,
+            nodes, pairs, orientation_used, broadcast_degrees,
         ).withColumn("motif_excluded", F.lit(0))
     log.warning(
         "motif wedge guard: excluded %d hub node(s) (min pair-degree %d) "
@@ -1018,8 +670,7 @@ def motif_features(
         pairs.join(excl.withColumnRenamed("node", "lo"), "lo", "left_anti")
         .join(excl.withColumnRenamed("node", "hi"), "hi", "left_anti")
     )
-    out = _motif_core(nodes, kept, orientation_used, broadcast_degrees,
-                      join_strategy)
+    out = _motif_core(nodes, kept, orientation_used, broadcast_degrees)
     flag = F.broadcast(excl.select(F.col("node").alias("__x__"),
                                    F.lit(1).alias("motif_excluded")))
     out = (
@@ -1038,7 +689,6 @@ def fused_motif_features(
     edges: DataFrame,
     orientation: str = "id",
     broadcast_degrees: bool = True,
-    join_strategy: str = "shj",
     wedge_budget: int | None = None,
     on_guard: Callable[[dict], None] | None = None,
 ) -> DataFrame:
@@ -1055,7 +705,7 @@ def fused_motif_features(
         pairs = pairs.localCheckpoint(eager=True)
     return motif_features(
         node_table(edges).select("node"), pairs, orientation,
-        broadcast_degrees, join_strategy, wedge_budget, on_guard)
+        broadcast_degrees, wedge_budget, on_guard)
 
 
 def connected_components(
@@ -1063,7 +713,6 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 25,
-    min_strategy: str = "agg",
 ) -> DataFrame:
     """Connected components by alternating large-star / small-star:
     (id, component) where component = the order-minimal member.
@@ -1083,38 +732,23 @@ def connected_components(
     analysis itself dominates); swap for reliable `checkpoint(dir)` on a
     real cluster where executor loss mid-algorithm must be survivable.
 
-    min_strategy picks how each half-round computes min(N(u)):
-      * "agg" (default): groupBy(u).agg(min) + join back. The partial
-        aggregation collapses a hub's rows map-side BEFORE the exchange,
-        and the join back is AQE-skew-splittable. This is not just about
-        skewed INPUTS: the algorithm's own converged state of an n-node
-        component IS an n-ary star, so the root's group reaches component
-        size in the closing rounds for EVERY large component — the
-        single-task ceiling is structural, not adversarial.
-      * "window": per-node min via Window.partitionBy(u) — one exchange,
-        no join; measured ~25% faster on a hub-free 2M-edge corpus and
-        even on a 1M-degree-hub corpus (tools/cc_ab.py, interleaved:
-        uniform 13.6 s vs 18.0 s, skew 37.1 s vs 40.3 s) because a
-        1M-row single-task sort is still cheap. Opt in when every
-        component is known to stay far below executor-task memory; the
-        default trades that ~25% for never funneling a 10^9-node
-        component through one task.
-    Both return identical labels (tools/cc_ab.py asserts it before
-    timing).
+    Each half-round computes min(N(u)) as groupBy(u).agg(min) + join
+    back. The partial aggregation collapses a hub's rows map-side BEFORE
+    the exchange, and the join back is AQE-skew-splittable. This is not
+    just about skewed INPUTS: the algorithm's own converged state of an
+    n-node component IS an n-ary star, so the root's group reaches
+    component size in the closing rounds for EVERY large component — a
+    per-node Window min would funnel it through one task. The Window
+    form measured ~25% faster on 2M-edge corpora (BENCH/BASELINE.md, CC
+    min-strategy A/B: 13.6 s vs 18.0 s uniform, 37.1 s vs 40.3 s with a
+    1M-degree hub) and was dropped for that structural single-task
+    ceiling.
 
     Self-loops and isolated mentions still label their node: every id
     appearing in either endpoint column gets a row.
     """
-    from pyspark.sql.window import Window
-
-    if min_strategy not in ("agg", "window"):
-        raise ValueError(f"unknown min_strategy: {min_strategy!r}")
-    w = Window.partitionBy("u")
-
     def attach_min(df: DataFrame) -> DataFrame:
         """df(u, v, …) + column mn = min(v) over u."""
-        if min_strategy == "window":
-            return df.withColumn("mn", F.min("v").over(w))
         mins = df.groupBy("u").agg(F.min("v").alias("mn"))
         return df.join(mins, "u")
 

@@ -181,6 +181,34 @@ def _pyav():
         return None
 
 
+def _decode_container(av, i, payload, stride: int, on_error: str) -> list:
+    """Frame rows (id, frame_idx, n_bytes, sha256, frame) of ONE video
+    container: every ``stride``-th decoded frame as raw rgb24 bytes.
+
+    The rows are buffered and returned only once the whole container
+    decoded. A container that fails part-way yields nothing of what it
+    decoded: with on_error="null" it returns just the marker row
+    (frame_idx = -1, null frame columns), with "raise" the error
+    propagates. ``av`` is the PyAV module (or any object with its
+    ``open`` API)."""
+    import io
+
+    rows = []
+    try:
+        with av.open(io.BytesIO(bytes(payload))) as container:
+            for j, frame in enumerate(container.decode(video=0)):
+                if j % stride:
+                    continue
+                raw = frame.to_ndarray(format="rgb24").tobytes()
+                rows.append((i, j, len(raw), hashlib.sha256(raw).hexdigest(),
+                             raw))
+    except Exception:
+        if on_error == "raise":
+            raise
+        return [(i, -1, None, None, None)]
+    return rows
+
+
 def sample_frames(
     payloads: DataFrame, frame_bytes: int = 32, stride: int = 2,
     fake: bool = True, on_error: str = "raise",
@@ -205,8 +233,9 @@ def sample_frames(
 
     on_error (real path only): ``"raise"`` fails the task on the first
     corrupt container; ``"null"`` emits ONE marker row for it
-    (frame_idx = -1, null frame columns) and keeps demuxing the rest of
-    the batch (r4 advisor). Filter ``frame_idx >= 0`` downstream.
+    (frame_idx = -1, null frame columns) and none of the frames it
+    decoded before failing, and keeps demuxing the rest of the batch.
+    Filter ``frame_idx >= 0`` downstream.
     """
     if on_error not in ("raise", "null"):
         raise ValueError(f"on_error must be 'raise' or 'null', got {on_error!r}")
@@ -218,30 +247,11 @@ def sample_frames(
                 "video codecs unavailable in this environment; "
                 "use fake=True for the deterministic stub container format"
             )
-        import io
-
         for pdf in batches:
-            ids, idxs, lens, hashes, frames = [], [], [], [], []
-            for i, b in zip(pdf["id"], pdf["payload"]):
-                try:
-                    with av.open(io.BytesIO(bytes(b))) as container:
-                        for j, frame in enumerate(container.decode(video=0)):
-                            if j % stride:
-                                continue
-                            raw = frame.to_ndarray(format="rgb24").tobytes()
-                            ids.append(i)
-                            idxs.append(j)
-                            lens.append(len(raw))
-                            hashes.append(hashlib.sha256(raw).hexdigest())
-                            frames.append(raw)
-                except Exception:
-                    if on_error == "raise":
-                        raise
-                    ids.append(i)
-                    idxs.append(-1)
-                    lens.append(None)
-                    hashes.append(None)
-                    frames.append(None)
+            rows = [r for i, b in zip(pdf["id"], pdf["payload"])
+                    for r in _decode_container(av, i, b, stride, on_error)]
+            ids, idxs, lens, hashes, frames = (
+                zip(*rows) if rows else ((),) * 5)
             yield pd.DataFrame({
                 "id": pd.Series(ids, dtype="int64"),
                 "frame_idx": pd.Series(idxs, dtype="int32"),

@@ -42,25 +42,6 @@ def quantile_thresholds(
     return {c: (row[c] if row[c] is not None else 0.0) for c in cols}
 
 
-def robust_stats(df: DataFrame, cols: list[str]) -> dict[str, tuple[float, float]]:
-    """Median + MAD per column, two fused aggregation passes (medians,
-    then MAD of residuals). Returns {col: (median, mad)}."""
-    med_row = df.agg(
-        *[F.expr(f"percentile(`{c}`, 0.5)").alias(c) for c in cols]
-    ).collect()[0]
-    medians = {c: float(med_row[c]) if med_row[c] is not None else 0.0 for c in cols}
-    mad_row = df.agg(
-        *[
-            F.expr(f"percentile(abs(`{c}` - {medians[c]}), 0.5)").alias(c)
-            for c in cols
-        ]
-    ).collect()[0]
-    return {
-        c: (medians[c], float(mad_row[c]) if mad_row[c] is not None else 0.0)
-        for c in cols
-    }
-
-
 def robust_z(col: Column, median: float, mad: float) -> Column:
     """0.6745·(x-med)/MAD — the MAD-consistent robust z-score."""
     denom = mad if mad > 0 else 1.0
@@ -93,8 +74,8 @@ def zscore_cols(df: DataFrame, cols: list[str], suffix: str = "_z") -> DataFrame
 def robust_z_cols(df: DataFrame, cols: list[str], suffix: str = "_rz") -> DataFrame:
     """Median/MAD robust z with ZERO driver actions: median aggregate →
     broadcast; MAD aggregate over the residuals → broadcast; scoring pass.
-    Three scans chained in ONE job (the same scan count robust_stats pays
-    across its two collect() round-trips, minus the driver syncs)."""
+    Three scans chained in ONE job, with no collect() round-trip between
+    the median and the MAD."""
     med = df.agg(
         *[F.expr(f"percentile(`{c}`, 0.5)").alias(f"__med__{c}") for c in cols]
     )
@@ -117,22 +98,6 @@ def robust_z_cols(df: DataFrame, cols: list[str], suffix: str = "_rz") -> DataFr
     return out.drop(
         *[f"__med__{c}" for c in cols], *[f"__mad__{c}" for c in cols]
     )
-
-
-def zscore_stats(df: DataFrame, cols: list[str]) -> dict[str, tuple[float, float]]:
-    """Classic mean + sample std (ddof=1, matching pandas
-    statistical_anomaly_detection.py:6-15) in one fused pass."""
-    aggs = []
-    for c in cols:
-        aggs.append(F.avg(c).alias(f"mean__{c}"))
-        aggs.append(F.stddev_samp(c).alias(f"std__{c}"))
-    row = df.agg(*aggs).collect()[0]
-    out = {}
-    for c in cols:
-        m = row[f"mean__{c}"] or 0.0
-        s = row[f"std__{c}"]
-        out[c] = (float(m), float(s) if s not in (None, 0.0) else 1.0)
-    return out
 
 
 def shuffle_partitions(spark: SparkSession) -> int:

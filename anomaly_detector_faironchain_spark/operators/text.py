@@ -532,6 +532,15 @@ def _char_ngrams(text_col: str, n: int):
     ).otherwise(F.array().cast("array<string>"))
 
 
+_LM_METHODS = ("arrow", "sql")
+
+
+def _check_lm_method(method: str) -> None:
+    if method not in _LM_METHODS:
+        raise ValueError(
+            f"unknown LM method {method!r}; expected one of {_LM_METHODS}")
+
+
 def char_ngram_model(
     ref: DataFrame, text_col: str, n: int = 3, top_k: int = 50_000,
     method: str = "arrow",
@@ -547,7 +556,12 @@ def char_ngram_model(
     over bounded input; the model itself is top_k rows — broadcast-sized
     by construction. Ties in the top_k cut break deterministically
     (count DESC, ngram ASC), so the model is reproducible run-to-run.
+
+    method: "arrow" (default) counts with map-side Counter partials in
+    mapInPandas; "sql" is the pure-expression oracle form (explode +
+    count), O(len²) per document (see _char_ngrams).
     """
+    _check_lm_method(method)
     if method == "arrow":
         import pandas as pd  # local: executor import
 
@@ -646,10 +660,11 @@ def cross_entropy_score(
     round-trips (which the r4 audit measured as ~83% of wall time in the
     pandas-vectorized path). ASCII chunks use the bytes as codepoints
     directly; non-ASCII chunks go through a vectorized UTF-8 decode
-    (_utf8_to_codepoints). method="arrow_pandas" keeps the r4
-    pandas-vectorized kernel (the A/B control); method="arrow_loop"
-    forces the dict-get loop (n > 3 always uses it — the 21-bit pack
-    overflows past 3 chars). method="sql" is the pure-expression oracle
+    (_utf8_to_codepoints); BENCH/lm_arrow_ab_r5.json measured it at
+    5.87 s against 6.10 s for the pandas kernel it replaced and 18.1 s
+    for the dict loop (1M heavy docs). For n > 3 the 21-bit pack
+    overflows, so scoring falls back to that dict-get loop in
+    mapInPandas. method="sql" is the pure-expression oracle
     formulation (explode → broadcast join → map-side-combined
     groupBy(id)); correct but O(len²) in document size from the
     per-element lambda (see char_ngram_model) — small-doc oracle use
@@ -661,7 +676,8 @@ def cross_entropy_score(
     (reference rule_based_anomaly_detection.py's threshold flags) — a
     score distribution to threshold, not a hand predicate.
     """
-    if method in ("arrow", "arrow_pandas", "arrow_loop"):
+    _check_lm_method(method)
+    if method == "arrow":
         import numpy as np
         import pandas as pd
         from pyspark.sql import types as T
@@ -670,14 +686,13 @@ def cross_entropy_score(
                for r in model.select("ngram", "logp").collect()}
         fl = float(floor_logp)
         ln2 = math.log(2.0)
-        # Vectorized paths (n <= 3): each n-gram's codepoints pack
+        # Vectorized path (n <= 3): each n-gram's codepoints pack
         # EXACTLY into one uint64 (unicode < 2^21, so 3·21 = 63 bits) —
         # the model becomes a sorted key array + logp array, and scoring
         # is a rolling shift-or over the batch's codepoints plus one
         # np.searchsorted, no per-character Python. For n > 3 the pack
         # would overflow, so the dict-get loop remains the fallback.
-        vec_ok = n <= 3 and method in ("arrow", "arrow_pandas")
-        # "arrow_loop": force the dict-get loop (A/B probe)
+        vec_ok = n <= 3
         if vec_ok:
             keys = np.fromiter(
                 (_pack_ngram(g, n) for g in lut), dtype=np.uint64, count=len(lut)
@@ -688,74 +703,6 @@ def cross_entropy_score(
             bc = df.sparkSession.sparkContext.broadcast((keys, vals))
         else:
             bc = df.sparkSession.sparkContext.broadcast(lut)
-
-        # Chunk size in CHARS. Vectorizing a whole multi-MB Arrow batch
-        # at once is per-core fast but memory-bandwidth-CATASTROPHIC at
-        # full parallelism: every numpy op round-trips a ~300 MB
-        # temporary through DRAM, and 32 concurrent workers saturate the
-        # bus so hard that wall-time stops improving with cores at all
-        # (measured in the r4 audit: identical ~102 s at 1 task and at
-        # 64 tasks, 18x SLOWER than the dict loop). Chunking to ~128k
-        # chars keeps every intermediate (~1 MB) cache-resident, so
-        # DRAM sees only the compulsory traffic: 38M grams/s single
-        # core and 1.12B grams/s aggregate over 32 procs (near-linear),
-        # ~8.6x the dict loop.
-        _CHUNK_CHARS = 1 << 17
-
-        def score_vec(batches):
-            skeys, svals = bc.value
-            for pdf in batches:
-                texts = [
-                    (i, t) for i, t in zip(pdf["__id__"], pdf["__t__"])
-                    if t is not None and len(t) >= n
-                ]
-                if not texts:
-                    continue
-                n_docs = len(texts)
-                out_m = np.empty(n_docs, dtype=np.int64)
-                out_bits = np.empty(n_docs, dtype=np.float64)
-                di = 0
-                while di < n_docs:
-                    dj, tot = di, 0
-                    while dj < n_docs and tot < _CHUNK_CHARS:
-                        tot += len(texts[dj][1])
-                        dj += 1
-                    # one codepoint buffer per chunk; doc boundaries
-                    # tracked by offsets so rolling n-gram ids never
-                    # straddle documents when segment-summed
-                    blob = "".join(t for _, t in texts[di:dj])
-                    cp = np.frombuffer(
-                        blob.encode("utf-32-le"), dtype=np.uint32
-                    ).astype(np.uint64)
-                    lens = np.fromiter(
-                        (len(t) for _, t in texts[di:dj]),
-                        dtype=np.int64, count=dj - di,
-                    )
-                    offs = np.concatenate([[0], np.cumsum(lens)])
-                    gram = cp[:len(cp) - n + 1] << np.uint64(21 * (n - 1))
-                    for j in range(1, n):
-                        gram |= cp[j:len(cp) - n + 1 + j] << np.uint64(
-                            21 * (n - 1 - j)
-                        )
-                    if len(skeys):
-                        idx = np.searchsorted(skeys, gram)
-                        np.minimum(idx, len(skeys) - 1, out=idx)
-                        lp = svals[idx]
-                        lp[skeys[idx] != gram] = fl
-                    else:
-                        lp = np.full(len(gram), fl)
-                    csum = np.concatenate([[0.0], np.cumsum(lp)])
-                    m = lens - (n - 1)                # grams per doc
-                    starts = offs[:-1]
-                    ssum = csum[starts + m] - csum[starts]
-                    out_m[di:dj] = m
-                    out_bits[di:dj] = np.round(-ssum / m / ln2, 4)
-                    di = dj
-                yield pd.DataFrame({
-                    "id": [i for i, _ in texts],
-                    "n_ngrams": out_m,
-                    "bits_per_ngram": out_bits,
-                })
 
         def score_loop(batches):
             g = bc.value.get
@@ -778,19 +725,20 @@ def cross_entropy_score(
         def score_arrow(rbs):
             """mapInArrow kernel: consume the Arrow string buffers
             directly. The values buffer is the batch's concatenated
-            UTF-8 — one numpy view replaces the pandas->str->''.join->
-            encode chain (the measured ~83% transfer overhead of
-            score_vec). Chunking to ~256 KB of bytes keeps every numpy
-            intermediate cache-resident (same lesson as score_vec)."""
+            UTF-8 — one numpy view replaces a pandas->str->''.join->
+            encode chain."""
             import pyarrow as pa
 
             skeys, svals = bc.value
             # ~256 KB byte chunks: EVERY numpy temporary below is
-            # chunk-sized, never batch-sized — the first version ran a
-            # whole-batch cumsum whose int64 output was 8x the batch
-            # bytes (~300 MB per 37 MB batch) and measured SLOWER than
-            # the pandas kernel it was meant to beat; same lesson as
-            # the r4 audit, enforced per-intermediate this time
+            # chunk-sized, never batch-sized. Whole-batch numpy ops are
+            # per-core fast but saturate memory bandwidth at full
+            # parallelism (the r4 audit measured a whole-batch kernel at
+            # ~102 s on 1 task and on 64 tasks alike, 18x slower than
+            # the dict loop); a whole-batch cumsum here once made an
+            # int64 temporary 8x the batch bytes (~300 MB per 37 MB
+            # batch). Cache-resident chunks leave DRAM only the
+            # compulsory traffic.
             _CHUNK_BYTES = 1 << 18
             for rb in rbs:
                 id_arr, t_arr = rb.column(0), rb.column(1)
@@ -876,10 +824,9 @@ def cross_entropy_score(
         narrow = df.select(
             F.col(id_col).alias("__id__"), F.col(text_col).alias("__t__")
         )
-        if vec_ok and method == "arrow":
+        if vec_ok:
             return narrow.mapInArrow(score_arrow, out_schema)
-        return narrow.mapInPandas(
-            score_vec if vec_ok else score_loop, out_schema)
+        return narrow.mapInPandas(score_loop, out_schema)
 
     grams = _char_ngrams(text_col, n)
     exploded = df.select(

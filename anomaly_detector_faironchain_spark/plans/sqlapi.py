@@ -214,31 +214,3 @@ def address_profile(
             "rules": pack_rules(r),
         },
     }
-
-
-def partition_profile(verdicts: DataFrame, violations: DataFrame,
-                      partition_id: str) -> dict:
-    """/v1/address analogue (reference app.py:103-188): one partition's
-    verdict detail + its violation samples as a JSON-able dict."""
-    checks = [
-        {
-            "check_id": r.check_id,
-            "passed": bool(r.passed),
-            "n_violations": int(r.n_violations),
-            "description": r.description,
-        }
-        for r in verdicts.filter(
-            F.col("partition_id") == partition_id
-        ).collect()
-    ]
-    samples = [
-        {"check_id": r.check_id, "row": r.row_payload}
-        for r in violations.filter(F.col("partition_id") == partition_id)
-        .limit(20).collect()
-    ]
-    return {
-        "partition_id": partition_id,
-        "passed": all(c["passed"] for c in checks) if checks else None,
-        "checks": checks,
-        "violation_samples": samples,
-    }

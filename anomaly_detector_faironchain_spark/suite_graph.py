@@ -138,7 +138,8 @@ FROM nodes n LEFT JOIN loops l ON n.node = l.node
 
 def q_mutual_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _syn_edges(spark, sf_dir)
-    return graph.mutual_pair_features(e).select(
+    out = graph.fused_motif_features(e)
+    return out.filter(F.col("two_node_loop_count") > 0).select(
         "node",
         F.col("two_node_loop_count").cast("long").alias("two_node_loop_count"),
         F.round("two_node_loop_amount", 4).cast("double").alias("two_node_loop_amount"),
@@ -162,7 +163,8 @@ GROUP BY 1
 
 def q_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _syn_edges(spark, sf_dir)
-    return graph.triangle_features(e).select(
+    out = graph.fused_motif_features(e)
+    return out.filter(F.col("triangle_count") > 0).select(
         "node",
         F.col("triangle_count").cast("long").alias("triangle_count"),
         F.round("triangle_amount", 4).cast("double").alias("triangle_amount"),
@@ -196,7 +198,7 @@ FROM x GROUP BY 1
 
 def q_egonet(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _syn_edges(spark, sf_dir)
-    out = graph.egonet_features(e)
+    out = graph.fused_motif_features(e)
     return out.select(
         "node", "ego_n", "ego_m",
         F.round("ego_density", 4).cast("double").alias("ego_density"),

@@ -159,9 +159,9 @@ def cpu_canary(n_procs: int, seconds: float = 2.0) -> float:
     before AND after the suite makes a degraded measurement window
     self-evident in the bench JSON instead of masquerading as a code
     regression. Best-of-2 (the burn itself jitters ±30% second-to-second
-    on this host). Healthy @32 procs with THIS loop shape: ~720-770
-    M iter/s (calibrated 2026-08-18, CANARY_CEILING_MIPS); a run whose
-    canary sits well below that is a contaminated window."""
+    on this host). Healthy @32 procs with THIS loop shape: ~1430-1440
+    M iter/s (BENCH_r05.json, CANARY_CEILING_MIPS); a run whose canary
+    sits well below that is a contaminated window."""
     import subprocess
 
     code = (
@@ -184,7 +184,7 @@ def cpu_canary(n_procs: int, seconds: float = 2.0) -> float:
     return round(best, 1)
 
 
-CANARY_CEILING_MIPS = 770.0  # best healthy-window @32 procs (2026-08-18)
+CANARY_CEILING_MIPS = 1439.4  # best healthy-window @32 procs (BENCH_r05.json)
 
 
 def main() -> None:

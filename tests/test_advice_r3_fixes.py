@@ -135,18 +135,13 @@ def test_cross_entropy_vectorized_matches_dict_loop(spark):
     vec = {(r.id, r.n_ngrams, r.bits_per_ngram)
            for r in text_ops.cross_entropy_score(
                docs, "doc_id", "text", model, n=3).collect()}
-    pdv = {(r.id, r.n_ngrams, r.bits_per_ngram)
-           for r in text_ops.cross_entropy_score(
-               docs, "doc_id", "text", model, n=3,
-               method="arrow_pandas").collect()}
     sql = {(r.id, r.n_ngrams, r.bits_per_ngram)
            for r in text_ops.cross_entropy_score(
                docs, "doc_id", "text", model, n=3, method="sql").collect()}
-    # default "arrow" is now the mapInArrow raw-buffer kernel (r4 judge
-    # item 6); it, the r4 pandas-vectorized arm, and the SQL oracle must
-    # agree to the 4-dp contract — including the astral/CJK rows that
-    # exercise the vectorized UTF-8 decode's 2-4 byte branches
-    assert vec == pdv == sql and {i for i, _, _ in vec} == {1, 2, 3, 4}
+    # default "arrow" is the mapInArrow raw-buffer kernel; it and the SQL
+    # oracle must agree to the 4-dp contract — including the astral/CJK
+    # rows that exercise the vectorized UTF-8 decode's 2-4 byte branches
+    assert vec == sql and {i for i, _, _ in vec} == {1, 2, 3, 4}
 
     # n=4: pack would overflow 64 bits, dict-loop fallback must engage
     m4 = text_ops.char_ngram_model(docs.filter("doc_id <= 2"), "text", n=4,

@@ -105,6 +105,47 @@ def test_sample_frames_on_error_null_emits_marker_row(spark):
     assert bad[0].n_frame_bytes is None and bad[0].frame is None
 
 
+class _FakeAv:
+    """Stands in for the PyAV module: open() returns a container whose
+    decode yields two frames and then raises, as a container truncated
+    mid-stream does."""
+
+    class _Frame:
+        def __init__(self, k):
+            self.k = k
+
+        def to_ndarray(self, format):
+            import numpy as np
+
+            return np.full((2, 2, 3), self.k, dtype=np.uint8)
+
+    class _Container:
+        def __enter__(self):
+            return self
+
+        def __exit__(self, *exc):
+            return False
+
+        def decode(self, video):
+            yield _FakeAv._Frame(1)
+            yield _FakeAv._Frame(2)
+            raise ValueError("truncated stream")
+
+    @staticmethod
+    def open(_buf):
+        return _FakeAv._Container()
+
+
+def test_frame_decode_failing_mid_container_emits_only_the_marker():
+    """A container that fails after two decoded frames yields exactly one
+    marker row and none of its frames under on_error="null"; under
+    "raise" the error propagates. No Spark, no PyAV."""
+    rows = multimodal._decode_container(_FakeAv, 7, b"x", 1, "null")
+    assert rows == [(7, -1, None, None, None)]
+    with pytest.raises(ValueError, match="truncated"):
+        multimodal._decode_container(_FakeAv, 7, b"x", 1, "raise")
+
+
 def test_corpus_report_sample_fraction(spark):
     """Round-4 judge item 7: sampled corpus report — deterministic
     subset, Horvitz-Thompson scaled counts, labelled lower-bound dup

@@ -971,6 +971,17 @@ def test_ngram_lm_arrow_and_sql_methods_agree(spark, docs):
     assert rows(s_sql) == rows(s_arrow)
 
 
+def test_ngram_lm_rejects_unknown_method(spark, docs):
+    """A misspelt method must fail, not fall through to the O(len²) SQL
+    oracle form."""
+    model = text_ops.char_ngram_model(docs, "text", n=3, top_k=50)
+    with pytest.raises(ValueError, match="arow"):
+        text_ops.char_ngram_model(docs, "text", n=3, method="arow")
+    with pytest.raises(ValueError, match="arrow_pandas"):
+        text_ops.cross_entropy_score(docs, "doc_id", "text", model,
+                                     method="arrow_pandas")
+
+
 def test_token_stats_and_classifier_survive_empty_documents(spark):
     """Regression for the ANSI DIVIDE_BY_ZERO abort: an empty document
     (n_chars = 0) must score (0-ratios, quality 0) instead of killing

@@ -87,9 +87,16 @@ def test_node_table_matches_plain_in_out_aggregations(spark):
     assert graph.self_loop_flag(e).columns == ["node", "has_self_loop"]
 
 
+def _fused_rows(e, orientation="id"):
+    return {r.node: r for r in
+            graph.fused_motif_features(e, orientation=orientation).collect()}
+
+
 def test_mutual_pairs(edges):
-    mp = {r.node: r for r in graph.mutual_pair_features(edges).collect()}
+    mp = {n: r for n, r in _fused_rows(edges).items()
+          if r.two_node_loop_count > 0}
     # mutual pairs: a⇄b and b⇄c
+    assert set(mp) == {"a", "b", "c"}
     assert mp["a"].two_node_loop_count == 1
     assert mp["b"].two_node_loop_count == 2
     assert mp["a"].two_node_loop_amount == 15.0 + 7.0
@@ -97,14 +104,14 @@ def test_mutual_pairs(edges):
 
 def test_triangles(edges):
     # directed cycle a→b? no: cycles are a→c→b→a (a→c, c→b, b→a) ✓
-    tf = {r.node: r for r in graph.triangle_features(edges).collect()}
+    tf = {n: r for n, r in _fused_rows(edges).items() if r.triangle_count > 0}
     assert set(tf) == {"a", "b", "c"}
     assert all(tf[n].triangle_count == 1 for n in "abc")
     assert tf["a"].triangle_amount == 1.0 + 2.0 + 7.0
 
 
 def test_egonet(edges):
-    ego = {r.node: r for r in graph.egonet_features(edges).collect()}
+    ego = _fused_rows(edges)
     # ego(a) = {a,b,c}; directed non-self edges within: a→b,b→a,a→c,c→b,b→c = 5
     assert ego["a"].ego_n == 3 and ego["a"].ego_m == 5
     assert ego["a"].ego_density == pytest.approx(5 / 6)
@@ -145,97 +152,57 @@ def test_triangles_orientations_agree(spark):
     df = spark.createDataFrame(rows, "src string, dst string, amount double, ts long")
     e = graph.aggregate_edges(df, "src", "dst", "amount", "ts")
     for orientation in ("id", "degree"):
-        tf = {r.node: r for r in
-              graph.triangle_features(e, orientation=orientation).collect()}
+        tf = {n: r for n, r in _fused_rows(e, orientation).items()
+              if r.triangle_count > 0}
         assert set(tf) == {"x", "y", "z"}
         assert all(tf[n].triangle_count == 1 for n in "xyz")
         assert tf["z"].triangle_amount == pytest.approx(7.0)
         assert tf["z"].triangle_tx == 3
 
 
-def test_egonet_routes_agree_on_hub_graph(spark):
-    """Min-degree routing must produce the identical (n, m, density) as
-    the fixed via-dst expansion — exercised on a hub-and-spoke graph
-    where every edge picks the spoke side, plus a clique where degrees
-    tie and the tiebreak goes via dst."""
+def test_egonet_on_hub_graph(spark):
+    """Hand-checked egonet on a hub-and-spoke graph with a spoke
+    triangle, under both pivot orders."""
     rows = [("hub", f"s{i}", 1.0, i) for i in range(12)]
     rows += [(f"s{i}", "hub", 1.0, 100 + i) for i in range(6)]
     rows += [("s0", "s1", 1.0, 200), ("s1", "s2", 1.0, 201),
              ("s2", "s0", 1.0, 202)]
     df = spark.createDataFrame(rows, "src string, dst string, amount double, ts long")
     e = graph.aggregate_edges(df, "src", "dst", "amount", "ts")
-    a = {r.node: (r.ego_n, r.ego_m, r.ego_density)
-         for r in graph.egonet_features(e, method="expand", route_by_degree=False).collect()}
-    b = {r.node: (r.ego_n, r.ego_m, r.ego_density)
-         for r in graph.egonet_features(e, method="expand", route_by_degree=True).collect()}
-    assert a == b
-    c = {r.node: (r.ego_n, r.ego_m, r.ego_density)
-         for r in graph.egonet_features(e, method="expand", route_by_degree="auto").collect()}
-    assert a == c
-    w = {r.node: (r.ego_n, r.ego_m, r.ego_density)
-         for r in graph.egonet_features(e, method="wedge").collect()}
-    assert a == w
-    # hand check: ego(s0) = {s0, hub, s1, s2}; edges within: hub->s0/s1/s2,
-    # s0/s1/s2->hub, s0->s1, s1->s2, s2->s0 = 9
-    assert a["s0"][0] == 4 and a["s0"][1] == 9
+    want = _motif_reference(e)
+    for orientation in ("id", "degree"):
+        got = _fused_rows(e, orientation)
+        assert {n: (r.ego_n, r.ego_m, r.ego_density)
+                for n, r in got.items()} == {n: w[2] for n, w in want.items()}
+        # ego(s0) = {s0, hub, s1, s2}; edges within: hub->s0/s1/s2,
+        # s0/s1/s2->hub, s0->s1, s1->s2, s2->s0 = 9
+        assert (got["s0"].ego_n, got["s0"].ego_m) == (4, 9)
+        # ego(s11) = {s11, hub}: only hub->s11
+        assert (got["s11"].ego_n, got["s11"].ego_m) == (2, 1)
 
 
-def test_egonet_wedge_matches_expand_on_random_multigraph(spark):
-    """The triangle-decomposition m-count (incident rows + per-triangle
-    opposite-pair multiplicity credits) must equal the expansion count on
-    a random MULTIgraph with self-loops, duplicate rows, and a node whose
-    only edge is a self-loop (ego size 1, m 0)."""
+def test_egonet_matches_reference_on_random_multigraph(spark):
+    """Random MULTIgraph with self-loops, duplicate rows (collapsed by
+    aggregate_edges, the kernel's input contract), and a node whose only
+    edge is a self-loop (ego size 1, m 0): the fused kernel's egonet
+    equals the brute-force definition under both pivot orders."""
     import random
 
     rng = random.Random(7)
     rows = [(f"n{rng.randrange(40)}", f"n{rng.randrange(40)}", 1.0, i)
             for i in range(500)]
     rows += [("n0", "n0", 1.0, 900), ("lonely", "lonely", 1.0, 901)]
-    rows += rows[:40]  # duplicate rows: w(pair) multiplicity > 2
-    df = spark.createDataFrame(
-        rows, "src string, dst string, amount double, ts long")
-    a = {r.node: (r.ego_n, r.ego_m, round(r.ego_density, 9))
-         for r in graph.egonet_features(df, method="expand", route_by_degree=True).collect()}
-    w = {r.node: (r.ego_n, r.ego_m, round(r.ego_density, 9))
-         for r in graph.egonet_features(df, method="wedge").collect()}
-    assert a == w
-    wd = {r.node: (r.ego_n, r.ego_m, round(r.ego_density, 9))
-          for r in graph.egonet_features(
-              df, method="wedge", orientation="degree").collect()}
-    assert a == wd
-    assert a["lonely"] == (1, 0, 0.0)
-
-
-def test_egonet_auto_routing_decision(spark):
-    """'auto' measures both intermediate sizes exactly: routes on a
-    hub-and-spoke graph (min-degree shrinks the expansion 40×), stays
-    plain on a cycle where the sizes are identical and routing's extra
-    union/attach would buy nothing."""
-    from pyspark.sql import functions as F
-    from anomaly_detector_faironchain_spark.operators.graph import (
-        _egonet_route_choice,
-    )
-
-    def er_for(edge_rows):
-        e = spark.createDataFrame(edge_rows, "src string, dst string")
-        und = e.union(e.select(F.col("dst").alias("src"),
-                               F.col("src").alias("dst"))).distinct()
-        degu = und.groupBy(F.col("src").alias("nd")).agg(
-            F.count(F.lit(1)).alias("__deg__"))
-        return (
-            e.join(degu.withColumnRenamed("nd", "src")
-                       .withColumnRenamed("__deg__", "__ds__"), "src")
-            .join(degu.withColumnRenamed("nd", "dst")
-                      .withColumnRenamed("__deg__", "__dd__"), "dst")
-        )
-
-    # spokes point AT the hub: plain via-dst expands every edge through
-    # the deg-40 hub (Σ deg(dst) = 1600), routing through the deg-1 spoke
-    # side (Σ min = 40)
-    hub = [(f"s{i}", "hub") for i in range(40)]
-    assert _egonet_route_choice(er_for(hub), auto_ratio=1.0) is True
-    cycle = [(f"n{i}", f"n{(i + 1) % 20}") for i in range(20)]
-    assert _egonet_route_choice(er_for(cycle), auto_ratio=1.0) is False
+    rows += rows[:40]  # duplicate rows: parallel transfers
+    e = graph.aggregate_edges(
+        spark.createDataFrame(
+            rows, "src string, dst string, amount double, ts long"),
+        "src", "dst", "amount", "ts")
+    want = {n: w[2] for n, w in _motif_reference(e).items()}
+    for orientation in ("id", "degree"):
+        got = {n: (r.ego_n, r.ego_m, r.ego_density)
+               for n, r in _fused_rows(e, orientation).items()}
+        assert got == want
+    assert want["lonely"] == (1, 0, 0.0)
 
 
 def _uf_components(edges):
@@ -345,56 +312,69 @@ def test_pagerank_matches_dense_power_iteration(spark):
     assert abs(sum(got.values()) - 1.0) < 1e-9  # mass conserved
 
 
-def test_connected_components_strategies_agree(spark):
-    """agg (skew-safe default) and window min strategies must label
-    identically — exercised on a hub graph plus chains."""
-    edges = [("hub", f"x{i:03d}") for i in range(50)]
-    edges += [(f"y{i}", f"y{i+1}") for i in range(20)]
-    df = spark.createDataFrame(edges, "src string, dst string")
-    a = {r.id: r.component
-         for r in graph.connected_components(df, min_strategy="agg").collect()}
-    b = {r.id: r.component
-         for r in graph.connected_components(df, min_strategy="window").collect()}
-    assert a == b and len(a) == 51 + 21
+def _motif_reference(e):
+    """Brute-force per-node motif features of an aggregated edgelist,
+    straight from the reference's definitions (extract_motif_features.py,
+    extract_egonet_features.py), in plain Python:
+    {node: ((mutual n, amount, tx), (triangle n, amount, tx),
+    (ego n, ego m, density))}.
 
+      * mutual partners w of v (v→w and w→v), amount and tx summed over
+        both directions of each mutual pair;
+      * directed 3-cycles a→b→c→a, each counted once and credited to all
+        three participants with the amount and tx of its three edges;
+      * ego(v) = {v} ∪ undirected neighbors: n = |ego|, m = directed
+        non-self edges with both ends in ego, density = m / (n(n−1)).
 
-def _motif_reference_frame(df):
-    """Per-node dict of the three standalone kernels' outputs, absent
-    motifs filled with 0 — the contract fused_motif_features unifies."""
-    nodes = {r.node for r in df.select(F.col("src").alias("node")).union(
-        df.select(F.col("dst"))).distinct().collect()}
-    mut = {r.node: (r.two_node_loop_count, r.two_node_loop_amount,
-                    r.two_node_loop_tx)
-           for r in graph.mutual_pair_features(df).collect()}
-    tri = {r.node: (r.triangle_count, r.triangle_amount, r.triangle_tx)
-           for r in graph.triangle_features(df).collect()}
-    ego = {r.node: (r.ego_n, r.ego_m, round(r.ego_density, 9))
-           for r in graph.egonet_features(df, method="wedge").collect()}
-    return {
-        v: (mut.get(v, (0, 0.0, 0)), tri.get(v, (0, 0.0, 0)),
-            ego.get(v, (1, 0, 0.0)))
-        for v in nodes
-    }
+    Self-loops only make their node exist."""
+    rows = e.select("src", "dst", "amount", "cnt").collect()
+    nodes = {x for r in rows for x in (r.src, r.dst)}
+    E = {(r.src, r.dst): (r.amount, r.cnt) for r in rows if r.src != r.dst}
+    out_nb = {v: set() for v in nodes}
+    for u, w in E:
+        out_nb[u].add(w)
+    mut = {v: [0, 0.0, 0] for v in nodes}
+    tri = {v: [0, 0.0, 0] for v in nodes}
+    for (u, w), (am, cnt) in E.items():
+        if (w, u) in E:
+            am_r, cnt_r = E[(w, u)]
+            mut[u][0] += 1
+            mut[u][1] += am + am_r
+            mut[u][2] += cnt + cnt_r
+    for (a, b), (am1, c1) in E.items():
+        for c in out_nb[b]:
+            if a < b and a < c and (c, a) in E:  # each cycle once, at min
+                am2, c2 = E[(b, c)]
+                am3, c3 = E[(c, a)]
+                for v in (a, b, c):
+                    tri[v][0] += 1
+                    tri[v][1] += am1 + am2 + am3
+                    tri[v][2] += c1 + c2 + c3
+    out = {}
+    for v in nodes:
+        ego = {v} | out_nb[v] | {u for (u, w) in E if w == v}
+        n = len(ego)
+        m = sum(1 for (x, y) in E if x in ego and y in ego)
+        out[v] = (tuple(mut[v]), tuple(tri[v]),
+                  (n, m, m / (n * (n - 1)) if n > 1 else 0.0))
+    return out
 
 
 def _motif_fused_frame(df, orientation="id"):
     return {
-        r.node: (
-            (r.two_node_loop_count, r.two_node_loop_amount,
+        n: ((r.two_node_loop_count, r.two_node_loop_amount,
              r.two_node_loop_tx),
             (r.triangle_count, r.triangle_amount, r.triangle_tx),
-            (r.ego_n, r.ego_m, round(r.ego_density, 9)),
-        )
-        for r in graph.fused_motif_features(df, orientation=orientation)
-        .collect()
+            (r.ego_n, r.ego_m, r.ego_density))
+        for n, r in _fused_rows(df, orientation).items()
     }
 
 
-def test_fused_motif_features_matches_standalone_kernels(spark):
-    """One triangle enumeration must reproduce mutual_pair_features,
-    triangle_features AND egonet_features(wedge) exactly — random dense
+def test_fused_motif_features_matches_reference(spark):
+    """One triangle enumeration must reproduce the brute-force mutual
+    pair, directed triangle and egonet definitions exactly — random dense
     directed graph with self-loops and a self-loop-only node, both pivot
-    orientations."""
+    orientations. Integer amounts keep float sums exact in any order."""
     import random
 
     rng = random.Random(11)
@@ -405,15 +385,17 @@ def test_fused_motif_features_matches_standalone_kernels(spark):
         spark.createDataFrame(
             rows, "src string, dst string, amount double, ts long"),
         "src", "dst", "amount", "ts")
-    want = _motif_reference_frame(df)
+    want = _motif_reference(df)
+    assert sum(w[1][0] for w in want.values()) > 0  # the graph has cycles
     assert _motif_fused_frame(df) == want
     assert _motif_fused_frame(df, orientation="degree") == want
-    assert want["lonely"][2] == (1, 0, 0.0)
+    assert want["lonely"] == ((0, 0.0, 0), (0, 0.0, 0), (1, 0, 0.0))
 
 
 def test_fused_motif_features_on_hub_graph(spark):
     """Hub-skew shape (mega-hub low in the id order): degree orientation
-    must agree with id orientation and with the standalone kernels."""
+    must agree with id orientation and with the brute-force reference.
+    Amounts are dyadic, so float sums are exact in any order."""
     rows = [("a_hub", f"x{i:03d}", 1.0, i) for i in range(60)]
     rows += [(f"x{i:03d}", "a_hub", 2.0, 100 + i) for i in range(0, 60, 2)]
     rows += [(f"x{i:03d}", f"x{i+1:03d}", 3.0, 200 + i) for i in range(59)]
@@ -422,6 +404,6 @@ def test_fused_motif_features_on_hub_graph(spark):
         spark.createDataFrame(
             rows, "src string, dst string, amount double, ts long"),
         "src", "dst", "amount", "ts")
-    want = _motif_reference_frame(df)
+    want = _motif_reference(df)
     assert _motif_fused_frame(df) == want
     assert _motif_fused_frame(df, orientation="degree") == want

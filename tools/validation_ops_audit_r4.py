@@ -14,8 +14,9 @@ Audited at the 2M-row heavy bench fixture (~7.3 GB of text, log-uniform
     snapshot commit path writing real multi-GB parquet)
   - render_corpus_report (post-null-lang-fix re-measurement vs the
     r3 number 105.4 s)
-  - cross_entropy_score vectorized vs dict-loop (VERDICT item 6's >=3x
-    throughput claim, measured on 200k heavy docs)
+  - cross_entropy_score throughput on 200k heavy docs (the r4 run also
+    timed the dict loop against it; that arm is deleted and its result
+    stays in BENCH/validation_ops_scale_audit_r4.json)
 
 Usage: python tools/validation_ops_audit_r4.py [out.json]
 """
@@ -209,9 +210,9 @@ def main() -> None:
         "report_chars": len(md),
     }
 
-    # -- cross_entropy_score: vectorized vs dict loop (item 6 evidence) ------
+    # -- cross_entropy_score throughput ---------------------------------------
     # NB: limit() alone collapses to ONE task downstream (GlobalLimit);
-    # repartition so the A/B measures the operator, not a 1/32 core run
+    # repartition so the timing measures the operator, not a 1/32 core run
     sample = df.limit(200_000).select(
         "file_sid", df["content"].alias("text")
     ).repartition(64).cache()
@@ -223,21 +224,16 @@ def main() -> None:
         "sum(greatest(length(text) - 2, 0)) as n"
     ).collect()[0].n
 
-    def ce(meth):
+    def ce():
         out = text_ops.cross_entropy_score(
-            sample, "file_sid", "text", model, n=3, method=meth)
+            sample, "file_sid", "text", model, n=3)
         return out.count()
 
-    ce("arrow")  # warm (vectorized)
-    sec_vec, n_docs = timed(lambda: ce("arrow"))
-    ce("arrow_loop")  # warm (dict-get loop, same model/work)
-    sec_loop, _ = timed(lambda: ce("arrow_loop"))
+    ce()  # warm
+    sec_vec, n_docs = timed(ce)
     report["ops"]["cross_entropy_200k_heavy_docs_n3"] = {
         "vectorized_sec": sec_vec,
         "vectorized_mngrams_per_sec": round(total_ngrams / sec_vec / 1e6, 1),
-        "dict_loop_sec": sec_loop,
-        "dict_loop_mngrams_per_sec": round(total_ngrams / sec_loop / 1e6, 1),
-        "speedup": round(sec_loop / sec_vec, 2),
         "r3_loop_mngrams_per_sec_for_comparison": 140.9,
         "n_docs": n_docs,
     }
