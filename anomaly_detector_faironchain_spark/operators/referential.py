@@ -69,13 +69,12 @@ def check_foreign_key(
     dim: DataFrame,
     dim_cols: list[str],
     partition_id: F.Column,
-    broadcast: bool = True,
-    salt: int = 0,
 ) -> DataFrame:
     """Violating fact rows projected to (partition_id, *fact_cols): the
     one frame both the per-partition counts and the sampled payloads
-    read. ``partition_id`` is evaluated on fact rows."""
-    viol = anti_join_violations(fact, fact_cols, dim, dim_cols, broadcast, salt)
+    read. ``partition_id`` is evaluated on fact rows. The dim side is
+    broadcast (``anti_join_violations``' default)."""
+    viol = anti_join_violations(fact, fact_cols, dim, dim_cols)
     return viol.select(
         partition_id.alias("partition_id"), *[F.col(c) for c in fact_cols]
     )

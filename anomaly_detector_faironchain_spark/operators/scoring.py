@@ -42,12 +42,6 @@ def quantile_thresholds(
     return {c: (row[c] if row[c] is not None else 0.0) for c in cols}
 
 
-def robust_z(col: Column, median: float, mad: float) -> Column:
-    """0.6745·(x-med)/MAD — the MAD-consistent robust z-score."""
-    denom = mad if mad > 0 else 1.0
-    return F.lit(0.6745) * (col - F.lit(median)) / F.lit(denom)
-
-
 def zscore_cols(df: DataFrame, cols: list[str], suffix: str = "_z") -> DataFrame:
     """Z-score columns with ZERO driver actions: the 1-row moment
     aggregate is broadcast-cross-joined into the plan instead of being

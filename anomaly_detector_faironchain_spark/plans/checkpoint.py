@@ -25,6 +25,7 @@ from pyspark.sql.window import Window
 from anomaly_detector_faironchain_spark import __version__
 from anomaly_detector_faironchain_spark.plans.compiler import (
     ValidationResult,
+    constraint_histogram,
     validate_table,
 )
 from anomaly_detector_faironchain_spark.plans.spec import TableSpec
@@ -63,6 +64,19 @@ def write_key_sketches(
     )
 
 
+def _latest_sketches(spark, path: Path) -> DataFrame:
+    """The persisted sketch rows under ``path``, keeping per partition
+    only the latest run's row: a partition re-validated by a later run
+    must not be counted twice."""
+    sk = spark.read.parquet(str(path))
+    return sk.withColumn(
+        "__rn__",
+        F.row_number().over(
+            Window.partitionBy("partition_id").orderBy(F.col("run_id").desc())
+        ),
+    ).filter(F.col("__rn__") == 1).drop("__rn__")
+
+
 def corpus_distinct_estimate(spark, out_dir: str):
     """Merge every persisted partition sketch (across all runs) into one
     corpus-level row: (n_rows, n_partitions, distinct_estimate). Reads
@@ -71,16 +85,7 @@ def corpus_distinct_estimate(spark, out_dir: str):
         merge_sketches,
     )
 
-    path = Path(out_dir) / SKETCH_DIR
-    sk = spark.read.parquet(str(path))
-    # a partition re-validated by a later run keeps only its latest sketch
-    latest = sk.withColumn(
-        "__rn__",
-        F.row_number().over(
-            Window.partitionBy("partition_id").orderBy(F.col("run_id").desc())
-        ),
-    ).filter(F.col("__rn__") == 1).drop("__rn__")
-    return merge_sketches(latest)
+    return merge_sketches(_latest_sketches(spark, Path(out_dir) / SKETCH_DIR))
 
 
 def write_value_sketches(
@@ -120,14 +125,9 @@ def corpus_value_quantiles(spark, out_dir: str, quantiles=None, k: int = 8192):
         kll_quantiles,
     )
 
-    path = Path(out_dir) / VALUE_SKETCH_DIR
-    sk = spark.read.parquet(str(path))
-    latest = sk.withColumn(
-        "__rn__",
-        F.row_number().over(
-            Window.partitionBy("partition_id").orderBy(F.col("run_id").desc())
-        ),
-    ).filter(F.col("__rn__") == 1).drop("__rn__", "run_id", "partition_id")
+    latest = _latest_sketches(spark, Path(out_dir) / VALUE_SKETCH_DIR).drop(
+        "run_id", "partition_id"
+    )
     return kll_quantiles(
         latest, quantiles or LENGTH_QUANTILES, merged=True, k=k
     )
@@ -171,14 +171,9 @@ def corpus_tdigest_quantiles(
         tdigest_quantiles,
     )
 
-    path = Path(out_dir) / TDIGEST_SKETCH_DIR
-    sk = spark.read.parquet(str(path))
-    latest = sk.withColumn(
-        "__rn__",
-        F.row_number().over(
-            Window.partitionBy("partition_id").orderBy(F.col("run_id").desc())
-        ),
-    ).filter(F.col("__rn__") == 1).drop("__rn__", "run_id")
+    latest = _latest_sketches(spark, Path(out_dir) / TDIGEST_SKETCH_DIR).drop(
+        "run_id"
+    )
     return tdigest_quantiles(latest, quantiles, merged=True, delta=delta)
 
 
@@ -454,9 +449,9 @@ def run_with_checkpoint(
     against this run's own histogram (PSI 0, passing) while the parquet
     on disk says it failed.
 
-    Losing an executor fails the run. The scans and the committed frames
-    are pinned by localCheckpoint (see ``validate_table``'s
-    ``eager_warm``), which keeps no lineage to recompute lost blocks
+    Losing an executor fails the run. The scans (``validate_table``'s
+    one eager scan wave) and the committed frames are pinned by
+    localCheckpoint, which keeps no lineage to recompute lost blocks
     from, so a lost executor surfaces as a failed job rather than as a
     silent recomputation with different row ids. The manifests make the
     failure cheap: they are written last, so re-running the same call
@@ -466,7 +461,6 @@ def run_with_checkpoint(
     """
     import dataclasses
 
-    from anomaly_detector_faironchain_spark.operators import drift as drift_ops
     from anomaly_detector_faironchain_spark.plans.spec import Drift, SchemaMatch
 
     t0 = time.time()
@@ -496,13 +490,7 @@ def run_with_checkpoint(
         )
         for d in drifts:
             if d.col not in drift_refs:  # first run: self-baseline
-                drift_refs[d.col] = (
-                    drift_ops.categorical_histogram(scoped, d.col)
-                    if d.categorical
-                    else drift_ops.numeric_histogram(
-                        scoped, d.col, d.bins, d.lo, d.hi
-                    )
-                )
+                drift_refs[d.col] = constraint_histogram(scoped, d)
 
     if track_schema:
         ref_fields = load_schema_reference(out_dir)

@@ -15,12 +15,14 @@ constraints it contains):
 plus one scan per FunctionalDependency, CountMatch, MonotonicPerKey,
 Benford, exact CardinalityBounds and DistributionOutlier.
 
-Every scan is declared before any of them runs and pinned once
-(``_ScanWave``); the verdict and violation plans read only the pins.
-Count-type verdicts — row checks, Unique (duplicates plus key nulls),
-ForeignKey, FunctionalDependency and MonotonicPerKey — come from ONE
-count table: the union of (partition_id, check_id, n) projections of
-the pins, summed per key behind a single aggregate Exchange.
+Every scan is declared before any of them runs, then all are pinned in
+ONE concurrent wave of ``localCheckpoint(eager=True)`` jobs
+(``_ScanWave``); the verdict and violation plans read only the pinned
+blocks. Count-type verdicts — row checks, Unique (duplicates plus key
+nulls), ForeignKey, FunctionalDependency and MonotonicPerKey — come from
+ONE count table: the union of (partition_id, check_id, n) projections of
+the pins, summed per key behind a single aggregate Exchange. Every
+verdict row is built by ``_verdict_rows``.
 
 The reference ran each assertion as its own full pandas scan
 (etl/test.py:60-128); at 10^12 rows fusing them is the difference between
@@ -33,7 +35,7 @@ from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass, field
 from functools import reduce
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from anomaly_detector_faironchain_spark.operators import drift as drift_ops
@@ -56,30 +58,22 @@ from anomaly_detector_faironchain_spark.plans.spec import (
     Unique,
 )
 
-VERDICT_COLS = [
-    "table",
-    "partition_id",
-    "check_id",
-    "passed",
-    "metric",
-    "threshold",
-    "n_violations",
-    "description",
-]
-
-VIOLATION_COLS = ["table", "partition_id", "check_id", "description", "row_payload"]
+VERDICT_SCHEMA = (
+    "table string, partition_id string, check_id string, passed boolean, "
+    "metric double, threshold double, n_violations long, description string"
+)
+VIOLATION_SCHEMA = (
+    "table string, partition_id string, check_id string, "
+    "description string, row_payload string"
+)
 
 
 def release(frame: DataFrame) -> None:
-    """Free the blocks pinning ``frame``. ``DataFrame.unpersist()`` drops
-    a persist() but never reaches a localCheckpoint: its blocks belong to
-    the RDD under the frame's ``LogicalRDD`` leaf, which is unpersisted
-    here. A released checkpoint can no longer be read."""
-    plan = frame._jdf.queryExecution().logical()
-    if plan.getClass().getSimpleName() == "LogicalRDD":
-        plan.rdd().unpersist(False)
-    else:
-        frame.unpersist()
+    """Free the blocks pinning the localCheckpoint ``frame``.
+    ``DataFrame.unpersist()`` never reaches them: they belong to the RDD
+    under the frame's ``LogicalRDD`` leaf, which is unpersisted here. A
+    released checkpoint can no longer be read."""
+    frame._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
 @dataclass
@@ -93,16 +87,10 @@ class ValidationResult:
     # snapshot the NEXT run validates against; persisted by
     # checkpoint.write_drift_references
     drift_histograms: dict[str, DataFrame] = field(default_factory=dict)
-    # the pinned full violation scan shared by verdicts AND violations
-    # (None when materialize_violations=False)
-    row_violations: DataFrame | None = None
     # every frame pinned for this result (the scan pins of validate_table,
     # the commit pins of checkpoint.run_with_checkpoint) — release with
     # unpersist() when done
     cached_frames: list[DataFrame] = field(default_factory=list)
-    # True when validate_table's eager_warm already computed every pinned
-    # scan — materialize() then skips straight to the final two jobs
-    warmed: bool = False
 
     def passed(self) -> bool:
         return self.verdicts.filter(~F.col("passed")).limit(1).count() == 0
@@ -118,24 +106,9 @@ class ValidationResult:
         """Evaluate verdicts and violations CONCURRENTLY (two Spark jobs
         submitted from two driver threads): the scheduler fills one job's
         stage tails with the other's tasks, removing the serial gap two
-        back-to-back actions would leave.
-
-        The cached input scans are warmed first, CONCURRENTLY with each
-        other: they are independent full passes over the input, so
-        overlapping them fills each other's stage tails, and warming
-        before the consumer jobs prevents two uncached concurrent
-        consumers of one persisted frame from both computing its
-        partitions (RDD cache locking is best-effort). Skipped when
-        validate_table's eager_warm already did it (warmed=True).
-        Returns (verdict_rows, n_violation_rows)."""
-        if not self.warmed:
-            targets = self.cached_frames or [
-                f for f in (self.profile, self.row_violations) if f is not None
-            ]
-            with ThreadPoolExecutor(max(2, len(targets))) as ex:
-                for w in [ex.submit(t.count) for t in targets]:
-                    w.result()
-            self.warmed = True
+        back-to-back actions would leave. Both read only the scans that
+        validate_table already pinned. Returns (verdict_rows,
+        n_violation_rows)."""
         with ThreadPoolExecutor(2) as ex:
             fv = ex.submit(self.verdicts.collect)
             fx = ex.submit(self.violations.count)
@@ -145,15 +118,14 @@ class ValidationResult:
 class _ScanWave:
     """Pins each full-input scan of one validate_table call once.
 
-    Scans are declared with ``pin`` and run together by ``frames``.
-    eager: each pin is a ``localCheckpoint(eager=True)``, all submitted
-    at once to one thread pool, so the scans run as one concurrent wave
-    and the plans built on them read blocks, not lineage (a checkpoint
-    adds no Exchange and no InMemoryRelation subtree). Otherwise each pin
-    is a lazy ``persist()`` that its first consumer computes."""
+    Scans are declared with ``pin`` and run together by ``frames``: each
+    pin is a ``localCheckpoint(eager=True)``, all submitted at once to
+    one thread pool, so the scans run as one concurrent wave that fills
+    its own stage tails, and the plans built on them read blocks, not
+    lineage (a checkpoint adds no Exchange and no InMemoryRelation
+    subtree)."""
 
-    def __init__(self, eager: bool):
-        self.eager = eager
+    def __init__(self):
         self.pins: list[tuple[Future, object]] = []
 
     def pin(self, frame) -> Future:
@@ -171,20 +143,14 @@ class _ScanWave:
         def run(fut: Future, frame) -> None:
             try:
                 f = frame() if callable(frame) else frame
-                fut.set_result(
-                    f.localCheckpoint(eager=True) if self.eager else f.persist()
-                )
+                fut.set_result(f.localCheckpoint(eager=True))
             except Exception as e:  # noqa: BLE001 — re-raised below
                 fut.set_exception(e)
 
-        if self.eager:
-            # submitted in declaration order: a pin waits only on earlier ones
-            with ThreadPoolExecutor(len(self.pins)) as ex:
-                for p in self.pins:
-                    ex.submit(run, *p)
-        else:
+        # submitted in declaration order: a pin waits only on earlier ones
+        with ThreadPoolExecutor(len(self.pins)) as ex:
             for p in self.pins:
-                run(*p)
+                ex.submit(run, *p)
         futs = [fut for fut, _ in self.pins]
         failed = [f for f in futs if f.exception() is not None]
         if failed:
@@ -193,6 +159,78 @@ class _ScanWave:
                     release(f.result())
             failed[0].result()
         return [f.result() for f in futs]
+
+
+def _verdict_rows(
+    frame: DataFrame,
+    table: str,
+    check_id,
+    description,
+    passed: Column,
+    metric: Column,
+    threshold: float,
+    n_violations: Column | None = None,
+) -> DataFrame:
+    """One verdict row per row of ``frame`` (which carries
+    ``partition_id``). ``check_id`` and ``description`` are strings or
+    columns; ``n_violations`` defaults to 0 for distribution-level
+    checks."""
+    if isinstance(check_id, str):
+        check_id = F.lit(check_id)
+    if isinstance(description, str):
+        description = F.lit(description)
+    if n_violations is None:
+        n_violations = F.lit(0).cast("long")
+    return frame.select(
+        F.lit(table).alias("table"),
+        "partition_id",
+        check_id.alias("check_id"),
+        passed.alias("passed"),
+        metric.cast("double").alias("metric"),
+        F.lit(float(threshold)).alias("threshold"),
+        n_violations.alias("n_violations"),
+        description.alias("description"),
+    )
+
+
+def constraint_histogram(
+    df: DataFrame, c, partition_col: str | None = None
+) -> DataFrame:
+    """(group_id?, bucket, cnt) histogram of a Drift or
+    DistributionOutlier column: its category values, or ``bins``
+    equi-width buckets over [lo, hi]; grouped when ``partition_col`` is
+    given."""
+    if c.categorical:
+        return drift_ops.categorical_histogram(df, c.col, partition_col)
+    return drift_ops.numeric_histogram(
+        df, c.col, c.bins, c.lo, c.hi, partition_col
+    )
+
+
+def _global_histogram(hist: DataFrame, by_group: bool) -> DataFrame:
+    """The (bucket, cnt) histogram of the whole table."""
+    if by_group:
+        return hist.groupBy("bucket").agg(F.sum("cnt").alias("cnt"))
+    return hist
+
+
+def _score_by_partition(
+    hist: DataFrame, ref: DataFrame, score, by_group: bool
+) -> DataFrame:
+    """Score each partition's histogram against the global (bucket, cnt)
+    histogram ``ref`` with ``score`` (``drift_ops.psi`` or ``ks``).
+    Grouped, ``ref`` is replicated per group (the normalized join needs
+    matched shapes, so it is crossed with the distinct groups) and
+    ``group_id`` becomes ``partition_id``; otherwise the one score row is
+    the WHOLE_TABLE partition."""
+    if not by_group:
+        return score(hist, ref, by_group=False).withColumn(
+            "partition_id", F.lit(stats.WHOLE_TABLE)
+        )
+    ref_g = hist.select("group_id").distinct().crossJoin(F.broadcast(ref))
+    return score(hist, ref_g, by_group=True).withColumnRenamed(
+        "group_id", "partition_id"
+    )
 
 
 def _count_verdicts(
@@ -209,22 +247,19 @@ def _count_verdicts(
         F.lit(0).cast("long").alias("n"),
     )
     n = F.col("n")
-    return (
+    return _verdict_rows(
         reduce(DataFrame.unionByName, parts, grid)
         .groupBy("partition_id", "check_id")
-        .agg(F.sum("n").alias("n"))
-        .select(
-            F.lit(spec.name).alias("table"),
-            "partition_id",
-            "check_id",
-            (n == 0).alias("passed"),
-            n.cast("double").alias("metric"),
-            F.lit(0.0).alias("threshold"),
-            n.alias("n_violations"),
-            F.create_map(*[F.lit(x) for kv in desc.items() for x in kv])[
-                F.col("check_id")
-            ].alias("description"),
-        )
+        .agg(F.sum("n").alias("n")),
+        spec.name,
+        F.col("check_id"),
+        F.create_map(*[F.lit(x) for kv in desc.items() for x in kv])[
+            F.col("check_id")
+        ],
+        passed=n == 0,
+        metric=n,
+        threshold=0.0,
+        n_violations=n,
     )
 
 
@@ -298,31 +333,26 @@ def validate_table(
     drift_refs: dict[str, DataFrame] | None = None,
     materialize_violations: bool = True,
     violation_limit_per_check: int | None = 1000,
-    broadcast_refs: bool = True,
-    fk_salt: int = 0,
-    eager_warm: bool = True,
 ) -> ValidationResult:
     """Run the full compiled suite for one table.
 
-    refs: {ref_table_name: DataFrame} for ForeignKey constraints.
+    refs: {ref_table_name: DataFrame} for ForeignKey and CountMatch
+      constraints.
     drift_refs: {col: reference histogram DataFrame (bucket, cnt)} for
       Drift constraints — typically the previous run's histogram loaded
       from the checkpoint dir.
-    eager_warm: pin every full-input scan with
-      ``localCheckpoint(eager=True)``, all submitted at once from one
-      thread pool (``_ScanWave``): the profile, the row violations, each
-      FK anti-join, each FD's violating groups, each Unique's duplicate
-      pass and the other per-constraint scans run as one concurrent wave
-      that fills its own stage tails, and the verdict and violation jobs
-      then read checkpointed blocks only. An approx_screen Unique
-      collects its suspects from the pinned profile before its
-      duplicate pass. The pins have no lineage: a lost executor fails
-      the next read of the result instead of recomputing it.
-      eager_warm=False pins with a lazy ``persist()`` instead and runs
-      no scan (an approx_screen Unique still collects its suspects);
-      ``multi.validate_suite`` then warms several tables' scans at once
-      through ``ValidationResult.materialize``, and the suite queries
-      build plans over the result without running it.
+
+    Every full-input scan — the profile, the row violations, each
+    Unique's duplicate pass, each FK anti-join, each FD's violating
+    groups and the other per-constraint scans — is pinned with
+    ``localCheckpoint(eager=True)``, all submitted at once from one
+    thread pool (``_ScanWave``). They run as one concurrent wave before
+    this returns, and the returned verdict and violation frames read the
+    checkpointed blocks only. An approx_screen Unique collects its
+    suspects from the pinned profile before its duplicate pass. The pins
+    have no lineage: a lost executor fails the next read of the result
+    instead of recomputing it. Release them with
+    ``ValidationResult.unpersist``.
     """
     refs = refs or {}
     drift_refs = drift_refs or {}
@@ -336,7 +366,7 @@ def validate_table(
             raise ValueError(f"missing drift reference histogram for {d.col}")
 
     # Declare every full-input scan, then pin them all in one wave.
-    wave = _ScanWave(eager_warm)
+    wave = _ScanWave()
 
     # Pass 1: fused profile (one row per partition), read by several
     # verdict builders. When the row-violation pass runs
@@ -374,13 +404,7 @@ def validate_table(
     fk_pins = []
     for fk in spec.by_type(ForeignKey):
         keys = referential.check_foreign_key(
-            df,
-            list(fk.cols),
-            refs[fk.ref_table],
-            list(fk.ref_cols),
-            part,
-            broadcast=broadcast_refs,
-            salt=fk_salt,
+            df, list(fk.cols), refs[fk.ref_table], list(fk.ref_cols), part
         )
         if not materialize_violations:
             keys = keys.groupBy("partition_id").agg(
@@ -443,32 +467,17 @@ def validate_table(
         for cb in spec.by_type(CardinalityBounds)
     ]
 
-    # Fleet-relative distribution outliers: one histogram pass per
-    # constraint (groupBy(partition, bucket), map-side combined); the
-    # fleet reference is the SAME pinned frame summed over groups, so
-    # unlike Drift no external snapshot is needed.
-    do_pins = []
-    for do in spec.by_type(DistributionOutlier):
-        if do.categorical:
-            do_hist = drift_ops.categorical_histogram(
-                df, do.col, spec.partition_col
-            )
-        else:
-            do_hist = drift_ops.numeric_histogram(
-                df, do.col, do.bins, do.lo, do.hi, spec.partition_col
-            )
-        do_pins.append((do, wave.pin(do_hist)))
-
-    # Pass 4: one small histogram row per (group, bucket) per Drift column
-    drift_pins = []
-    for d in spec.by_type(Drift):
-        if d.categorical:
-            cur = drift_ops.categorical_histogram(df, d.col, spec.partition_col)
-        else:
-            cur = drift_ops.numeric_histogram(
-                df, d.col, d.bins, d.lo, d.hi, spec.partition_col
-            )
-        drift_pins.append((d, wave.pin(cur)))
+    # Pass 4 (and fleet-relative distribution outliers): one small
+    # histogram row per (group, bucket) per Drift or DistributionOutlier
+    # constraint (groupBy(partition, bucket), map-side combined).
+    do_pins = [
+        (do, wave.pin(constraint_histogram(df, do, spec.partition_col)))
+        for do in spec.by_type(DistributionOutlier)
+    ]
+    drift_pins = [
+        (d, wave.pin(constraint_histogram(df, d, spec.partition_col)))
+        for d in spec.by_type(Drift)
+    ]
 
     cached_frames = wave.frames()
     profile = profile_pin.result()
@@ -481,12 +490,12 @@ def validate_table(
 
     # Pass 0 (metadata-only): schema contracts. Verdicts derive from
     # df.schema — the Catalyst schema known from the parquet footer /
-    # catalog before any job runs — so a spec holding ONLY SchemaMatch
-    # constraints reads no data in its verdict plan (with eager_warm the
-    # profile pin is still computed). Declared DDL strings normalize
-    # through Spark's own type parser, so 'long' == 'bigint' and nested
-    # types compare structurally. partition_id is '__schema__': the
-    # schema is a table property, not a per-partition one.
+    # catalog before any job runs — so the verdict plan of a spec holding
+    # ONLY SchemaMatch constraints reads no data (the wave still pins the
+    # profile). Declared DDL strings normalize through Spark's own type
+    # parser, so 'long' == 'bigint' and nested types compare
+    # structurally. partition_id is '__schema__': the schema is a table
+    # property, not a per-partition one.
     sm_list = spec.by_type(SchemaMatch)
     if sm_list:
         import json as _json
@@ -527,18 +536,13 @@ def validate_table(
                         sort_keys=True,
                     ),
                 ))
-        verdict_parts.append(spark.createDataFrame(
-            sm_verdict_rows,
-            "table string, partition_id string, check_id string, "
-            "passed boolean, metric double, threshold double, "
-            "n_violations long, description string",
-        ))
+        verdict_parts.append(
+            spark.createDataFrame(sm_verdict_rows, VERDICT_SCHEMA)
+        )
         if materialize_violations and sm_viol_rows:
-            violation_parts.append(spark.createDataFrame(
-                sm_viol_rows,
-                "table string, partition_id string, check_id string, "
-                "description string, row_payload string",
-            ))
+            violation_parts.append(
+                spark.createDataFrame(sm_viol_rows, VIOLATION_SCHEMA)
+            )
 
     def payloads(frame: DataFrame, c, payload: list) -> DataFrame:
         """Violation rows of check ``c``: one JSON payload per row."""
@@ -554,6 +558,11 @@ def validate_table(
         if violation_limit_per_check:
             return frame.limit(violation_limit_per_check)
         return frame
+
+    def verdict(frame: DataFrame, c, passed, metric, threshold, n=None):
+        """The verdict rows of constraint ``c``, one per frame row."""
+        return _verdict_rows(frame, spec.name, c.check_id(), c.description(),
+                             passed, metric, threshold, n)
 
     # The count table: every count-type verdict (row checks, Unique with
     # its key nulls, ForeignKey, FunctionalDependency, MonotonicPerKey)
@@ -629,21 +638,14 @@ def validate_table(
             F.count(F.lit(1)).alias("__n__"),
             F.sum(F.abs(F.col("diff"))).alias("__rows_off__"),
         )
-        verdict_parts.append(
-            all_parts.join(cm_counts, "partition_id", "full_outer")
-            .select(
-                F.lit(spec.name).alias("table"),
-                "partition_id",
-                F.lit(cm.check_id()).alias("check_id"),
-                (F.coalesce(F.col("__n__"), F.lit(0)) == 0).alias("passed"),
-                F.coalesce(F.col("__rows_off__"), F.lit(0))
-                .cast("double")
-                .alias("metric"),
-                F.lit(0.0).alias("threshold"),
-                F.coalesce(F.col("__n__"), F.lit(0)).alias("n_violations"),
-                F.lit(cm.description()).alias("description"),
-            )
-        )
+        n_off = F.coalesce(F.col("__n__"), F.lit(0))
+        verdict_parts.append(verdict(
+            all_parts.join(cm_counts, "partition_id", "full_outer"), cm,
+            passed=n_off == 0,
+            metric=F.coalesce(F.col("__rows_off__"), F.lit(0)),
+            threshold=0.0,
+            n=n_off,
+        ))
         if materialize_violations:
             violation_parts.append(payloads(sample(cm_groups), cm, [
                 *map(F.col, cm.group_cols),
@@ -656,44 +658,28 @@ def validate_table(
     # partition from the pinned one-row-per-partition MAD frame. A
     # partition with no digit-bearing rows passes vacuously.
     for bf, pin in bf_pins:
-        bf_mad = pin.result()
-        verdict_parts.append(
-            all_parts.join(bf_mad, "partition_id", "left")
-            .select(
-                F.lit(spec.name).alias("table"),
-                "partition_id",
-                F.lit(bf.check_id()).alias("check_id"),
-                F.coalesce(
-                    F.col("mad") <= F.lit(float(bf.threshold)), F.lit(True)
-                ).alias("passed"),
-                F.coalesce(F.col("mad"), F.lit(0.0))
-                .cast("double")
-                .alias("metric"),
-                F.lit(float(bf.threshold)).alias("threshold"),
-                F.lit(0).cast("long").alias("n_violations"),
-                F.lit(bf.description()).alias("description"),
-            )
-        )
+        verdict_parts.append(verdict(
+            all_parts.join(pin.result(), "partition_id", "left"), bf,
+            passed=F.coalesce(
+                F.col("mad") <= F.lit(float(bf.threshold)), F.lit(True)
+            ),
+            metric=F.coalesce(F.col("mad"), F.lit(0.0)),
+            threshold=bf.threshold,
+        ))
 
     # Pass 1b: freshness — straight off the fused profile's max()
     # aggregate; a partition with no non-null values FAILS (metric null
     # → staleness indistinguishable from a stopped feed; see spec).
     for fr in spec.by_type(Freshness):
         fmax = F.col(f"freshness_max__{fr.check_id()}")
-        verdict_parts.append(
-            profile.select(
-                F.lit(spec.name).alias("table"),
-                "partition_id",
-                F.lit(fr.check_id()).alias("check_id"),
-                F.coalesce(
-                    fmax >= F.lit(fr.as_of - fr.max_age), F.lit(False)
-                ).alias("passed"),
-                (F.lit(fr.as_of) - fmax).cast("double").alias("metric"),
-                F.lit(float(fr.max_age)).alias("threshold"),
-                F.lit(0).cast("long").alias("n_violations"),
-                F.lit(fr.description()).alias("description"),
-            )
-        )
+        verdict_parts.append(verdict(
+            profile, fr,
+            passed=F.coalesce(
+                fmax >= F.lit(fr.as_of - fr.max_age), F.lit(False)
+            ),
+            metric=F.lit(fr.as_of) - fmax,
+            threshold=fr.max_age,
+        ))
 
     # Pass 1c: quantile bounds — straight off the fused profile's
     # percentile_approx aggregate; a partition with no non-null values
@@ -702,20 +688,12 @@ def validate_table(
         qm = F.col(stats.quantile_metric_col(qb))
         lo_ok = F.lit(True) if qb.lo is None else qm >= F.lit(float(qb.lo))
         hi_ok = F.lit(True) if qb.hi is None else qm <= F.lit(float(qb.hi))
-        verdict_parts.append(
-            profile.select(
-                F.lit(spec.name).alias("table"),
-                "partition_id",
-                F.lit(qb.check_id()).alias("check_id"),
-                F.coalesce(lo_ok & hi_ok, F.lit(True)).alias("passed"),
-                qm.cast("double").alias("metric"),
-                F.lit(
-                    float(qb.hi if qb.hi is not None else (qb.lo or 0.0))
-                ).alias("threshold"),
-                F.lit(0).cast("long").alias("n_violations"),
-                F.lit(qb.description()).alias("description"),
-            )
-        )
+        verdict_parts.append(verdict(
+            profile, qb,
+            passed=F.coalesce(lo_ok & hi_ok, F.lit(True)),
+            metric=qm,
+            threshold=qb.hi if qb.hi is not None else (qb.lo or 0.0),
+        ))
 
     # Pass 1e: correlation bounds — straight off the fused profile's
     # corr() co-moment aggregate; undefined correlation (metric null:
@@ -729,21 +707,15 @@ def validate_table(
             & (F.col(f"corr_bmin__{cid}") < F.col(f"corr_bmax__{cid}"))
         )
         cm = F.when(defined, F.col(f"corr__{cid}"))
-        verdict_parts.append(
-            profile.select(
-                F.lit(spec.name).alias("table"),
-                "partition_id",
-                F.lit(co.check_id()).alias("check_id"),
-                F.coalesce(
-                    cm.between(F.lit(float(co.lo)), F.lit(float(co.hi))),
-                    F.lit(bool(co.allow_undefined)),
-                ).alias("passed"),
-                cm.cast("double").alias("metric"),
-                F.lit(float(co.hi)).alias("threshold"),
-                F.lit(0).cast("long").alias("n_violations"),
-                F.lit(co.description()).alias("description"),
-            )
-        )
+        verdict_parts.append(verdict(
+            profile, co,
+            passed=F.coalesce(
+                cm.between(F.lit(float(co.lo)), F.lit(float(co.hi))),
+                F.lit(bool(co.allow_undefined)),
+            ),
+            metric=cm,
+            threshold=co.hi,
+        ))
 
     # Pass 1c/2d: cardinality bounds — approx mode reads the profile's
     # HLL estimate; exact mode joins the pinned two-level distinct
@@ -768,29 +740,18 @@ def validate_table(
             hi = float("inf") if cb.hi_abs is None else float(cb.hi_abs)
             metric = nd.cast("double")
             passed = metric.between(F.lit(lo), F.lit(hi))
-            threshold = F.lit(hi)
+            threshold = hi
         else:
             ratio = F.when(F.col("__nn__") > 0, nd / F.col("__nn__"))
-            metric = F.coalesce(ratio, F.lit(0.0)).cast("double")
+            metric = F.coalesce(ratio, F.lit(0.0))
             passed = F.coalesce(
                 ratio.between(
                     F.lit(float(cb.lo_ratio)), F.lit(float(cb.hi_ratio))
                 ),
                 F.lit(True),
             )
-            threshold = F.lit(float(cb.hi_ratio))
-        verdict_parts.append(
-            base.select(
-                F.lit(spec.name).alias("table"),
-                "partition_id",
-                F.lit(cb.check_id()).alias("check_id"),
-                passed.alias("passed"),
-                metric.alias("metric"),
-                threshold.alias("threshold"),
-                F.lit(0).cast("long").alias("n_violations"),
-                F.lit(cb.description()).alias("description"),
-            )
-        )
+            threshold = cb.hi_ratio
+        verdict_parts.append(verdict(base, cb, passed, metric, threshold))
 
     # Pass 1d: fleet-relative profile outliers — median/MAD across the
     # partitions of THIS run, computed over the tiny pinned profile
@@ -823,109 +784,63 @@ def validate_table(
         mad = with_med.agg(
             F.expr("percentile(abs(__x__ - __med__), 0.5)").alias("__mad__")
         )
-        j = with_med.crossJoin(F.broadcast(mad))
         # guard the division (ANSI-safe): rz only when MAD > 0;
         # MAD == 0 → pass iff x equals the median exactly
         rz = F.abs(F.col("__x__") - F.col("__med__")) / (
             F.lit(1.4826) * F.col("__mad__")
         )
-        metric = F.when(F.col("__mad__") > 0, rz).when(
-            F.col("__x__") == F.col("__med__"), F.lit(0.0)
-        )
-        passed = F.coalesce(
-            F.when(F.col("__mad__") > 0, rz <= F.lit(float(po.z_max))).otherwise(
-                F.col("__x__") == F.col("__med__")
+        verdict_parts.append(verdict(
+            with_med.crossJoin(F.broadcast(mad)), po,
+            passed=F.coalesce(
+                F.when(
+                    F.col("__mad__") > 0, rz <= F.lit(float(po.z_max))
+                ).otherwise(F.col("__x__") == F.col("__med__")),
+                F.lit(False),  # NULL metric: the profile cannot vouch for it
             ),
-            F.lit(False),  # NULL metric: the profile cannot vouch for it
-        )
-        verdict_parts.append(
-            j.select(
-                F.lit(spec.name).alias("table"),
-                "partition_id",
-                F.lit(po.check_id()).alias("check_id"),
-                passed.alias("passed"),
-                metric.cast("double").alias("metric"),
-                F.lit(float(po.z_max)).alias("threshold"),
-                F.lit(0).cast("long").alias("n_violations"),
-                F.lit(po.description()).alias("description"),
-            )
-        )
+            metric=F.when(F.col("__mad__") > 0, rz).when(
+                F.col("__x__") == F.col("__med__"), F.lit(0.0)
+            ),
+            threshold=po.z_max,
+        ))
+
+    by_group = spec.partition_col is not None
 
     # Pass 4c: fleet-relative distribution outliers — each partition's
     # histogram vs the fleet histogram (the same pinned frame summed
-    # over groups, replicated per group through a broadcast). Partitions
-    # with no non-null values contribute no histogram rows → metric
-    # null → vacuous pass via the left join against the profile's
-    # partition list.
+    # over groups), so unlike Drift no external snapshot is needed.
+    # Partitions with no non-null values contribute no histogram rows →
+    # metric null → vacuous pass via the left join against the
+    # profile's partition list.
     for do, pin in do_pins:
         do_hist = pin.result()
-        by_group = spec.partition_col is not None
-        if by_group:
-            fleet = do_hist.groupBy("bucket").agg(F.sum("cnt").alias("cnt"))
-            groups = do_hist.select("group_id").distinct()
-            ref_g = groups.crossJoin(F.broadcast(fleet))
-            score = drift_ops.psi(do_hist, ref_g, by_group=True)
-            score = score.withColumnRenamed("group_id", "partition_id")
-        else:
-            score = drift_ops.psi(do_hist, do_hist, by_group=False)
-            score = score.withColumn(
-                "partition_id", F.lit(stats.WHOLE_TABLE)
-            )
-        verdict_parts.append(
-            all_parts.join(score, "partition_id", "left")
-            .select(
-                F.lit(spec.name).alias("table"),
-                "partition_id",
-                F.lit(do.check_id()).alias("check_id"),
-                F.coalesce(
-                    F.col("psi") <= F.lit(float(do.psi_max)), F.lit(True)
-                ).alias("passed"),
-                F.col("psi").cast("double").alias("metric"),
-                F.lit(float(do.psi_max)).alias("threshold"),
-                F.lit(0).cast("long").alias("n_violations"),
-                F.lit(do.description()).alias("description"),
-            )
+        score = _score_by_partition(
+            do_hist, _global_histogram(do_hist, by_group), drift_ops.psi,
+            by_group,
         )
+        verdict_parts.append(verdict(
+            all_parts.join(score, "partition_id", "left"), do,
+            passed=F.coalesce(
+                F.col("psi") <= F.lit(float(do.psi_max)), F.lit(True)
+            ),
+            metric=F.col("psi"),
+            threshold=do.psi_max,
+        ))
 
     # Pass 4: drift per column, per partition, vs reference histograms
     # (histograms declared + pinned above).
     for d, pin in drift_pins:
         cur = pin.result()
-        ref_hist = drift_refs[d.col]
-        by_group = spec.partition_col is not None
         # this run's corpus-level histogram — stored so it can serve as
         # the NEXT run's reference (checkpoint.write_drift_references)
-        drift_histograms[d.col] = (
-            cur.groupBy("bucket").agg(F.sum("cnt").alias("cnt"))
-            if by_group else cur
+        drift_histograms[d.col] = _global_histogram(cur, by_group)
+        method = "psi" if d.method == "psi" else "ks"
+        score = _score_by_partition(
+            cur, drift_refs[d.col], getattr(drift_ops, method), by_group
         )
-        fn = drift_ops.psi if d.method == "psi" else drift_ops.ks
-        # reference histogram is global (no group) — replicate per group
-        # by dropping group from the join: _normalized_join needs matched
-        # shapes, so cross the ref against distinct groups.
-        if by_group:
-            groups = cur.select("group_id").distinct()
-            ref_g = groups.crossJoin(F.broadcast(ref_hist))
-        else:
-            ref_g = ref_hist
-        score = fn(cur, ref_g, by_group=by_group)
-        metric_col = "psi" if d.method == "psi" else "ks"
-        if by_group:
-            score = score.withColumnRenamed("group_id", "partition_id")
-        else:
-            score = score.withColumn("partition_id", F.lit(stats.WHOLE_TABLE))
         drift_scores[d.check_id()] = score
+        m = F.col(method)
         verdict_parts.append(
-            score.select(
-                F.lit(spec.name).alias("table"),
-                "partition_id",
-                F.lit(d.check_id()).alias("check_id"),
-                (F.col(metric_col) <= d.threshold).alias("passed"),
-                F.col(metric_col).cast("double").alias("metric"),
-                F.lit(float(d.threshold)).alias("threshold"),
-                F.lit(0).cast("long").alias("n_violations"),
-                F.lit(d.description()).alias("description"),
-            )
+            verdict(score, d, m <= d.threshold, m, d.threshold)
         )
 
     # Pass 5: row-level violation payloads (sampled from the pinned
@@ -933,8 +848,6 @@ def validate_table(
     if row_viol is not None:
         sampled = row_viol
         if violation_limit_per_check:
-            from pyspark.sql import Window
-
             w = Window.partitionBy("partition_id", "check_id").orderBy("row_payload")
             sampled = (
                 sampled.withColumn("__rn__", F.row_number().over(w))
@@ -943,33 +856,15 @@ def validate_table(
             )
         violation_parts.append(sampled)
 
-    if verdict_parts:
-        verdicts = verdict_parts[0]
-        for p in verdict_parts[1:]:
-            verdicts = verdicts.unionByName(p)
-    else:
-        # a spec with zero executable constraints (e.g. suggested from a
-        # table with no evidence — empty or all-NULL) validates anything
-        # vacuously: empty verdicts, not an IndexError (found by
-        # tests/test_suggest_hypothesis.py)
-        verdicts = spark.createDataFrame(
-            [],
-            "table string, partition_id string, check_id string, "
-            "passed boolean, metric double, threshold double, "
-            "n_violations long, description string",
-        )
-    if violation_parts:
-        violations = violation_parts[0]
-        for p in violation_parts[1:]:
-            violations = violations.unionByName(p)
-    else:
-        violations = spark.createDataFrame(
-            [],
-            "table string, partition_id string, check_id string, "
-            "description string, row_payload string",
-        )
+    # a spec with zero executable constraints (e.g. suggested from a
+    # table with no evidence — empty or all-NULL) validates anything
+    # vacuously: empty verdicts, not an IndexError (found by
+    # tests/test_suggest_hypothesis.py)
+    verdicts = (reduce(DataFrame.unionByName, verdict_parts) if verdict_parts
+                else spark.createDataFrame([], VERDICT_SCHEMA))
+    violations = (reduce(DataFrame.unionByName, violation_parts)
+                  if violation_parts
+                  else spark.createDataFrame([], VIOLATION_SCHEMA))
     return ValidationResult(spec.name, profile, verdicts, violations,
                             drift_scores, drift_histograms,
-                            row_violations=row_viol,
-                            cached_frames=cached_frames,
-                            warmed=eager_warm)
+                            cached_frames=cached_frames)

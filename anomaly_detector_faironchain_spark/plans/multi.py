@@ -6,9 +6,10 @@ this repo's `etl/checks.run_parity_suite`); at cluster scale that
 serial loop leaves the executors idle in every job's stage tail.
 `validate_suite` runs each table's validation from its own driver
 thread — Spark's scheduler interleaves the independent jobs, so table
-B's scans fill table A's tail (the same overlap trick
-`ValidationResult.materialize` plays within one table, lifted across
-tables). FAIR scheduling or FIFO both work; jobs are independent.
+B's scan wave fills table A's tail (the same overlap trick
+`validate_table`'s scan wave and `ValidationResult.materialize` play
+within one table, lifted across tables). FAIR scheduling or FIFO both
+work; jobs are independent.
 
 Cross-table references resolve INSIDE the suite first: a ForeignKey or
 CountMatch whose `ref_table` names another suite table validates
@@ -18,8 +19,8 @@ Threading notes: each thread only SUBMITS Spark jobs (py4j calls are
 thread-safe; PySpark pins Python threads to JVM threads); results are
 materialized inside the worker so the overlap actually happens rather
 than being deferred to the caller's serial collect loop.
-`max_parallel` bounds concurrent tables — each table pins its cached
-profile/violation scans in executor memory until `unpersist()`, so at
+`max_parallel` bounds concurrent tables — each table pins its scans
+(localCheckpoint blocks) in executor memory until `unpersist()`, so at
 100 TB two or three tables in flight is the sweet spot, not ten.
 """
 
@@ -76,7 +77,7 @@ def validate_suite(
 ) -> dict[str, ValidationResult]:
     """Validate every (table, spec) pair, overlapping tables across
     driver threads. Returns {table_name: ValidationResult} with each
-    result already materialized (verdicts computed, caches warm)."""
+    result already materialized (scans pinned, verdicts computed)."""
     missing = sorted(set(specs) - set(tables))
     if missing:
         raise ValueError(f"specs without input tables: {missing}")
@@ -88,11 +89,10 @@ def validate_suite(
             refs=suite_refs(specs[name], tables, refs),
             materialize_violations=materialize_violations,
             violation_limit_per_check=violation_limit_per_check,
-            # materialize() warms the cached scans itself, concurrently
-            # ACROSS tables too — eager warming here would serialize
-            # each table's scans before its thread yields
-            eager_warm=False,
         )
+        # validate_table ran this table's scan wave in this thread, so
+        # the waves of the tables in flight overlap; the final verdict
+        # and violation jobs read only the pins
         res.materialize()
         return name, res
 

@@ -358,8 +358,9 @@ class CountMatch(Constraint):
     dedicated '__missing__' partition row.
 
     Scale shape: one map-side-combined groupBy over the fact table plus
-    one join against the (dimension-sized) manifest — broadcast when it
-    fits, shuffle otherwise (same knob as ForeignKey via broadcast_refs).
+    one full-outer join against the (dimension-sized) manifest — a
+    shuffle join of two group-cardinality frames (Spark cannot broadcast
+    a full-outer side).
     """
 
     group_cols: tuple[str, ...]

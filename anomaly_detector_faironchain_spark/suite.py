@@ -1162,9 +1162,7 @@ def q_freshness(spark: SparkSession, sf_dir: str) -> DataFrame:
             Freshness("ts_s", max_age=100000.0, as_of=1706700000.0),
         ),
     )
-    res = validate_table(
-        ev, spec, materialize_violations=False, eager_warm=False
-    )
+    res = validate_table(ev, spec, materialize_violations=False)
     return res.verdicts.filter(
         F.col("check_id").startswith("freshness")
     ).select(
@@ -1203,9 +1201,7 @@ def q_cardinality_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ),
     )
-    res = validate_table(
-        pt, spec, materialize_violations=False, eager_warm=False
-    )
+    res = validate_table(pt, spec, materialize_violations=False)
     return res.verdicts.filter(
         F.col("check_id").startswith("cardinality")
     ).select(
@@ -1253,9 +1249,7 @@ def q_corr_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
             Correlation("n_chars", "mix", lo=0.5, hi=1.0),
         ),
     )
-    res = validate_table(
-        aug, spec, materialize_violations=False, eager_warm=False
-    )
+    res = validate_table(aug, spec, materialize_violations=False)
     return res.verdicts.filter(
         F.col("check_id").startswith("corr")
     ).select(
@@ -1322,9 +1316,7 @@ def q_profile_outlier(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         profile_len_cols=(),
     )
-    res = validate_table(
-        od, spec, materialize_violations=False, eager_warm=False
-    )
+    res = validate_table(od, spec, materialize_violations=False)
     return res.verdicts.filter(
         F.col("check_id").startswith("profile_outlier")
     ).select(
@@ -1417,9 +1409,7 @@ def q_distribution_outlier(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         profile_len_cols=(),
     )
-    res = validate_table(
-        od, spec, materialize_violations=False, eager_warm=False
-    )
+    res = validate_table(od, spec, materialize_violations=False)
     return res.verdicts.filter(
         F.col("check_id").startswith("distribution_outlier")
     ).select(
@@ -1572,9 +1562,7 @@ def q_schema_match(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ),
     )
-    res = validate_table(
-        li, spec, materialize_violations=False, eager_warm=False
-    )
+    res = validate_table(li, spec, materialize_violations=False)
     return res.verdicts.filter(
         F.col("check_id").startswith("schema_match")
     ).select("check_id", "passed", "n_violations")

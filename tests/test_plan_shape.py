@@ -15,6 +15,7 @@ from anomaly_detector_faironchain_spark.plans.spec import (
     NotNull,
     TableSpec,
 )
+from conftest import probe_job_id
 
 SF = "/root/testdata/sf0.001"
 
@@ -66,10 +67,10 @@ def test_profile_length_columns_never_collide_with_user_columns(spark):
 
 
 def test_verdict_plan_reads_pins_with_one_count_exchange(spark):
-    # eager_warm pins every full-input scan with localCheckpoint before
-    # the verdict plan is built: the plan reads no InMemoryRelation, and
-    # all count-type checks (row checks, Unique, FK, FD) share the ONE
-    # aggregate Exchange of the count table
+    # validate_table pins every full-input scan with localCheckpoint
+    # before the verdict plan is built: the plan reads no
+    # InMemoryRelation, and all count-type checks (row checks, Unique,
+    # FK, FD) share the ONE aggregate Exchange of the count table
     import re
 
     from anomaly_detector_faironchain_spark.datagen import source_files as gen
@@ -130,29 +131,41 @@ def test_row_predicates_stay_in_wholestage_codegen(spark):
     assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
 
 
+# validate_table's jobs on sf0.001 lineitem with a local[8] session: the
+# three pins of its scan wave (profile, Unique duplicate pass, FK
+# anti-join counts) and their AQE stages. Building and printing the
+# verdict plan afterwards runs none.
+LINEITEM_VALIDATE_JOBS = 9
+
+
 def test_no_collect_based_operators_in_verdict_path(spark):
     # validate_table's verdict DataFrame must be computable without any
-    # driver-side row loop: building it triggers zero jobs (lazy), and
-    # its plan contains no LocalTableScan of collected input rows beyond
-    # literal check tables
+    # driver-side row loop: validate_table runs only its scan wave, the
+    # verdict plan builds and prints without a job, and the plan holds
+    # no LocalTableScan of collected rows. The wave submits from pool
+    # threads, which carry no job group of the caller, so the jobs are
+    # counted by job id.
     from anomaly_detector_faironchain_spark.plans.compiler import validate_table
     from anomaly_detector_faironchain_spark.suite import lineitem_spec
 
     li = spark.read.parquet(f"{SF}/lineitem.parquet")
     part = spark.read.parquet(f"{SF}/part.parquet")
-    tracker = spark.sparkContext.statusTracker()
-    # a dedicated job group isolates this audit from async jobs (AQE
-    # broadcast builds) other tests may still be registering — counting
-    # the global group races against them
-    spark.sparkContext.setJobGroup("plan-build-audit", "plan build audit")
+    sc = spark.sparkContext
+    first = probe_job_id(sc, "verdict-path-a")
+    res = validate_table(li, lineitem_spec(), refs={"part": part},
+                         materialize_violations=False)
+    built = probe_job_id(sc, "verdict-path-b")
     try:
-        res = validate_table(li, lineitem_spec(), refs={"part": part},
-                             materialize_violations=False)
-        ran = tracker.getJobIdsForGroup("plan-build-audit")
-        assert len(ran) == 0, "building the plan must not run jobs"
+        assert built - first - 1 == LINEITEM_VALIDATE_JOBS
+        p = plan(res.verdicts)
+        executed = res.verdicts._jdf.queryExecution().executedPlan().toString()
+        assert probe_job_id(sc, "verdict-path-c") - built - 1 == 0, (
+            "building the verdict plan must not run jobs"
+        )
+        assert "LocalTableScan" not in p and "LocalTableScan" not in executed
+        assert res.verdicts.count() > 0
     finally:
-        spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
-    assert res.verdicts.count() > 0
+        res.unpersist()
 
 
 def test_scoring_rank_has_no_global_sort_of_data(spark):

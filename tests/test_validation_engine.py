@@ -26,6 +26,7 @@ from anomaly_detector_faironchain_spark.plans import (
 )
 from anomaly_detector_faironchain_spark.plans.compiler import validate_table
 from anomaly_detector_faironchain_spark.specs import north_rule_spec
+from conftest import probe_job_id
 
 N = 2000
 NULL_LANG = [7, 11]
@@ -151,21 +152,27 @@ def test_vector_shape_constraint_catches_each_corruption(spark):
     assert bad_ids == [1, 2, 3, 4, 5, 6]
 
 
-def test_eager_warm_covers_fk_and_skips_rewarm(spark, corrupted):
-    """validate_table(eager_warm=True) must pin the FK anti-join in the
-    same concurrent wave as the profile and row-violation scans (so no
-    full-input pass is left to run serially inside the final verdict
-    job), and materialize() must not re-warm what validate_table already
-    computed."""
+# materialize()'s jobs on the corrupted fixture: the verdict collect and
+# the violation count, with their AQE stages, reading only the pins.
+MATERIALIZE_JOBS = 7
+
+
+def test_scan_wave_pins_fk_and_materialize_runs_only_final_jobs(
+    spark, corrupted
+):
+    """validate_table must pin the FK anti-join in the same concurrent
+    wave as the profile and row-violation scans (so no full-input pass
+    is left to run serially inside the final verdict job), and
+    materialize() must run only the two final actions over the pins."""
     df, repos = corrupted
     res = validate_table(df, spec(), refs={"repos": repos})
     # profile, row violations, the Unique duplicate pass, the FK
     # anti-join and the FD violating groups are each pinned once
     assert len(res.cached_frames) >= 4
-    assert res.warmed is True
     sc = spark.sparkContext
-    before = sc.statusTracker().getJobIdsForGroup(None)
+    first = probe_job_id(sc, "materialize-a")
     verdicts, n_viol = res.materialize()
+    assert probe_job_id(sc, "materialize-b") - first - 1 == MATERIALIZE_JOBS
     # verdict correctness unchanged by the restructure
     by_check = {}
     for r in verdicts:
@@ -174,19 +181,6 @@ def test_eager_warm_covers_fk_and_skips_rewarm(spark, corrupted):
     assert by_check["fk(repo)->repos(repo)"] == len(DANGLING)
     assert n_viol > 0
     res.unpersist()
-
-
-def test_eager_warm_off_matches_on(spark, corrupted):
-    df, repos = corrupted
-    on = validate_table(df, spec(), refs={"repos": repos})
-    off = validate_table(df, spec(), refs={"repos": repos}, eager_warm=False)
-    assert off.warmed is False
-    a = sorted((r.partition_id, r.check_id, r.passed, r.n_violations)
-               for r in on.verdicts.collect())
-    b = sorted((r.partition_id, r.check_id, r.passed, r.n_violations)
-               for r in off.verdicts.collect())
-    assert a == b
-    on.unpersist(); off.unpersist()
 
 
 def _committed_rows(spark, out_dir: str, name: str) -> list[str]:
@@ -772,9 +766,7 @@ def test_schema_match_only_spec_runs_zero_data_jobs(spark):
         constraints=(SchemaMatch(("id", "bigint"), ("s", "string")),),
         profile_len_cols=(),
     )
-    res = validate_table(
-        df, tspec, materialize_violations=False, eager_warm=False
-    )
+    res = validate_table(df, tspec, materialize_violations=False)
     plan = res.verdicts._jdf.queryExecution().executedPlan().toString()
     assert ("LocalTableScan" in plan or "ExistingRDD" in plan)
     assert "Range" not in plan
